@@ -11,21 +11,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * mismatches into loud errors, and a writer LEASE enforcing the
  * single-writer contract.
  *
- * Versioned-root layout:
+ * On-disk format (the only one the operators read or write):
  * {{{
  *   root/_current            <- pointer file: the live version number
  *   root/_v<N>/...           <- one complete table per version
- *   root/_v<N>/_meta.json    <- layout parameters (swap atomically with data;
- *                               legacy placement at root/_meta.json still read)
+ *   root/_v<N>/_meta.json    <- layout parameters + "format": "1"
+ *                               (swaps atomically with the data)
  *   root/_lease              <- writer fence
  *   root/_committed/batch-<B><- exactly-once ingest markers (corpus/IVF)
  * }}}
- * Underscore-prefixed names are invisible to parquet partition discovery,
- * so a raw `spark.read.parquet(root)` on a versioned root fails LOUDLY
- * (no schema) instead of silently mixing versions — readers go through
- * [[resolve]]. A root with data but no `_current` is a legacy
- * (pre-round-12) table and resolves to itself, so existing tables keep
- * working; the first maintenance rewrite migrates them.
+ * Every sidecar is stamped with [[Format]] by [[metaJson]], and
+ * [[resolve]]/[[readMeta]] check it: a root holding data without
+ * `_current`, a live version without `_meta.json`, or a meta whose
+ * `format` is absent or different throws [[UnsupportedTableFormat]].
+ * An empty or absent root is a FRESH table: writers create `_v0` (meta
+ * first, then the pointer), readers see nothing. Underscore-prefixed
+ * names are invisible to parquet partition discovery, so a raw
+ * `spark.read.parquet(root)` fails LOUDLY (no schema) instead of
+ * silently mixing versions — readers go through [[resolve]].
  *
  * Maintenance publish protocol: stage the FULL new table under
  * `root/_v<N+1>` (invisible to readers), then swap the `_current`
@@ -36,6 +39,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * deployment would add a time-based grace instead).
  */
 object AtRest {
+
+  /** The on-disk format version every `_meta.json` carries. */
+  val Format = "1"
+
+  /** A root whose layout is not [[Format]] — an unversioned root, a
+   *  version without `_meta.json`, or a meta stamped with another (or
+   *  no) format. Legacy layouts written by earlier builds land here; the
+   *  operators read and migrate none of them. */
+  class UnsupportedTableFormat(root: String, found: String)
+    extends IllegalStateException(
+      s"$root is not an at-rest table in a supported format: found $found, " +
+        s"expected format $Format (_current -> _v<N>/ holding a _meta.json " +
+        s"stamped format=$Format); re-seed the table")
 
   def fsFor(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -72,38 +88,51 @@ object AtRest {
   private def currentPointer(root: String) = new Path(root, "_current")
   private def versionDir(root: String, v: Long) = new Path(root, s"_v$v")
 
-  /** The live version number, None for legacy/fresh roots. A corrupt
-   *  pointer is an error, not a silent legacy fallback — falling back
-   *  would read a stale table as if current. */
+  /** The live version number, None for a fresh root. A corrupt pointer
+   *  is an error, and so is data without a pointer (an unversioned
+   *  layout): reading either as fresh would hide a table. */
   def currentVersion(fs: FileSystem, root: String): Option[Long] = {
     val p = currentPointer(root)
-    if (!fs.exists(p)) None
-    else utf8(readFile(fs, p)).trim.toLongOption match {
+    if (fs.exists(p)) utf8(readFile(fs, p)).trim.toLongOption match {
       case some @ Some(_) => some
       case None => throw new IllegalStateException(
         s"$root/_current is unparsable; restore it to the live version number")
     }
-  }
-
-  /** The directory holding the CURRENT complete table: `root/_v<N>` for
-   *  versioned roots, `root` itself for legacy (pre-versioning) tables
-   *  and fresh paths. Every reader resolves through here. */
-  def resolve(spark: SparkSession, root: String): String = {
-    val fs = fsFor(spark, root)
-    currentVersion(fs, root) match {
-      case Some(v) => versionDir(root, v).toString
-      case None => root
+    else {
+      val rootPath = new Path(root)
+      val hasData = fs.exists(rootPath) && fs.listStatus(rootPath).exists { st =>
+        val n = st.getPath.getName
+        !n.startsWith("_") && !n.startsWith(".")
+      }
+      if (hasData) throw new UnsupportedTableFormat(root, "data without a _current pointer")
+      None
     }
   }
+
+  /** The directory holding the CURRENT complete table: `root/_v<N>`,
+   *  format-checked, or `root` itself for a fresh root. Every reader
+   *  resolves through here. */
+  def resolve(spark: SparkSession, root: String): String =
+    resolved(spark, root)._1
+
+  /** [[resolve]] plus the live version's parameters (None = fresh). */
+  private def resolved(spark: SparkSession,
+      root: String): (String, Option[Map[String, String]]) =
+    currentVersion(fsFor(spark, root), root) match {
+      case Some(v) =>
+        val dir = versionDir(root, v).toString
+        (dir, Some(readMetaIn(spark, root, dir)))
+      case None => (root, None)
+    }
 
   /** Every COMMITTED version retained under `root`, oldest first, with
    *  its currency flag — the time-travel catalog. Staging directories
    *  (version numbers above `_current`, left by an in-flight or crashed
    *  maintenance pass) are NOT versions: they are incomplete by
-   *  definition and never listed. Legacy roots (no `_current`) have no
-   *  version history. Retention bounds the window: GC keeps the current
-   *  and just-replaced generations plus whatever
-   *  `spark.graft.atrest.versionGraceMs` preserves. */
+   *  definition and never listed. Fresh roots have no version history.
+   *  Retention bounds the window: GC keeps the current and just-replaced
+   *  generations plus whatever `spark.graft.atrest.versionGraceMs`
+   *  preserves. */
   def listVersions(spark: SparkSession, root: String): Seq[(Long, Boolean)] = {
     val fs = fsFor(spark, root)
     currentVersion(fs, root) match {
@@ -119,14 +148,14 @@ object AtRest {
   }
 
   /** The directory holding version `v`'s complete table — the TIME-TRAVEL
-   *  resolve ([[resolve]]'s as-of twin). Loud on anything unreadable: a
-   *  legacy root has no versions, a GC'd generation is gone (the error
-   *  names what IS retained), and a number above `_current` is an
-   *  in-flight staging dir, incomplete by definition. */
+   *  resolve ([[resolve]]'s as-of twin), format-checked like it. Loud on
+   *  anything unreadable: a fresh root has no versions, a GC'd generation
+   *  is gone (the error names what IS retained), and a number above
+   *  `_current` is an in-flight staging dir, incomplete by definition. */
   def resolveAt(spark: SparkSession, root: String, version: Long): String = {
     val fs = fsFor(spark, root)
     val cur = currentVersion(fs, root).getOrElse(throw new IllegalStateException(
-      s"$root is a legacy (unversioned) table — no version history to read"))
+      s"$root holds no table — no version history to read"))
     if (version > cur)
       throw new IllegalStateException(
         s"$root version $version is above the current $cur — an uncommitted " +
@@ -139,36 +168,8 @@ object AtRest {
           "version GC keeps the current and just-replaced generations, plus " +
           "the spark.graft.atrest.versionGraceMs window")
     }
+    readMetaIn(spark, root, dir.toString)
     dir.toString
-  }
-
-  /** The resolved dir for a table a WRITER is about to touch, creating
-   *  the versioned layout for fresh roots: an existing `_current` wins;
-   *  a root already holding data stays legacy (the first maintenance
-   *  rewrite migrates it); an empty/absent root becomes `_v0`. */
-  def ensureVersioned(spark: SparkSession, root: String): String = {
-    val fs = fsFor(spark, root)
-    currentVersion(fs, root) match {
-      case Some(v) => versionDir(root, v).toString
-      case None =>
-        val rootPath = new Path(root)
-        val hasData = fs.exists(rootPath) && fs.listStatus(rootPath).exists { st =>
-          val n = st.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        }
-        if (hasData) root
-        else {
-          fs.mkdirs(versionDir(root, 0L))
-          // two sharded writers can race the first-version bootstrap —
-          // both write "0", so a lost rename is benign if a pointer now
-          // exists (re-read rather than abort a healthy writer)
-          try writeFile(fs, currentPointer(root), utf8("0"))
-          catch { case e: IllegalStateException =>
-            if (currentVersion(fs, root).isEmpty) throw e
-          }
-          versionDir(root, 0L).toString
-        }
-    }
   }
 
   /** The staging directory for the next version — wiped if a crashed
@@ -182,19 +183,10 @@ object AtRest {
 
   /**
    * Atomically flip `root` to version `v` (one pointer-file rename),
-   * then GC: every other version directory EXCEPT the one just replaced
-   * is deleted (one-generation reader grace), and legacy at-root data
-   * directories (`ingest_batch=` / `<layoutCol>=`) are swept — the
-   * migration step that collapses a pre-versioning table into the
-   * versioned layout.
-   *
-   * MIGRATION CAVEAT (first versioned publish on a legacy table): the
-   * at-root legacy dirs are what pre-swap readers resolved to, and they
-   * are removed at swap time — unlike version-to-version swaps there is
-   * no grace copy for them (moving them aside would break an in-flight
-   * path-based scan just the same). The one-time migration publish
-   * therefore requires quiescing READERS as well as writers; every
-   * later maintenance pass is reader-safe under the version grace.
+   * then GC every other version directory EXCEPT the one just replaced
+   * (one-generation reader grace). The staged version must already hold
+   * its `_meta.json` ([[writeMetaStaged]]), so data and meta publish
+   * together.
    *
    * Retention knob: `spark.graft.atrest.versionGraceMs` (default 0 =
    * the one-generation rule). When > 0, a non-current version is only
@@ -204,8 +196,7 @@ object AtRest {
    * The just-replaced version is always retained one generation
    * regardless, so grace = 0 never breaks the racing reader either.
    */
-  def publishVersion(spark: SparkSession, root: String, v: Long,
-      legacyLayoutCol: String): Unit = {
+  def publishVersion(spark: SparkSession, root: String, v: Long): Unit = {
     val fs = fsFor(spark, root)
     val prev = currentVersion(fs, root)
     writeFile(fs, currentPointer(root), utf8(v.toString))
@@ -215,12 +206,9 @@ object AtRest {
     val keep = Set(s"_v$v") ++ prev.map(p => s"_v$p")
     fs.listStatus(new Path(root)).foreach { st =>
       val n = st.getPath.getName
-      val staleVersion = n.startsWith("_v") && !keep.contains(n) &&
-        n.drop(2).forall(_.isDigit) && n.length > 2 &&
-        (graceMs <= 0L || now - st.getModificationTime > graceMs)
-      if (st.isDirectory &&
-          (staleVersion ||
-            n.startsWith("ingest_batch=") || n.startsWith(legacyLayoutCol + "=")))
+      if (st.isDirectory && n.startsWith("_v") && !keep.contains(n) &&
+          n.drop(2).forall(_.isDigit) && n.length > 2 &&
+          (graceMs <= 0L || now - st.getModificationTime > graceMs))
         fs.delete(st.getPath, true)
     }
   }
@@ -231,33 +219,40 @@ object AtRest {
    * `_meta.json`: the layout/signature parameters a table was written
    * with, as a flat string map — e.g. for the LSH index the banding
    * parameters, whose silent mismatch "yields zero collisions" (admits
-   * every duplicate). Written at table creation, validated by every
-   * probe/append/maintenance entry point: mismatch = loud typed error,
-   * absent = legacy table (adopted by the next write).
+   * every duplicate) — plus the [[Format]] stamp. Written at table
+   * creation, validated by every probe/append/maintenance entry point:
+   * mismatch = loud typed error.
    *
    * LOCATION: the meta lives INSIDE the version directory (the pattern
    * the IVF codebook uses), so a maintenance rewrite that changes layout
    * parameters swaps meta and data in atomically together — a root-level
-   * sidecar written before (or after) the pointer flip opens a crash
-   * window where meta describes one version and `_current` points at
-   * another, and a caller whose params match the wrong side probes a
-   * mismatched layout CLEANLY (the silent failure the sidecar exists to
-   * kill). [[readMeta]] prefers the current version's copy and falls
-   * back to a root-level one (legacy tables, and versioned tables whose
-   * meta predates this placement).
+   * sidecar written before (or after) the pointer flip would open a
+   * crash window where meta describes one version and `_current` points
+   * at another, and a caller whose params match the wrong side would
+   * probe a mismatched layout CLEANLY (the silent failure the sidecar
+   * exists to kill).
    */
   private def metaJson(params: Map[String, String]): Array[Byte] =
-    utf8(params.toSeq.sortBy(_._1)
+    utf8((params + ("format" -> Format)).toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k": "$v"""" }.mkString("{", ", ", "}"))
 
-  /** Write `_meta.json` into the CURRENT version dir (root itself for
-   *  legacy/fresh tables) — the adopt/in-place path. Staged rewrites use
+  /** Write `_meta.json` into the CURRENT version dir — the adopt/in-place
+   *  path. A fresh root becomes `_v0`: meta first, then the pointer, so a
+   *  crash in between leaves a root that still reads as fresh. Two
+   *  sharded writers can race that bootstrap — both write "0", so a lost
+   *  pointer rename is benign once a pointer exists. Staged rewrites use
    *  [[writeMetaStaged]] so meta swaps with the data. */
   def writeMeta(spark: SparkSession, root: String, params: Map[String, String]): Unit = {
     val fs = fsFor(spark, root)
-    val dir = resolve(spark, root)
-    fs.mkdirs(new Path(dir))
+    val cur = currentVersion(fs, root)
+    val dir = versionDir(root, cur.getOrElse(0L))
+    fs.mkdirs(dir)
     writeFile(fs, new Path(dir, "_meta.json"), metaJson(params))
+    if (cur.isEmpty)
+      try writeFile(fs, currentPointer(root), utf8("0"))
+      catch { case e: IllegalStateException =>
+        if (currentVersion(fs, root).isEmpty) throw e
+      }
   }
 
   /** Write `_meta.json` into a STAGING version directory, BEFORE
@@ -272,47 +267,42 @@ object AtRest {
 
   private val MetaEntry = """"([^"]+)"\s*:\s*"([^"]*)"""".r
 
-  def readMeta(spark: SparkSession, root: String): Option[Map[String, String]] = {
-    val vdir = resolve(spark, root)
-    // current version's copy wins; a root-level copy (legacy placement)
-    // backs it up so pre-migration tables stay validated
-    readMetaIn(spark, Seq(vdir, root))
-  }
+  /** The live version's parameters (without the format stamp); None for
+   *  a fresh root. Throws [[UnsupportedTableFormat]] on any other layout. */
+  def readMeta(spark: SparkSession, root: String): Option[Map[String, String]] =
+    resolved(spark, root)._2
 
-  /** The FIRST `_meta.json` found in `dirs`, parsed — the per-directory
-   *  primitive behind [[readMeta]]; time-travel readers pass a historical
-   *  version dir (falling back to the root-level legacy placement). */
-  def readMetaIn(spark: SparkSession, dirs: Seq[String]): Option[Map[String, String]] = {
-    val fs = fsFor(spark, dirs.head)
-    // writeFile swaps via delete+rename, so a sidecar found by exists()
-    // can vanish before the read when a SAME-CONTENT concurrent writer
-    // (two sharded adopters) is mid-swap — retry through the window
-    // instead of surfacing a spurious FileNotFoundException
+  /** Version directory `dir`'s parameters, format-checked — the
+   *  per-directory primitive behind [[readMeta]]; time-travel readers
+   *  pass a historical version dir. */
+  def readMetaIn(spark: SparkSession, root: String, dir: String): Map[String, String] = {
+    val fs = fsFor(spark, dir)
+    val p = new Path(dir, "_meta.json")
+    // writeFile swaps via delete+rename, so a sidecar can vanish for a
+    // moment when a SAME-CONTENT concurrent writer (two sharded adopters)
+    // is mid-swap — retry through the window instead of reporting it gone
     var attempt = 0
     while (true) {
-      val p = dirs.map(d => new Path(d, "_meta.json")).distinct.find(fs.exists(_))
-      if (p.isEmpty) return None
       try {
-        val parsed = MetaEntry.findAllMatchIn(utf8(readFile(fs, p.get)))
+        val parsed = MetaEntry.findAllMatchIn(utf8(readFile(fs, p)))
           .map(m => m.group(1) -> m.group(2)).toMap
-        // a PRESENT but unparsable sidecar must not silently disable
-        // validation (the exact failure mode the sidecar exists to catch) —
-        // writes are atomic, so garbage here means external damage
-        if (parsed.isEmpty)
-          throw new IllegalStateException(
-            s"${p.get} exists but holds no parameters — restore it or " +
-              "delete it to explicitly mark the table legacy/unvalidated")
-        return Some(parsed)
+        parsed.get("format") match {
+          case Some(Format) => return parsed - "format"
+          case Some(other) => throw new UnsupportedTableFormat(root, s"format $other in $p")
+          case None => throw new UnsupportedTableFormat(root, s"no format stamp in $p")
+        }
       } catch {
         case _: java.io.FileNotFoundException if attempt < 40 =>
           attempt += 1; Thread.sleep(25)
+        case _: java.io.FileNotFoundException =>
+          throw new UnsupportedTableFormat(root, s"no _meta.json in $dir")
       }
     }
-    None // unreachable
+    Map.empty // unreachable
   }
 
   /** Throw unless every `params` entry matches the persisted sidecar
-   *  (absent sidecar = legacy table, accepted). The error names every
+   *  (a fresh root has nothing to check). The error names every
    *  mismatched key with both values — the loud replacement for the
    *  zero-collisions / silent-mis-prune failure modes. */
   def validateMeta(spark: SparkSession, root: String,
@@ -330,19 +320,17 @@ object AtRest {
             s"would silently return wrong results): ${bad.mkString("; ")}")
     }
 
-  /** Validate against an existing sidecar, then (re-)write it — the
-   *  adopt-or-check step every writer runs: legacy tables gain a sidecar,
-   *  parameter drift fails loudly. Two sharded writers adopting
-   *  concurrently both write the same params, so a lost rename race is
-   *  benign — re-validate instead of aborting. */
+  /** The adopt-or-check step every appending writer runs: a fresh root
+   *  adopts `params` (and becomes `_v0`), an existing table validates
+   *  them. Two sharded writers adopting concurrently both write the same
+   *  params, so a lost rename race is benign — re-validate instead of
+   *  aborting. */
   def validateOrAdoptMeta(spark: SparkSession, root: String,
       params: Map[String, String]): Unit = {
-    validateMeta(spark, root, params)
-    if (readMeta(spark, root).isEmpty) {
+    if (readMeta(spark, root).isEmpty)
       try writeMeta(spark, root, params)
       catch { case _: IllegalStateException => () }
-      validateMeta(spark, root, params)
-    }
+    validateMeta(spark, root, params)
   }
 
   // ------------------------------------------------------- marker retention
@@ -382,41 +370,8 @@ object AtRest {
     if (!fs.exists(p)) 0L
     else utf8(readFile(fs, p)).trim.toLongOption.getOrElse(
       throw new IllegalStateException(
-        s"$p is unparsable — restore it to '<firstUnfoldedBatchId>', or " +
-          "delete it (the committed-markers-vs-batch-dirs detection then " +
-          "conservatively governs the next recheck window)"))
-  }
-
-  /** Batch ids present as `ingest_batch=` directories under `dataDir`
-   *  (negative seed ids included). */
-  def batchDirIds(fs: FileSystem, dataDir: String): Set[Long] = {
-    val p = new Path(dataDir)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("ingest_batch="))
-      .flatMap(_.stripPrefix("ingest_batch=").toLongOption).toSet
-  }
-
-  /** Conservative fold bound for PRE-frontier maintenance (folds
-   *  performed by code that predates the collapse-frontier file): a
-   *  committed batch whose data dir no longer exists was folded, and
-   *  batches below the marker watermark are committed with their
-   *  markers swept — their dirs may or may not have been folded, so the
-   *  watermark bounds them conservatively. Over-detection costs one
-   *  full sweep (the recheck frontier then advances past the bound and
-   *  later passes are dir-scoped again); under-detection would silently
-   *  skip data. */
-  def legacyFoldThrough(fs: FileSystem, root: String, dataDir: String): Long = {
-    val dirs = batchDirIds(fs, dataDir)
-    val cd = new Path(root, "_committed")
-    val markers =
-      if (!fs.exists(cd)) Set.empty[Long]
-      else fs.listStatus(cd).iterator.map(_.getPath.getName)
-        .filter(_.startsWith("batch-"))
-        .flatMap(_.stripPrefix("batch-").toLongOption).toSet
-    val missing = markers.filterNot(dirs)
-    math.max(missing.maxOption.map(_ + 1L).getOrElse(0L),
-      markerWatermark(fs, root).getOrElse(0L))
+        s"$p is unparsable — restore it to '<firstUnfoldedBatchId>' (the " +
+          "highest committed batch id at the last maintenance pass, plus 1)"))
   }
 
   def markerWatermark(fs: FileSystem, root: String): Option[Long] = {

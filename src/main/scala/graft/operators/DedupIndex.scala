@@ -116,7 +116,7 @@ object DedupIndex {
 
   // Both at-rest tables nest `ingest_batch=<n>/<layout>=<p>/` so a batch
   // publish is ONE atomic directory rename (`ingest_batch=<batchId>`);
-  // seed writes and legacy appends use batch -1. Underscore-prefixed
+  // seed writes and ad-hoc appends use batch -1. Underscore-prefixed
   // siblings (_staging_*, _bloom, _committed, _v<N>, _meta.json, _lease)
   // are invisible to parquet partition discovery.
   private[graft] val SeedBatch = -1L
@@ -187,8 +187,8 @@ object DedupIndex {
    *  id — signatures are deterministic, so duplicates are identical).
    *  Underscore-prefixed, so corpus/index partition discovery never sees
    *  them. Consumers (recheckCorpus) semi-join the sigs to the CURRENT
-   *  corpus ids and recompute any missing doc, so a legacy index, a
-   *  crash between sidecar and data, or tombstoned ghosts cost only the
+   *  corpus ids and recompute any missing doc, so a doc the index never
+   *  signed, a null id, or tombstoned ghosts cost only the
    *  fallback compute, never correctness. Parameter invalidation rides
    *  `_meta.json`: [[readSigs]] returns None unless the index's
    *  (numHashes, shingleWords) match the caller's — a plane change
@@ -260,7 +260,7 @@ object DedupIndex {
    *  appears or vanishes depending on which file gets sampled. The column
    *  SET (sorted; order drift is harmless — parquet reads by name) is a
    *  table property like idCol, validated per batch, adopted from the
-   *  first writer; legacy corpora gain it on their next ingest. */
+   *  first writer. */
   private def requireNoLayoutCols(df: DataFrame, what: String): Unit = {
     val clash = df.columns.toSet.intersect(Set("id_part", "ingest_batch"))
     if (clash.nonEmpty)
@@ -274,15 +274,6 @@ object DedupIndex {
     val cols = batchCols.sorted.mkString(",")
     AtRest.validateOrAdoptMeta(spark, corpusPath,
       corpusMeta(idCol, corpusParts) + ("columns" -> cols))
-    // legacy sidecar (pre-columns): upgrade in place so the NEXT drifting
-    // batch fails loudly instead of sampling its way into the schema.
-    // Two sharded writers upgrading concurrently write the same content,
-    // so a lost rename race is benign — swallow it like the adopt path.
-    AtRest.readMeta(spark, corpusPath).filterNot(_.contains("columns"))
-      .foreach { m =>
-        try AtRest.writeMeta(spark, corpusPath, m + ("columns" -> cols))
-        catch { case _: IllegalStateException => () }
-      }
   }
 
   // ------------------------------------------------------------------ ledger
@@ -298,7 +289,7 @@ object DedupIndex {
    * records the grouping column in `_meta.json` and seeds the first
    * delta; every later [[ingestBatch]] sees the property and maintains
    * the ledger with no caller cooperation (a caller can't "forget" it and
-   * silently skew the card). Legacy/unledgered corpora migrate through
+   * silently skew the card). Unledgered corpora switch over through
    * [[enableLedger]] (one full recompute, then incremental forever).
    *
    * Layout: `<versionDir>/_ledger/ingest_batch=<B>/` holds one LONG-FORM
@@ -498,8 +489,8 @@ object DedupIndex {
     tombstoneIds(spark, corpDir) match {
       case None => df
       case Some(ts) =>
-        val idCol = AtRest.readMetaIn(spark, Seq(corpDir, corpusPath))
-          .flatMap(_.get("idCol")).getOrElse(throw new IllegalStateException(
+        val idCol = AtRest.readMetaIn(spark, corpusPath, corpDir).getOrElse("idCol",
+          throw new IllegalStateException(
             s"$corpDir has tombstones but no _meta.json idCol — the table is " +
               "damaged (tombstones are only written against a described corpus)"))
         df.join(ts, df(idCol) === ts("id"), "left_anti")
@@ -536,7 +527,7 @@ object DedupIndex {
     } finally hashed.unpersist(blocking = false)
   }
 
-  /** One specific bloom sidecar by tag; None = never written (legacy or
+  /** One specific bloom sidecar by tag; None = never written (a
    *  zero-key write). */
   private def readBloomTag(spark: SparkSession, dir: String,
       tag: String): Option[Array[Byte]] = {
@@ -629,7 +620,7 @@ object DedupIndex {
         // validate; staged IN the version so meta and data swap together
         AtRest.writeMetaStaged(spark, staging,
           indexMeta(numHashes, bands, shingleWords, nParts, maxBucket))
-        AtRest.publishVersion(spark, path, v, "bucket_part")
+        AtRest.publishVersion(spark, path, v)
       } finally {
         keys.unpersist(blocking = false)
         sigs.unpersist(blocking = false)
@@ -641,7 +632,7 @@ object DedupIndex {
    *  at-least-once maintenance step for DIRECT batch callers (the
    *  exactly-once ingest loop publishes through a batch directory rename
    *  instead, see [[ingestBatch]]). Parameters validate against the
-   *  index's `_meta.json` (legacy tables adopt one). The degenerate-
+   *  index's `_meta.json` (a fresh path adopts them). The degenerate-
    *  bucket cap applies WITHIN this append only; across appends a bucket
    *  can accrete past it, which is why [[probe]] re-applies the cap at
    *  read time and [[compact]] drops the excess at rest. */
@@ -652,7 +643,7 @@ object DedupIndex {
     AtRest.withLease(spark, path) {
       AtRest.validateOrAdoptMeta(spark, path,
         indexMeta(numHashes, bands, shingleWords, nParts, maxBucket))
-      val dir = AtRest.ensureVersioned(spark, path)
+      val dir = AtRest.resolve(spark, path)
       require(numHashes % bands == 0, s"bands ($bands) must divide numHashes ($numHashes)")
       val sigs = sigFrame(docs, textCol, idCol, numHashes, shingleWords)
         .persist(StorageLevel.MEMORY_AND_DISK_SER)
@@ -713,7 +704,7 @@ object DedupIndex {
           staging.toString, SeedBatch)
       val markers = new Path(path, "_committed")
       if (fs.exists(markers)) fs.delete(markers, true)
-      AtRest.publishVersion(spark, path, v, "id_part")
+      AtRest.publishVersion(spark, path, v)
     }
   }
 
@@ -734,8 +725,7 @@ object DedupIndex {
    * exact word-shingle Jaccard ≥ `threshold`. The signature/banding
    * parameters MUST match the ones the index was written with — bucket
    * keys are hashes, so a mismatch would silently yield zero collisions;
-   * the `_meta.json` sidecar makes that LOUD (validated here; absent only
-   * on pre-sidecar tables).
+   * the `_meta.json` sidecar makes that LOUD (validated here).
    *
    * `fetchText(candIds)` supplies `(id, text)` for the distinct candidate
    * corpus ids — the ONLY corpus access the probe makes.
@@ -999,8 +989,8 @@ object DedupIndex {
       indexMeta(numHashes, bands, shingleWords, nParts, maxBucket))
     requireNoLayoutCols(batch, "ingest batch")
     validateCorpusColumns(spark, corpusPath, idCol, corpusParts, batch.columns)
-    val idxDir = AtRest.ensureVersioned(spark, indexPath)
-    val corpDir = AtRest.ensureVersioned(spark, corpusPath)
+    val idxDir = AtRest.resolve(spark, indexPath)
+    val corpDir = AtRest.resolve(spark, corpusPath)
     if (batchId >= 0) {
       // a batch dir WITHOUT its marker is a half-published crash leftover:
       // un-publish it before recomputing, so the replay's probe sees the
@@ -1056,31 +1046,12 @@ object DedupIndex {
         threshold, shingleWords, bands, sigRows, maxBucket)
       .select(col("id_b").as(idCol)).distinct()
       .localCheckpoint(true)
+    // data dirs only: _bloom/_staging/_committed don't make an index
     val hasIndex = {
       val ifs = fsFor(spark, indexPath)
-      // data dirs only: _bloom/_staging/_committed don't make an index.
-      // A flat `bucket_part=` root is the PRE-round-11 layout — mixing it
-      // with per-batch dirs would corrupt partition discovery, and
-      // silently treating it as absent would skip dedup entirely; compact()
-      // reads the flat layout fine and rewrites it into the current one
       val p = new Path(idxDir)
-      if (ifs.exists(p) &&
-          ifs.listStatus(p).exists(_.getPath.getName.startsWith("bucket_part=")))
-        throw new IllegalStateException(
-          s"$indexPath uses the legacy flat layout; run DedupIndex.compact to migrate")
       ifs.exists(p) && ifs.listStatus(p).exists(_.getPath.getName.startsWith("ingest_batch="))
     }
-    // legacy flat CORPUS guard, mirroring the index side: a pre-round-11
-    // corpus (plain append — part files or bare id_part= dirs at root, no
-    // ingest_batch= nesting) would otherwise surface later as an opaque
-    // unresolved-column/isin error on id_part inside probeAtRest; fail
-    // HERE, pointing at the migration path
-    if (fs.exists(new Path(corpDir)) && fs.listStatus(new Path(corpDir)).exists { st =>
-        val n = st.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".") && !n.startsWith("ingest_batch=")
-      })
-      throw new IllegalStateException(
-        s"$corpusPath uses a legacy flat corpus layout; run DedupIndex.compactCorpus to migrate")
     // snapshot of the index's batch dirs, taken just before the probe:
     // the sharded commit section re-probes against batches that COMMIT
     // after this point (the cross-shard in-flight window)
@@ -1196,7 +1167,7 @@ object DedupIndex {
         // pair can exist and the whole re-probe is ONE cheap scan-local
         // filter + take(1) instead of joins + shingle verification — the
         // no-collision case is the every-batch case in a healthy fleet.
-        // A delta batch with a missing bloom (legacy write) forces the
+        // A delta batch with no bloom (it admitted no keys) forces the
         // full verify: a false "no hit" would break dedup, a false hit
         // only costs the verify.
         val deltaBlooms = delta.toSeq.sorted.map(idB =>
@@ -1514,7 +1485,7 @@ object DedupIndex {
     val merged = AtRest.readMeta(spark, path).getOrElse(Map("kind" -> "lsh_index")) ++
       Map("nParts" -> nParts.toString, "maxBucket" -> maxBucket.toString)
     AtRest.writeMetaStaged(spark, staging, merged)
-    AtRest.publishVersion(spark, path, v, "bucket_part")
+    AtRest.publishVersion(spark, path, v)
   })
 
   /**
@@ -1549,7 +1520,7 @@ object DedupIndex {
     // (see SigsDir) now supply every already-admitted document's
     // signature: semi-join to the live corpus (tombstoned ghosts drop),
     // dedup by id (at-least-once appends), recompute ONLY the gap docs
-    // (legacy seed, crash window) — signatures are deterministic
+    // (docs the index never signed, null ids) — signatures are deterministic
     // functions of (text, numHashes, shingleWords), so the candidate set
     // is bit-identical to a fresh signing. The rebuild below reuses the
     // same frame, so a fully-covered recheck signs nothing.
@@ -1610,7 +1581,7 @@ object DedupIndex {
           .map(_.unionByName(adjust)).getOrElse(adjust)
         publishLedgerDelta(collapseLedger(merged), staging.toString, SeedBatch)
       }
-      AtRest.publishVersion(spark, corpusPath, v, "id_part")
+      AtRest.publishVersion(spark, corpusPath, v)
       // rebuild the index from the signatures already on hand (the
       // rewritten corpus = old corpus minus dropIds, and `sig` covers
       // every old doc) — no second full-corpus signing pass; the new
@@ -1702,12 +1673,8 @@ object DedupIndex {
       // dirs into the seed — when this window starts below the fold
       // frontier, the folded batches can't be scoped by dir: probe the
       // WHOLE corpus this one pass (the next window starts past
-      // coveredUpTo and is incremental again). Folds performed by
-      // PRE-frontier builds wrote no frontier file — the conservative
-      // committed-markers-vs-dirs bound covers them.
-      val foldedThrough = math.max(AtRest.collapseFrontier(fs, corpusPath),
-        AtRest.legacyFoldThrough(fs, corpusPath, corpDir))
-      val fullSweep = sinceBatch < foldedThrough
+      // coveredUpTo and is incremental again)
+      val fullSweep = sinceBatch < AtRest.collapseFrontier(fs, corpusPath)
       // the marker records the window the pass ACTUALLY ran from (a
       // full sweep covers from 0) — what a bootstrap may resume past
       val effSince = if (fullSweep) 0L else sinceBatch
@@ -1774,11 +1741,9 @@ object DedupIndex {
    *  highest batch it covered, and the window START it actually ran
    *  from (0 = provably adjudicated everything below its coverage —
    *  what a frontier bootstrap may safely resume past; a caller-driven
-   *  window start > 0 proves nothing about the batches below it).
-   *  Older marker formats leave the missing fields None and every
-   *  consumer treats that conservatively. */
-  private[graft] case class RecheckMarker(removed: Long,
-      coveredUpTo: Option[Long], since: Option[Long])
+   *  window start > 0 proves nothing about the batches below it). */
+  private[graft] case class RecheckMarker(removed: Long, coveredUpTo: Long,
+      since: Long)
 
   /** Parse a committed recheck marker; an unparsable one is deleted
    *  (= NOT committed), mirroring the batch-marker contract. */
@@ -1786,13 +1751,10 @@ object DedupIndex {
       corpusPath: String, recheckId: Long): Option[RecheckMarker] = {
     val marker = new Path(corpusPath, s"_committed/recheck-$recheckId")
     if (!fs.exists(marker)) return None
-    val toks = new String(AtRest.readFile(fs, marker),
-      java.nio.charset.StandardCharsets.UTF_8).trim.split("\\s+").toSeq
-    toks.headOption.flatMap(_.toLongOption) match {
-      case Some(n) => Some(RecheckMarker(n,
-        toks.lift(1).flatMap(_.toLongOption),
-        toks.lift(2).flatMap(_.toLongOption)))
-      case None => fs.delete(marker, false); None
+    new String(AtRest.readFile(fs, marker), java.nio.charset.StandardCharsets.UTF_8)
+        .trim.split("\\s+").toSeq.map(_.toLongOption) match {
+      case Seq(Some(n), Some(cov), Some(since)) => Some(RecheckMarker(n, cov, since))
+      case _ => fs.delete(marker, false); None
     }
   }
 
@@ -1847,9 +1809,7 @@ object DedupIndex {
    * short-circuits on the marker, and advances to exactly the range
    * that marker covered — batches ingested after the crash stay ahead
    * of the frontier and are adjudicated by the NEXT pass, never
-   * skipped. Legacy (count-only) markers conservatively leave
-   * `nextSince` in place: the next pass re-adjudicates an
-   * already-clean range (idempotent) rather than guess coverage.
+   * skipped.
    */
   def recheckIncremental(spark: SparkSession, corpusPath: String,
       indexPath: String, threshold: Double = 0.7, textCol: String = "text",
@@ -1880,7 +1840,7 @@ object DedupIndex {
       maxExisting match {
         case Some(mid) =>
           recheckMarkerInfo(fs, corpusPath, mid) match {
-            case Some(RecheckMarker(_, Some(cov), Some(0L))) =>
+            case Some(RecheckMarker(_, cov, 0L)) =>
               (cov + 1L, mid + 1L)
             case _ => (0L, mid + 1L)
           }
@@ -1890,10 +1850,9 @@ object DedupIndex {
     val n = recheckSince(spark, corpusPath, indexPath, since, id, threshold,
       textCol, idCol, numHashes, bands, shingleWords, maxBucket, nParts,
       corpusParts, score)
-    val covered = recheckMarkerInfo(fs, corpusPath, id).getOrElse(
+    val nextSince = recheckMarkerInfo(fs, corpusPath, id).getOrElse(
       throw new IllegalStateException(
-        s"recheck-$id committed but its marker is unreadable")).coveredUpTo
-    val nextSince = covered.map(_ + 1L).getOrElse(since)
+        s"recheck-$id committed but its marker is unreadable")).coveredUpTo + 1L
     AtRest.writeFile(fs, frontierPath(corpusPath),
       s"$nextSince ${id + 1L}".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     n
@@ -1928,6 +1887,6 @@ object DedupIndex {
     // incremental recheck knows its window can't be scoped by dir and
     // full-sweeps the folded range once instead of silently skipping it
     AtRest.writeCollapseFrontier(fs, path, maxCommittedBatch(fs, path))
-    AtRest.publishVersion(spark, path, v, "id_part")
+    AtRest.publishVersion(spark, path, v)
   })
 }

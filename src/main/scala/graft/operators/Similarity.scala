@@ -220,7 +220,7 @@ object Similarity {
   }
 
   /** The codebook persisted with the table's CURRENT version — what
-   *  probes/appends should use; None only on pre-sidecar tables. */
+   *  probes/appends should use; None until an adopting append writes it. */
   def readCodebook(spark: org.apache.spark.sql.SparkSession,
       path: String): Option[Seq[Seq[Float]]] = {
     val dir = AtRest.resolve(spark, path)
@@ -257,7 +257,7 @@ object Similarity {
   private def storedCodebook(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[Seq[Float]] =
     readCodebook(spark, path).getOrElse(throw new IllegalStateException(
-      s"$path has no persisted codebook (pre-sidecar table) — pass the " +
+      s"$path has no persisted codebook — pass the " +
         "centroids explicitly, or re-seed with ivfWriteAtRest"))
 
   /** Every at-rest IVF data write lands through here: rows sort by
@@ -281,19 +281,20 @@ object Similarity {
       .mode(mode).parquet(target)
   }
 
-  /** The current version's DATA directory for appends: versioned tables
-   *  nest `ingest_batch=<B>/list_id=<L>` (batch publishes are one atomic
-   *  rename, like [[DedupIndex]]); a legacy flat table (bare `list_id=`
-   *  at its root) keeps its flat shape — mixing depths would corrupt
-   *  partition discovery. [[ivfCompactAtRest]] migrates. */
-  private def appendDir(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (String, Boolean) = {
-    val fs = AtRest.fsFor(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val legacyFlat = fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith("list_id="))
-    if (legacyFlat) (dir, true)
-    else (new org.apache.hadoop.fs.Path(dir, "ingest_batch=-1").toString, false)
+  /** The version dir an appending writer publishes into. A fresh path
+   *  adopts the caller's table: meta first (it creates `_v0`), then the
+   *  codebook — a crash in between leaves a table whose next append
+   *  writes the codebook. Concurrent sharded adopters write identical
+   *  files, so a lost rename race is benign once the codebook matches. */
+  private def adoptDir(spark: org.apache.spark.sql.SparkSession, path: String,
+      centroids: Seq[Seq[Float]], idCol: String): String = {
+    if (AtRest.readMeta(spark, path).isEmpty)
+      AtRest.validateOrAdoptMeta(spark, path, ivfMeta(centroids, idCol = idCol))
+    val dir = AtRest.resolve(spark, path)
+    if (readCodebook(spark, path).isEmpty)
+      try writeCodebook(spark, dir, centroids)
+      catch { case _: IllegalStateException => validateCodebook(spark, path, centroids) }
+    dir
   }
 
   private def ivfMeta(cb: Seq[Seq[Float]], replicas: Int = 1,
@@ -307,8 +308,8 @@ object Similarity {
       Map("lshPlanes" -> p.toString, "lshTables" -> t.toString)
     }.getOrElse(Map.empty)
 
-  /** The table's id column as recorded at seed time; pre-idCol-meta
-   *  tables read as the default. Maintenance rewrites consult THIS (not
+  /** The table's id column as recorded at seed time; a fresh path
+   *  reads as the default. Maintenance rewrites consult THIS (not
    *  a caller parameter) so the id-sorted page layout survives
    *  compact/enablePq on custom-id tables. */
   private def ivfIdColOf(spark: org.apache.spark.sql.SparkSession,
@@ -520,7 +521,7 @@ object Similarity {
           ++ (if (codesOnly) Map("codesOnly" -> "true") else Map.empty))
       val markers = new org.apache.hadoop.fs.Path(path, "_committed")
       if (fs.exists(markers)) fs.delete(markers, true)
-      AtRest.publishVersion(spark, path, v, "list_id")
+      AtRest.publishVersion(spark, path, v)
     }
   }
 
@@ -554,14 +555,9 @@ object Similarity {
         s"idCol='$idCol' is not a column of the append frame " +
           s"(got ${newVecs.columns.mkString("[", ", ", "]")}) — pass the " +
           "table's own id column")
-      val dir = AtRest.ensureVersioned(spark, path)
-      // pre-sidecar tables adopt the caller's codebook (their first append
-      // under a DIFFERENT codebook would already have corrupted them)
-      if (readCodebook(spark, path).isEmpty) {
-        writeCodebook(spark, dir, centroids)
-        AtRest.writeMeta(spark, path, ivfMeta(centroids, idCol = idCol))
-      }
-      val (target, _) = appendDir(spark, dir)
+      // ad-hoc appends land in the seed batch dir
+      val target = new org.apache.hadoop.fs.Path(
+        adoptDir(spark, path, centroids, idCol), "ingest_batch=-1").toString
       // a signed table signs its appends under the RECORDED scheme, so
       // every at-rest row carries comparable signatures (schema stays
       // homogeneous across batch dirs); unsigned tables stay unsigned
@@ -943,24 +939,23 @@ object Similarity {
     // skip the folded (never-adjudicated) batches
     AtRest.writeCollapseFrontier(fs, path,
       DedupIndex.maxCommittedBatch(fs, path))
-    AtRest.publishVersion(spark, path, v, "list_id")
+    AtRest.publishVersion(spark, path, v)
   }
 
   /** OFFLINE maintenance, [[graft.operators.DedupIndex.compact]]'s IVF
    *  twin: collapse the per-append/per-batch small files to one file per
    *  list directory (one shuffle task per list). Assignments and codebook
-   *  are untouched — probes see identical results — and a legacy flat
-   *  table migrates to the versioned layout here. `centroids` is only
-   *  needed for pre-sidecar tables (whose codebook was never persisted);
-   *  omit it otherwise. */
+   *  are untouched — probes see identical results. `centroids` is only
+   *  needed for a table whose codebook was never persisted (an adopting
+   *  append that crashed before writing it); omit it otherwise. */
   def ivfCompactAtRest(spark: org.apache.spark.sql.SparkSession, path: String,
       centroids: Seq[Seq[Float]] = null): Unit = AtRest.withLease(spark, path) {
     if (centroids != null) validateCodebook(spark, path, centroids)
     val cb = readCodebook(spark, path)
       .orElse(Option(centroids))
       .getOrElse(throw new IllegalStateException(
-        s"$path has no persisted codebook (pre-sidecar table) — pass the " +
-          "centroids so compaction can persist them"))
+        s"$path has no persisted codebook — pass the centroids so " +
+          "compaction can persist them"))
     val all = spark.read.parquet(AtRest.resolve(spark, path)).drop("ingest_batch")
     val nLists = math.max(all.select("list_id").distinct().count().toInt, 1)
     swapRewrite(all.repartition(nLists, col("list_id")), path, cb)
@@ -971,7 +966,7 @@ object Similarity {
    * scheme change (see [[LshSigCol]]): rewrites every row with fresh
    * signatures at the given (or auto-sized) scheme and records it in
    * `_meta.json`, staged + pointer-swapped like compact/retrain. Use it
-   * to (a) migrate a pre-persistence table so rechecks stop re-signing
+   * to (a) sign an unsigned table so rechecks stop re-signing
    * per pass, or (b) move to wider planes after growth without waiting
    * for the full sweep's automatic upgrade. Codes-only tables re-sign
    * from `rerankFrom` (full id coverage required, loudly). Returns the
@@ -1635,12 +1630,7 @@ object Similarity {
             "append-only (ivfAppendAtRest) / pre-deduped upstream")
       validateCodebook(spark, path, centroids)
       requireIdCol(spark, path, idCol)
-      val dir = AtRest.ensureVersioned(spark, path)
-      val (_, legacyFlat) = appendDir(spark, dir)
-      if (batchId >= 0 && legacyFlat)
-        throw new IllegalStateException(
-          s"$path uses the legacy flat layout; run ivfCompactAtRest to migrate " +
-            "before exactly-once batch ingest")
+      val dir = adoptDir(spark, path, centroids, idCol)
       if (batchId >= 0) {
         // un-publish a half-published crash leftover so the replay's probe
         // sees the exact pre-attempt state
@@ -1694,10 +1684,7 @@ object Similarity {
       ).localCheckpoint(true)
       val hasTable = {
         val p = new org.apache.hadoop.fs.Path(dir)
-        fs.exists(p) && fs.listStatus(p).exists { st =>
-          val n = st.getPath.getName
-          n.startsWith("list_id=") || n.startsWith("ingest_batch=")
-        }
+        fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("ingest_batch="))
       }
       // snapshot of the table's batch dirs, taken just before the probe:
       // the sharded commit section re-probes against batches that COMMIT
@@ -1759,8 +1746,8 @@ object Similarity {
                   s"publish rename $staging -> $target failed")
             }
           } else {
-            val (target, _) = appendDir(spark, dir)
-            writeListData(assigned, idCol, "append", target)
+            writeListData(assigned, idCol, "append",
+              new org.apache.hadoop.fs.Path(dir, "ingest_batch=-1").toString)
           }
         }
         // ledger delta: published AFTER the data, BEFORE the marker — a
@@ -2116,9 +2103,9 @@ object Similarity {
    * join to buckets a window id occupies, and fetches raw vectors only
    * for candidate pairs — batch-proportional compute, with one cheap
    * sig-column scan as the only whole-table touch (no vector I/O, no
-   * signing). An UNSIGNED (pre-persistence / hand-built) table signs the
-   * whole table in-flight per pass, the pre-r17 shape — run [[ivfResign]]
-   * once to migrate. The REWRITE only happens when drops were found, and
+   * signing). An UNSIGNED table (seeded with `lshPlanes = -1`, or
+   * adopted by an append) signs the whole table in-flight per pass — run
+   * [[ivfResign]] once to sign it. The REWRITE only happens when drops were found, and
    * drops are rare in steady state. Returns the dropped count.
    */
   def ivfRecheckSince(spark: org.apache.spark.sql.SparkSession, path: String,
@@ -2142,13 +2129,9 @@ object Similarity {
       // into the seed: when this window starts below the fold frontier,
       // the folded batches have no dirs to scope by — fall back to a
       // FULL sweep for this one pass (the next pass's window starts
-      // past coveredUpTo and is incremental again). Pre-frontier builds
-      // folded without writing the file — the conservative
-      // committed-markers-vs-dirs bound covers them.
-      val foldedThrough = math.max(AtRest.collapseFrontier(fs, path),
-        AtRest.legacyFoldThrough(fs, path, AtRest.resolve(spark, path)))
+      // past coveredUpTo and is incremental again)
       val since =
-        if (sinceBatch < foldedThrough) None
+        if (sinceBatch < AtRest.collapseFrontier(fs, path)) None
         else Some(sinceBatch)
       val n = recheckSweep(spark, path, sinceBatch = since,
         threshold, idCol, vecCol, scoreCol, planesPerTable, tables, maxBucket,
@@ -2200,7 +2183,7 @@ object Similarity {
       maxExisting match {
         case Some(mid) =>
           DedupIndex.recheckMarkerInfo(fs, path, mid) match {
-            case Some(DedupIndex.RecheckMarker(_, Some(cov), Some(0L))) =>
+            case Some(DedupIndex.RecheckMarker(_, cov, 0L)) =>
               (cov + 1L, mid + 1L)
             case _ => (0L, mid + 1L)
           }
@@ -2209,10 +2192,9 @@ object Similarity {
     }
     val n = ivfRecheckSince(spark, path, since, id, threshold, idCol, vecCol,
       scoreCol, planesPerTable, tables, maxBucket, rerankFrom)
-    val covered = DedupIndex.recheckMarkerInfo(fs, path, id).getOrElse(
+    val nextSince = DedupIndex.recheckMarkerInfo(fs, path, id).getOrElse(
       throw new IllegalStateException(
-        s"recheck-$id committed but its marker is unreadable")).coveredUpTo
-    val nextSince = covered.map(_ + 1L).getOrElse(since)
+        s"recheck-$id committed but its marker is unreadable")).coveredUpTo + 1L
     AtRest.writeFile(fs, DedupIndex.frontierPath(path),
       s"$nextSince ${id + 1L}".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     n
@@ -2228,7 +2210,7 @@ object Similarity {
    *  `rerankFrom` on a codes-only table — where the sweep still checks
    *  FULL id coverage loudly, an ids-only anti-join, because an id the
    *  store cannot serve is unadjudicable by any later pass). An unsigned
-   *  table signs in-flight (the pre-persistence shape). A FULL sweep
+   *  table signs in-flight. A FULL sweep
    *  additionally re-signs + rewrites when the caller requests a new
    *  scheme or the table has outgrown its recorded one (planes must track
    *  log2 n — see [[autoLshPlanes]]); survivors keep their existing
@@ -2255,14 +2237,6 @@ object Similarity {
     val dir = AtRest.resolve(spark, path)
     val table = spark.read.parquet(dir)
     val replicas = math.max(ivfReplicasOf(spark, path), 1)
-    // a LEGACY FLAT table (bare list_id= dirs, never batch-ingested) has
-    // no ingest_batch column to scope a window by — fall back to a full
-    // sweep (a superset of any window; the table predates incremental
-    // ingest, so this is its first adjudication anyway) instead of dying
-    // in the analyzer on a missing column
-    val effSince =
-      if (sinceBatch.isDefined && !table.columns.contains("ingest_batch")) None
-      else sinceBatch
     // codes-only: FULL id coverage against the store, checked loudly up
     // front (ids only — no vector read) — same contract as the retrain
     if (codesOnly) {
@@ -2291,7 +2265,7 @@ object Similarity {
     val (usePersisted, signScheme, resignTo) = scheme match {
       case Some(s) => caller match {
         case Some(c) if c != s =>
-          if (effSince.isDefined)
+          if (sinceBatch.isDefined)
             throw new IllegalArgumentException(
               s"$path is signed at planes=${s._1}/tables=${s._2} but the " +
                 s"caller asked for planes=${c._1}/tables=${c._2} — an " +
@@ -2303,7 +2277,7 @@ object Similarity {
             "full rewrite, meta-recorded")
           (false, c, Some(c))
         case _ =>
-          if (effSince.isEmpty && s._1 < autoScheme._1 - 1) {
+          if (sinceBatch.isEmpty && s._1 < autoScheme._1 - 1) {
             // the table outgrew its recorded scheme (per-bucket load grows
             // linearly past it) — the full sweep is the natural whole-
             // table pass to upgrade it; incremental windows keep using
@@ -2344,7 +2318,7 @@ object Similarity {
             lshSignature(col("vec"), p, tt * p)): _*)).as(Seq("tbl", "sig")))
         (sigs, uniqVecs)
       }
-    val newIdsOpt = effSince.map { b =>
+    val newIdsOpt = sinceBatch.map { b =>
       table.filter(col("ingest_batch") >= b).select(col(idCol)).distinct()
     }
     // pairs come back persisted (materializeThenFree) — keep the handle

@@ -1,5 +1,7 @@
 package graft.queries
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.functions._
 
 import graft.operators.Corpus
@@ -526,7 +528,7 @@ object CorpusQueries {
             graft.operators.AtRest.resolve(s, corp))
           p.getFileSystem(s.sparkContext.hadoopConfiguration)
             .getContentSummary(p).getLength
-        } catch { case _: Throwable => Long.MaxValue }) <= gate
+        } catch { case NonFatal(_) => Long.MaxValue }) <= gate
         val atRest = if (cached)
           atRest0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
         else atRest0
@@ -557,18 +559,11 @@ object CorpusQueries {
             sum(when(col("quality") < 0.6, 1L).otherwise(0L)).as("n_quality_low"),
             sum(when(col("lm_score") < -0.82, 1L).otherwise(0L)).as("n_lm_low"))
           .orderBy("source")
-        if (!cached) card
-        else {
-          // materialize the (tiny, one row per source) card, then free
-          // the corpus cache — the operator-persist discipline
-          // (Dedup.materializeThenFree's contract, inlined: that helper
-          // is operators-private)
-          val out = card.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-          out.foreach(_ => ())
-          atRest.unpersist(blocking = false)
-          out
-        }
+        // the card is one row per source: collect it, free the corpus
+        // cache, and hand back a local frame — nothing stays persisted
+        val rows = card.collect()
+        if (cached) atRest.unpersist(blocking = false)
+        s.createDataFrame(java.util.Arrays.asList(rows: _*), card.schema)
       },
       // seed (untimed): the timed number is the CARD computation over the
       // at-rest corpus, not the one-off corpus layout write

@@ -212,10 +212,10 @@ class DedupIndexSpec extends SparkSpec {
     Seq((1L, "legacy doc one two three")).toDF("doc_id", "text")
       .write.parquet(corpPath)
     val b = Seq((2L, "some new doc four five six")).toDF("doc_id", "text")
-    val e = intercept[IllegalStateException] {
+    val e = intercept[graft.operators.AtRest.UnsupportedTableFormat] {
       DedupIndex.ingestBatch(b, idxPath, corpPath, batchId = 0L)
     }
-    assert(e.getMessage.contains("compactCorpus"))
+    assert(e.getMessage.contains(corpPath))
   }
 
   test("compaction merges files, drops accreted buckets at rest, and leaves probe results unchanged") {

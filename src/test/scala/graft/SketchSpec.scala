@@ -1120,34 +1120,6 @@ class SketchSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet == Set(1L, 2L))
   }
 
-  test("pre-frontier folds are detected conservatively: a fold with no " +
-      "collapse-frontier file still triggers the full sweep") {
-    import spark.implicits._
-    val dir = tempDir("ivf_legacy_fold") + "/corpus"
-    def at(deg: Double): Seq[Float] = {
-      val r = math.toRadians(deg)
-      Seq(math.cos(r).toFloat, math.sin(r).toFloat)
-    }
-    val cents = Seq(at(0), at(20))
-    Similarity.ivfWriteAtRest(
-      Seq((1L, at(9).toArray), (2L, at(170).toArray)).toDF("vec_id", "embedding"),
-      cents, dir)
-    assert(Similarity.ivfIngestBatch(
-      Seq((100L, at(11).toArray)).toDF("vec_id", "embedding"),
-      cents, dir, threshold = 0.95, nProbe = 1, batchId = 0L) == 1)
-    Similarity.ivfCompactAtRest(spark, dir)
-    // simulate a fold performed by a PRE-frontier build: the file is
-    // absent, but batch 0's marker exists while its dir is gone — the
-    // committed-vs-dirs detection must still force the full sweep
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(dir, "_committed/collapse-frontier"),
-      false)
-    assert(Similarity.ivfRecheckIncremental(spark, dir, threshold = 0.95) == 1)
-    assert(Similarity.ivfRead(spark, dir).select("vec_id")
-      .collect().map(_.getLong(0)).toSet == Set(1L, 2L))
-  }
-
   test("custom id column: recorded in meta, maintenance keeps it, " +
       "mismatched callers fail loudly") {
     val dir = tempDir("ivf_idcol") + "/corpus"
@@ -1369,25 +1341,6 @@ class SketchSpec extends SparkSpec {
     }.getMessage.contains("idCol"))
     // nothing was seeded — the path stays clean for a correct retry
     Similarity.ivfWriteAtRest(emb.limit(10), cents, dir)
-  }
-
-  test("a caller-driven recheck window on a legacy flat table falls back " +
-      "to a full sweep instead of dying on the missing ingest_batch column") {
-    import spark.implicits._
-    val dir = tempDir("ivf_legacy_window") + "/corpus"
-    def at(deg: Double): Seq[Float] = {
-      val r = math.toRadians(deg)
-      Seq(math.cos(r).toFloat, math.sin(r).toFloat)
-    }
-    val cents = Seq(at(0), at(90))
-    // bare list_id= dirs at the root: a pre-versioning build's layout
-    Similarity.ivfAssign(
-      Seq((1L, at(9).toArray), (2L, at(170).toArray)).toDF("vec_id", "embedding"),
-      cents).write.partitionBy("list_id").parquet(dir)
-    // no near-dup pair exists — the pass must complete (full-sweep
-    // fallback), not throw an AnalysisException on ingest_batch
-    assert(Similarity.ivfRecheckSince(spark, dir, sinceBatch = 5L,
-      recheckId = 0L, threshold = 0.95) == 0)
   }
 
   test("recheck ledger subtraction counts ADMISSIONS: an update-style " +

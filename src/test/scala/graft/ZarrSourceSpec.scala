@@ -16,13 +16,16 @@ import graft.zarr.{ZarrSchema, ZarrStore}
  *  - the reference's *ignored* projection+filter test
  *    (src/table_provider.rs:327-358) — its known capability gap, passing here.
  *
- * All of them run against the reference's own COMMITTED store
- * (/root/reference/data/zarr_store.zarr, read-only), so the decode path is
- * proven against bytes we did not produce — not a writer/reader closed loop.
+ * All of them run against a golden store committed as a test resource
+ * (`src/test/resources/zarr_store.zarr`, laid out as FIXTURES.md §1): its
+ * `zarr.json` documents are hand-written and its chunks were compressed by
+ * the `zstd` command-line tool, so the decode path is proven against bytes
+ * this codebase did not produce — not a writer/reader closed loop.
  */
 class ZarrSourceSpec extends SparkSpec {
 
-  val refStore = "/root/reference/data/zarr_store.zarr"
+  val refStore: String = java.nio.file.Paths.get(
+    getClass.getResource("/zarr_store.zarr").toURI).toString
 
   def refTable = spark.read.format("zarr").option("group", "/meta").load(refStore)
 
