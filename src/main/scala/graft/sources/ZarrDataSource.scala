@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -31,13 +32,16 @@ import graft.zarr._
  *  - **One input partition per chunk range** instead of a single whole-table
  *    partition (src/table_provider.rs:237): scan parallelism scales with the
  *    chunk grid, which is what makes the source usable on a real cluster.
- *    Adjacent chunks are coalesced up to `target_partition_rows` so tiny
- *    chunks don't explode the task count.
+ *    Chunks are pruned one at a time, then adjacent kept chunks are
+ *    coalesced up to `target_partition_rows` so tiny chunks don't explode
+ *    the task count.
  *
- * Filter pushdown prunes chunk ranges when the store carries the
+ * Filter pushdown prunes chunks when the store carries the
  * `_graft_stats.json` sidecar our write path emits (per-chunk min/max/nulls
- * — [[graft.zarr.ZarrStats]]): the scan skips every chunk range the stats
- * prove empty for the predicate, the way Parquet skips row groups. All
+ * — [[graft.zarr.ZarrStats]]): the scan skips every chunk the stats prove
+ * empty for the predicate, the way Parquet skips row groups, before it
+ * groups the rest into ranges. Chunks in the table, chunks pruned and
+ * ranges planned are reported as SQL metrics on the scan node. All
  * filters are ALSO returned to Spark as residuals, so stats can only save
  * I/O, never change results; a store without the sidecar (e.g. written by
  * another producer — the reference's stance at src/table_provider.rs:85,
@@ -297,23 +301,46 @@ class ZarrScan(
   /** Rows in the ranges pruning keeps — so a chunk-pruned scan reports its
    *  PRUNED size and joins against it become broadcast-eligible. The bbox
    *  rule runs in the last optimizer batch, before physical planning reads
-   *  these stats, so JoinSelection sees the post-pruning estimate. Lazy:
-   *  computed once per scan (one sidecar read). */
+   *  these stats, so JoinSelection sees the post-pruning estimate. */
   private lazy val estimatedRows: Long =
     if (pruningFilters.isEmpty && bboxFilter.isEmpty) tableRows
-    else plannedRanges().map { case (s, e) => e - s }.sum
+    else planned.ranges.map { case (s, e) => e - s }.sum
 
-  /** The ONE aligned-coalesced-pruned range enumeration behind BOTH
-   *  [[estimateStatistics]] and [[planInputPartitions]] — if they diverged,
-   *  reported statistics would describe partitions the scan doesn't plan. */
-  private def plannedRanges(): Iterator[(Long, Long)] = {
-    if (tableRows == 0) return Iterator.empty
+  /** The ONE pruned-then-coalesced range enumeration behind
+   *  [[estimateStatistics]], [[planInputPartitions]] and
+   *  [[reportDriverMetrics]] — if they diverged, reported statistics would
+   *  describe partitions the scan doesn't plan. Lazy: computed once per scan
+   *  (one sidecar read).
+   *
+   *  A chunk here is one cell of the coarsest chunk grid among the required
+   *  columns. Each chunk is kept or skipped on its own; runs of adjacent
+   *  kept chunks are then coalesced, a range closing at a gap or where the
+   *  next chunk would take it past `step` rows. When nothing can be pruned
+   *  the walk strides a whole `step` at a time, so the plan is ranges cut
+   *  every `step` rows from 0 and no per-chunk work is spent. */
+  private lazy val planned: ZarrScan.Plan = {
     val align = math.max(1L, requiredArrays.map(_.chunkLength).maxOption.getOrElse(tableRows))
     val step = math.max(align, (targetRows / align) * align)
-    val keep = rangeKeeper
-    Iterator.iterate(0L)(_ + step).takeWhile(_ < tableRows)
-      .map(start => (start, math.min(start + step, tableRows)))
-      .filter { case (s, e) => keep(s, e) }
+    val chunks = (tableRows + align - 1) / align
+    val ranges = Array.newBuilder[(Long, Long)]
+    var pruned = 0L
+    var open = -1L // start of the run being coalesced, -1 when none is open
+    val keep = rangeKeeper.getOrElse((_: Long, _: Long) => true)
+    val unit = if (rangeKeeper.isEmpty) step else align
+    var s = 0L
+    while (s < tableRows) {
+      val e = math.min(s + unit, tableRows)
+      if (keep(s, e)) {
+        if (open >= 0 && e - open > step) { ranges += ((open, s)); open = s }
+        if (open < 0) open = s
+      } else {
+        pruned += 1
+        if (open >= 0) { ranges += ((open, s)); open = -1L }
+      }
+      s = e
+    }
+    if (open >= 0) ranges += ((open, tableRows))
+    ZarrScan.Plan(ranges.result(), chunks, pruned)
   }
 
   override def estimateStatistics(): Statistics = new Statistics {
@@ -327,70 +354,77 @@ class ZarrScan(
   }
 
   /**
-   * Partition = contiguous row range aligned to the coarsest chunk grid among
-   * the required columns, coalesced up to `targetRows` rows per task. Ranges
-   * the stats sidecar proves empty for the pushed filters are dropped here —
-   * pruned chunks cost no task, no fetch, no decode.
+   * Partition = contiguous run of kept chunks, aligned to the coarsest chunk
+   * grid among the required columns and coalesced up to `targetRows` rows per
+   * task. Chunks the stats sidecar proves empty for the pushed filters are
+   * dropped one by one before coalescing — a pruned chunk costs no task, no
+   * fetch, no decode, even when its neighbours are kept.
    */
   override def planInputPartitions(): Array[InputPartition] =
-    plannedRanges().map { case (s, e) => ZarrInputPartition(s, e): InputPartition }.toArray
+    planned.ranges.map { case (s, e) => ZarrInputPartition(s, e): InputPartition }
 
-  /** Range-level keep/skip decision from the stats sidecar; keeps everything
-   *  when there are no pruning filters or no (valid) sidecar. A sidecar whose
-   *  grid doesn't cover the table exactly (stale after a foreign write) is
-   *  ignored. */
-  // lazy val, not def: estimateStatistics AND planInputPartitions both need
-  // it, and each evaluation re-reads the stats sidecar from the store —
-  // two remote reads per pruned query on an object store
-  private lazy val rangeKeeper: (Long, Long) => Boolean = {
-    if (pruningFilters.isEmpty && bboxFilter.isEmpty) (_, _) => true
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new ZarrChunksMetric, new ZarrChunksPrunedMetric, new ZarrRangesPlannedMetric)
+
+  /** Planning counts, read off the same [[planned]] enumeration the
+   *  partitions come from. */
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = Array(
+    ZarrScan.TaskMetric(ZarrScan.ChunksMetric, planned.chunks),
+    ZarrScan.TaskMetric(ZarrScan.ChunksPrunedMetric, planned.pruned),
+    ZarrScan.TaskMetric(ZarrScan.RangesPlannedMetric, planned.ranges.length.toLong))
+
+  /** Per-chunk keep/skip decision from the stats sidecar; None when nothing
+   *  can be pruned — no pruning filters, or no (valid) sidecar. A sidecar
+   *  whose grid doesn't cover the table exactly (stale after a foreign
+   *  write) is ignored. */
+  // lazy val, not def: each evaluation re-reads the stats sidecar from the
+  // store — a remote read per evaluation on an object store
+  private lazy val rangeKeeper: Option[(Long, Long) => Boolean] =
+    if (pruningFilters.isEmpty && bboxFilter.isEmpty) None
     else rangeKeeperImpl
-  }
 
-  private def rangeKeeperImpl: (Long, Long) => Boolean = {
+  private def rangeKeeperImpl: Option[(Long, Long) => Boolean] = {
     val fullLen = arrays.headOption.map(_.length).getOrElse(0L)
     val stats = ZarrStats.read(
       new ZarrStore(path, SparkSession.active.sessionState.newHadoopConf()), group)
       .filter(s => s.chunkRows > 0 && s.totalRows == fullLen &&
         s.nChunks.toLong == (fullLen + s.chunkRows - 1) / s.chunkRows)
-    stats match {
-      case None => (_, _) => true
-      case Some(s) =>
-        val filterKeep: (Long, Long) => Boolean =
-          if (pruningFilters.isEmpty) (_, _) => true
-          else (start, end) => {
-            val statsOf: String => Option[ZarrPruning.RangeStats] = n =>
-              arrays.find(_.name == n).flatMap(a => ZarrPruning.rangeStats(s, n, a.dtype, start, end))
-            !pruningFilters.exists(f => ZarrPruning.skippable(f, statsOf))
-          }
-        val bboxKeep: (Long, Long) => Boolean = bboxFilter match {
-          case Some((col, qx0, qy0, qx1, qy1)) if s.envelopes.contains(col) =>
-            val env = s.envelopes(col)
-            (start, end) => {
-              // keep the range iff ANY covered chunk might intersect the box
-              // (unknown envelope = might); box touch counts as intersection,
-              // matching Wkt.envelopeIntersects' inclusive bounds
-              val lo = (start / s.chunkRows).toInt
-              val hi = math.min(((end - 1) / s.chunkRows).toInt, s.nChunks - 1)
-              var keep = false
-              var i = lo
-              while (i <= hi && !keep) {
-                val e = env(i)
-                keep = e == null ||
-                  !(e(2) < qx0 || e(0) > qx1 || e(3) < qy0 || e(1) > qy1)
-                i += 1
-              }
-              keep
-            }
-          case _ => (_, _) => true
+    stats.map { s =>
+      val filterKeep: (Long, Long) => Boolean =
+        if (pruningFilters.isEmpty) (_, _) => true
+        else (start, end) => {
+          val statsOf: String => Option[ZarrPruning.RangeStats] = n =>
+            arrays.find(_.name == n).flatMap(a => ZarrPruning.rangeStats(s, n, a.dtype, start, end))
+          !pruningFilters.exists(f => ZarrPruning.skippable(f, statsOf))
         }
-        // a sidecar whose GRID fields validated can still carry garbage
-        // VALUE strings (hand-edited, bit-rotted): any evaluation failure
-        // keeps the range — "any failure degrades to no pruning, never an
-        // error, never a skip" is the sidecar's safety contract
-        (start, end) =>
-          try bboxKeep(start, end) && filterKeep(start, end)
-          catch { case _: RuntimeException => true }
+      val bboxKeep: (Long, Long) => Boolean = bboxFilter match {
+        case Some((col, qx0, qy0, qx1, qy1)) if s.envelopes.contains(col) =>
+          val env = s.envelopes(col)
+          (start, end) => {
+            // keep the chunk iff ANY sidecar chunk it covers might intersect the box
+            // (unknown envelope = might); box touch counts as intersection,
+            // matching Wkt.envelopeIntersects' inclusive bounds
+            val lo = (start / s.chunkRows).toInt
+            val hi = math.min(((end - 1) / s.chunkRows).toInt, s.nChunks - 1)
+            var keep = false
+            var i = lo
+            while (i <= hi && !keep) {
+              val e = env(i)
+              keep = e == null ||
+                !(e(2) < qx0 || e(0) > qx1 || e(3) < qy0 || e(1) > qy1)
+              i += 1
+            }
+            keep
+          }
+        case _ => (_, _) => true
+      }
+      // a sidecar whose GRID fields validated can still carry garbage
+      // VALUE strings (hand-edited, bit-rotted): any evaluation failure
+      // keeps the range — "any failure degrades to no pruning, never an
+      // error, never a skip" is the sidecar's safety contract
+      (start, end) =>
+        try bboxKeep(start, end) && filterKeep(start, end)
+        catch { case _: RuntimeException => true }
     }
   }
 
@@ -405,6 +439,30 @@ class ZarrScan(
       new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
       requiredSchema.fieldNames.toSeq, targetRows)
 }
+
+object ZarrScan {
+  /** Kept ranges plus the chunk counts they were planned from. */
+  private final case class Plan(ranges: Array[(Long, Long)], chunks: Long, pruned: Long)
+
+  /** SQL metric names of the planning counts (driver-side). */
+  val ChunksMetric = "chunks"
+  val ChunksPrunedMetric = "chunksPruned"
+  val RangesPlannedMetric = "rangesPlanned"
+
+  private final case class TaskMetric(name: String, value: Long) extends CustomTaskMetric
+}
+
+/** A planning count a [[ZarrScan]] reports as a SQL metric. Spark
+ *  re-instantiates metrics by class name, so each is a no-arg class. */
+sealed abstract class ZarrScanMetric(metricName: String, desc: String) extends CustomSumMetric {
+  override def name(): String = metricName
+  override def description(): String = desc
+}
+final class ZarrChunksMetric extends ZarrScanMetric(ZarrScan.ChunksMetric, "chunks in table")
+final class ZarrChunksPrunedMetric
+  extends ZarrScanMetric(ZarrScan.ChunksPrunedMetric, "chunks pruned")
+final class ZarrRangesPlannedMetric
+  extends ZarrScanMetric(ZarrScan.RangesPlannedMetric, "chunk ranges planned")
 
 final case class ZarrInputPartition(start: Long, end: Long) extends InputPartition
 

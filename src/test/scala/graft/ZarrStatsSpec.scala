@@ -3,8 +3,12 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.read.SupportsReportStatistics
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
 import org.apache.spark.sql.functions._
 
+import graft.sources.{ZarrInputPartition, ZarrScan}
 import graft.zarr.{ZarrStats, ZarrStore}
 
 /**
@@ -109,6 +113,68 @@ class ZarrStatsSpec extends SparkSpec {
     assert(nParts(or2) == 2 && or2.count() == 20)
     val andMixed = full.filter(col("id") < 10 && col("name") =!= "nope")
     assert(nParts(andMixed) == 1 && andMixed.count() == 10)
+  }
+
+  /** Four 10-row chunks per task: ranges can hold several kept chunks. */
+  private def readWide(dir: String): DataFrame =
+    spark.read.format("zarr").option("group", "/t")
+      .option("target_partition_rows", "40").load(dir)
+
+  private def scanOf(df: DataFrame): ZarrScan =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case r: DataSourceV2ScanRelation => r.scan
+    }.collect { case z: ZarrScan => z }.get
+
+  private def layout(df: DataFrame): Seq[(Long, Long)] =
+    scanOf(df).planInputPartitions().toSeq.map { case p: ZarrInputPartition => (p.start, p.end) }
+
+  private def ids(df: DataFrame): Seq[Long] =
+    df.select("id").collect().map(_.getLong(0)).sorted.toSeq
+
+  test("chunks are pruned one at a time, then kept neighbours coalesce into ranges") {
+    val dir = writeStore()
+    val full = readWide(dir)
+    // nothing pruned: ranges cut every 40 rows from 0
+    assert(layout(full) == Seq((0L, 40L), (40L, 80L), (80L, 100L)))
+    val hi = full.filter(col("id") >= 95)
+    assert(layout(hi) == Seq((90L, 100L)))
+    assert(ids(hi) == (95L to 99L))
+    val band = full.filter(col("id") >= 33 && col("id") < 47)
+    assert(layout(band) == Seq((30L, 50L))) // chunks 3 and 4, one task
+    assert(ids(band) == (33L to 46L))
+    // statistics count the kept chunks' rows, not the ranges they sat in
+    val stats = scanOf(band).asInstanceOf[SupportsReportStatistics].estimateStatistics()
+    assert(stats.numRows().getAsLong == 20L)
+    val or2 = full.filter(col("id") < 10 || col("id") >= 90)
+    assert(layout(or2) == Seq((0L, 10L), (90L, 100L)))
+    assert(ids(or2) == (0L to 9L) ++ (90L to 99L))
+    // a run longer than target_partition_rows starts at its first kept chunk
+    val tail = full.filter(col("id") >= 15)
+    assert(layout(tail) == Seq((10L, 50L), (50L, 90L), (90L, 100L)))
+    assert(ids(tail) == (15L to 99L))
+  }
+
+  test("bbox pruning keeps only the chunk under the box inside a multi-chunk range") {
+    import graft.functions.GeoFunctions
+    GeoFunctions.register(spark)
+    val dir = writeGeoStore()
+    // box [34,36]² lies in chunk 3, which shares a 40-row range with chunks 0..2
+    val q = readWide(dir).filter(GeoFunctions.bbox_intersects(col("bbox"), 34, 34, 36, 36))
+    assert(layout(q) == Seq((30L, 40L)))
+    assert(ids(q) == (33L to 37L))
+  }
+
+  test("the scan node reports chunks, chunks pruned and ranges planned as SQL metrics") {
+    val dir = writeStore()
+    val q = readWide(dir).filter(col("id") < 10 || col("id") >= 90)
+    assert(q.collect().length == 20)
+    val node = new AdaptiveSparkPlanHelper {}.collect(q.queryExecution.executedPlan) {
+      case b: BatchScanExec => b
+    }.head
+    val m = node.metrics
+    assert(m(ZarrScan.ChunksMetric).value == 10L, node.metrics)
+    assert(m(ZarrScan.ChunksPrunedMetric).value == 8L, node.metrics)
+    assert(m(ZarrScan.RangesPlannedMetric).value == 2L, node.metrics)
   }
 
   test("missing or corrupt sidecar: no pruning, same answers") {
