@@ -26,36 +26,17 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
 
-  /** Install the bbox chunk-pruning rule into the resolving session's
-   *  "User Provided Optimizers" batch — the only extension-reachable batch
-   *  that runs AFTER `V2ScanRelationPushDown` (Spark's "Pre CBO Rules"
-   *  batch sits BEFORE early scan pushdown, so `injectPreCBORule` never
-   *  sees a `DataSourceV2ScanRelation`; verified against the 4.1 batch
-   *  list). Hooked into the function builder: analysis resolves
-   *  `bbox_intersects` before optimization runs, so any query that could
-   *  prune has the rule installed in time. */
-  private def installBboxPruning(): Unit =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.plans.ZarrBboxPruning.installInto)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((FunctionIdentifier("bbox_intersects"),
       info("bbox_intersects", "bbox_intersects(wkt, minx, miny, maxx, maxy) - envelope intersection"),
       (es: Seq[Expression]) => {
-        installBboxPruning()
         VectorFunctions.expectArity(es, 5, "bbox_intersects(wkt, minx, miny, maxx, maxy)")
         GeoFunctions.BboxIntersects(es.head +: es.tail.map(e => Cast(e, DoubleType)))
       }))
     ext.injectFunction((FunctionIdentifier("bbox_envelope"),
       info("bbox_envelope", "bbox_envelope(wkt) - struct<minx,miny,maxx,maxy>"),
-      (es: Seq[Expression]) => {
-        // AND-of-comparisons over envelope fields also prunes (the rule
-        // extracts a box from them), so resolving THIS function must
-        // install the rule too — not just bbox_intersects
-        installBboxPruning()
-        VectorFunctions.expectArity(es, 1, "bbox_envelope(wkt)")
-        GeoFunctions.BboxEnvelope(es.head)
-      }))
+      (es: Seq[Expression]) => { VectorFunctions.expectArity(es, 1, "bbox_envelope(wkt)")
+        GeoFunctions.BboxEnvelope(es.head) }))
     ext.injectFunction((FunctionIdentifier("bbox_extent"),
       info("bbox_extent", "bbox_extent(wkt) - aggregate union envelope of a group"),
       (es: Seq[Expression]) => { VectorFunctions.expectArity(es, 1, "bbox_extent(wkt)")

@@ -197,10 +197,6 @@ object GeoFunctions {
     reg.createOrReplaceTempFunction("bbox_extent",
       (es: Seq[Expression]) => { VectorFunctions.expectArity(es, 1, "bbox_extent(wkt)")
         BboxExtent(es.head) }, "scala_udf")
-    // bbox chunk pruning for Zarr scans ("User Provided Optimizers" runs
-    // post-pushdown, where DataSourceV2ScanRelation exists); GraftExtensions
-    // sessions install the same rule from the geo function builders
-    graft.plans.ZarrBboxPruning.installInto(spark)
   }
 
   /** Column helpers (require `register(spark)` on the active session). */

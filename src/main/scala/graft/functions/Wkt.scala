@@ -22,8 +22,21 @@ object Wkt {
    *  corrupt the envelope via parity flip), so the geometry is UNKNOWN
    *  (null), per this function's contract. Exponent letters inside numbers
    *  ("1e5") are not standalone tokens: they follow a digit or dot. */
-  private val Keywords = Set("point", "linestring", "polygon", "multipoint",
+  private val Keywords = Array("point", "linestring", "polygon", "multipoint",
     "multilinestring", "multipolygon", "geometrycollection", "empty")
+
+  /** `s(i until i + len)` is a [[Keywords]] entry, ignoring case. Compared
+   *  in place: tokens are ASCII letters, so this equals lower-casing the
+   *  token, without the substring and its lower-cased copy. */
+  private def isKeyword(s: String, i: Int, len: Int): Boolean = {
+    var k = 0
+    while (k < Keywords.length) {
+      val kw = Keywords(k)
+      if (kw.length == len && s.regionMatches(true, i, kw, 0, len)) return true
+      k += 1
+    }
+    false
+  }
 
   private def only2dTokens(s: String): Boolean = {
     val n = s.length
@@ -41,9 +54,7 @@ object Wkt {
         val exponent = (c == 'e' || c == 'E') && j == i + 1 && i > 0 && {
           val p = s.charAt(i - 1); (p >= '0' && p <= '9') || p == '.'
         }
-        if (!exponent &&
-            !Keywords.contains(s.substring(i, j).toLowerCase(java.util.Locale.ROOT)))
-          return false
+        if (!exponent && !isKeyword(s, i, j - i)) return false
         i = j
       } else i += 1
     }

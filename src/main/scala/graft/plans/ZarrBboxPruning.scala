@@ -1,44 +1,59 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, GetStructField, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, PredicateHelper}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, GetStructField, GreaterThan, GreaterThanOrEqual, LeafExpression, LessThan, LessThanOrEqual, Literal, PredicateHelper}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types._
 
 import graft.functions.GeoFunctions.{BboxEnvelope, BboxIntersects}
 import graft.sources.ZarrScan
 
 /**
- * Post-pushdown optimizer rule making the reference's flagship STAC-style
- * search (reference: README.md:3-16) chunk-pruned: a `bbox_intersects(bbox,
- * x0, y0, x1, y1)` conjunct over a Zarr scan is planted into the [[ZarrScan]],
- * whose partition planning then skips every chunk range whose recorded
- * per-chunk envelope (`_graft_stats.json` — [[graft.zarr.ZarrStats]]) cannot
- * intersect the query box. The reference cannot do this: it declines filter
- * pushdown entirely (src/table_provider.rs:85), and bare Zarr v3 carries no
- * chunk statistics anyway.
+ * Post-pushdown optimizer rule for every `Filter` directly over a Zarr scan.
+ * It has two jobs.
+ *
+ * '''Bbox pruning.''' It makes the reference's flagship STAC-style search
+ * (reference: README.md:3-16) chunk-pruned: a `bbox_intersects(bbox, x0, y0,
+ * x1, y1)` conjunct over a Zarr scan is planted into the [[ZarrScan]], whose
+ * partition planning then skips every chunk whose recorded envelope
+ * (`_graft_stats.json` — [[graft.zarr.ZarrStats]]) cannot intersect the
+ * query box. The reference cannot do this: it declines filter pushdown
+ * entirely (src/table_provider.rs:85), and bare Zarr v3 carries no chunk
+ * statistics anyway. The `Filter` above the scan is left in place, so like
+ * all graft stats pruning this is advisory: wrong/stale envelopes cost I/O,
+ * never correctness.
+ *
+ * '''One compiled class per search shape.''' Spark writes boolean,
+ * integral, floating, date and timestamp literals into the generated Java
+ * source, and caches compiled classes by source text, so a search repeated
+ * with new constants compiles its whole stage again, on the driver and in
+ * the task. The rule swaps each such non-null literal in the filter for a
+ * [[ReferencedLiteral]], whose generated code reads the value from the
+ * class's `references` array: searches that differ only in constants then
+ * share one class. Strings and decimals already travel that way, and nulls
+ * stay literals.
  *
  * `bbox_intersects` is a custom Catalyst expression, so it can never reach
  * the DSv2 `pushFilters` path (Spark only translates standard expressions to
- * `sources.Filter`s) — hence this rule, which must run AFTER
- * `V2ScanRelationPushDown`. The only such batch reachable from user code is
- * "User Provided Optimizers" (`experimental.extraOptimizations`) — Spark's
- * "Pre CBO Rules" batch sits BEFORE early scan pushdown, so
- * `injectPreCBORule` never sees the scan (pinned by the GraftExtensions
- * SQL-path spec). Installed by `GeoFunctions.register` and by the
- * extension's `bbox_intersects` builder. The `Filter` above the scan is
- * left untouched, so like
- * all graft stats pruning this is advisory: wrong/stale envelopes cost I/O,
- * never correctness.
+ * `sources.Filter`s) — hence a rule that must run AFTER
+ * `V2ScanRelationPushDown`, which by then has also turned the literals the
+ * scan can prune with into `sources.Filter`s. The only such batch reachable
+ * from user code is "User Provided Optimizers"
+ * (`experimental.extraOptimizations`) — Spark's "Pre CBO Rules" batch sits
+ * BEFORE early scan pushdown, so `injectPreCBORule` never sees the scan. The
+ * rule has one install point: the [[graft.sources.ZarrTable]] constructor,
+ * which every Zarr relation (`format("zarr")` and
+ * [[graft.sources.ZarrCatalog]]) goes through during analysis, before the
+ * optimizer runs.
  */
 object ZarrBboxPruning extends Rule[LogicalPlan] with PredicateHelper {
 
   /** Idempotently install this rule into the session's "User Provided
-   *  Optimizers" batch — the single shared entry point for
-   *  `GeoFunctions.register` and the GraftExtensions function builders.
-   *  Synchronized: two threads resolving a geo function concurrently on
-   *  one session must not append the rule twice. */
+   *  Optimizers" batch. Synchronized: two threads resolving Zarr tables
+   *  concurrently on one session must not append the rule twice. */
   def installInto(session: org.apache.spark.sql.SparkSession): Unit =
     session.synchronized {
       if (!session.experimental.extraOptimizations.contains(this))
@@ -47,27 +62,39 @@ object ZarrBboxPruning extends Rule[LogicalPlan] with PredicateHelper {
     }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond, r: DataSourceV2ScanRelation)
-        if r.scan.isInstanceOf[ZarrScan] &&
-          r.scan.asInstanceOf[ZarrScan].bboxFilter.isEmpty =>
-      val scanCols = r.output.map(_.exprId).toSet
-      val conjuncts = splitConjunctivePredicates(cond)
-      // collect + headOption, NOT collectFirst: collectFirst stops at the
-      // first bbox_intersects conjunct even when its bounds are
-      // non-foldable (None after the for), discarding a later all-literal
-      // conjunct that could have pruned
-      val box = conjuncts.collect {
-        case BboxIntersects(Seq(a: AttributeReference, x0, y0, x1, y1))
-            if scanCols.contains(a.exprId) =>
-          for (vx0 <- lit(x0); vy0 <- lit(y0); vx1 <- lit(x1); vy1 <- lit(y1))
-            yield (a.name, vx0, vy0, vx1, vy1)
-      }.flatten.headOption.orElse(envelopeBox(conjuncts, scanCols))
-      box match {
-        case Some((col, x0, y0, x1, y1)) =>
-          val scan = r.scan.asInstanceOf[ZarrScan]
-          f.copy(child = r.copy(scan = scan.withBboxFilter(col, x0, y0, x1, y1)))
-        case None => f
-      }
+    case f @ Filter(cond, r: DataSourceV2ScanRelation) if r.scan.isInstanceOf[ZarrScan] =>
+      val scan = r.scan.asInstanceOf[ZarrScan]
+      val planted =
+        if (scan.bboxFilter.nonEmpty) r
+        else bboxBox(cond, r).fold(r) { case (col, x0, y0, x1, y1) =>
+          r.copy(scan = scan.withBboxFilter(col, x0, y0, x1, y1))
+        }
+      f.copy(condition = referenceLiterals(cond), child = planted)
+  }
+
+  /** The prune box `cond` puts on one of the scan's columns, if any. */
+  private def bboxBox(cond: Expression, r: DataSourceV2ScanRelation)
+      : Option[(String, Double, Double, Double, Double)] = {
+    val scanCols = r.output.map(_.exprId).toSet
+    val conjuncts = splitConjunctivePredicates(cond)
+    // collect + headOption, NOT collectFirst: collectFirst stops at the
+    // first bbox_intersects conjunct even when its bounds are
+    // non-foldable (None after the for), discarding a later all-literal
+    // conjunct that could have pruned
+    conjuncts.collect {
+      case BboxIntersects(Seq(a: AttributeReference, x0, y0, x1, y1))
+          if scanCols.contains(a.exprId) =>
+        for (vx0 <- lit(x0); vy0 <- lit(y0); vx1 <- lit(x1); vy1 <- lit(y1))
+          yield (a.name, vx0, vy0, vx1, vy1)
+    }.flatten.headOption.orElse(envelopeBox(conjuncts, scanCols))
+  }
+
+  /** `cond` with each non-null literal of a type Spark inlines into the
+   *  generated source replaced by a [[ReferencedLiteral]]. */
+  private def referenceLiterals(cond: Expression): Expression = cond.transformUp {
+    case l @ Literal(v, BooleanType | ByteType | ShortType | IntegerType | LongType |
+        FloatType | DoubleType | DateType | TimestampType | TimestampNTZType) if v != null =>
+      ReferencedLiteral(l)
   }
 
   /**
@@ -137,5 +164,27 @@ object ZarrBboxPruning extends Rule[LogicalPlan] with PredicateHelper {
     case _ if e.foldable && e.dataType == DoubleType =>
       Option(e.eval(null)).map(_.asInstanceOf[Double])
     case _ => None
+  }
+}
+
+/**
+ * A non-null primitive [[Literal]] whose generated code reads its value from
+ * the generated class's `references` array, once, into a field — so the Java
+ * source does not depend on the value. It prints, folds and evaluates exactly
+ * like the literal it wraps; only the generated code differs.
+ */
+case class ReferencedLiteral(lit: Literal) extends LeafExpression {
+  override def dataType: DataType = lit.dataType
+  override def nullable: Boolean = false
+  override def foldable: Boolean = true
+  override def eval(input: InternalRow): Any = lit.value
+  override def toString: String = lit.toString
+  override def sql: String = lit.sql
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val javaType = CodeGenerator.javaType(dataType)
+    val ref = ctx.addReferenceObj("literal", lit.value, CodeGenerator.boxedType(dataType))
+    val field = ctx.addMutableState(javaType, "literal", v => s"$v = $ref.${javaType}Value();")
+    ExprCode(FalseLiteral, JavaCode.global(field, dataType))
   }
 }

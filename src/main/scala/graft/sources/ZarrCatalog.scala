@@ -116,12 +116,7 @@ class ZarrCatalog extends TableCatalog with SupportsNamespaces {
     // schema from the listing already in hand — ZarrSchema.infer would
     // re-list the group's metadata (one LIST + O(columns) reads on an
     // object store, ~10-100ms each), doubling planning latency per load
-    val n = arrays.head.length
-    arrays.find(_.length != n).foreach { a =>
-      throw new ZarrException(
-        s"child arrays must share one length: '${a.name}' has ${a.length}, expected $n")
-    }
-    new ZarrTable(rootUri, group, arrays, StructType(arrays.map(ZarrSchema.toField)),
+    new ZarrTable(rootUri, group, arrays, ZarrSchema.schemaOf(arrays, group),
       targetRows, chunkRows, None)
   }
 

@@ -84,13 +84,23 @@ class ZarrDataSource extends TableProvider with DataSourceRegister {
     p.getOrElse(throw new ZarrException("zarr source requires a path: .load(<store dir>)"))
   }
 
+  private def groupOf(options: CaseInsensitiveStringMap): String =
+    Option(options.get("group")).getOrElse("/")
+
   private def hadoopConf(): Configuration =
     SparkSession.active.sessionState.newHadoopConf()
 
+  /** (path, group, arrays) that [[inferSchema]] just listed. Spark calls
+   *  `inferSchema` and then `getTable` on one provider instance, and
+   *  `getTable` takes the listing from here instead of reading the group's
+   *  metadata a second time. */
+  private var inferred: Option[(String, String, Seq[ZarrArrayMeta])] = None
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val store = new ZarrStore(storePath(options), hadoopConf())
-    ZarrSchema.infer(store, Option(options.get("group")).getOrElse("/"))
+    val (path, group) = (storePath(options), groupOf(options))
+    val arrays = ZarrSchema.listArrays(new ZarrStore(path, hadoopConf()), group)
+    inferred = Some((path, group, arrays))
+    ZarrSchema.schemaOf(arrays, group)
   }
 
   override def getTable(
@@ -99,7 +109,7 @@ class ZarrDataSource extends TableProvider with DataSourceRegister {
       properties: java.util.Map[String, String]): Table = {
     val options = new CaseInsensitiveStringMap(properties)
     val path = storePath(options)
-    val group = Option(options.get("group")).getOrElse("/")
+    val group = groupOf(options)
     val targetRows = ZarrDataSource.numericOption(options, "target_partition_rows", 1L << 20, 1)
     val chunkRows = ZarrDataSource.numericIntOption(options, "chunk_rows", 1 << 20, 1)
     val shardRows = ZarrDataSource.numericIntOption(options, "shard_rows", 0, 0)
@@ -112,9 +122,11 @@ class ZarrDataSource extends TableProvider with DataSourceRegister {
       throw new ZarrException(s"zarr option zarr_format must be 2 or 3, got $zarrFormat")
     // a write target may not exist yet — build the table with the write
     // schema and no readable arrays (reads will fail with the store error)
-    val arrays =
+    val arrays = inferred.collect { case (`path`, `group`, as) => as }.getOrElse {
       try ZarrSchema.listArrays(new ZarrStore(path, hadoopConf()), group)
       catch { case _: ZarrException => Seq.empty[ZarrArrayMeta] }
+    }
+    inferred = None
     new ZarrTable(path, group, arrays, schema, targetRows, chunkRows, rowIndexCol,
       shardRows, compression, zarrFormat)
   }
@@ -132,6 +144,10 @@ class ZarrTable(
     compression: String = "zstd",
     zarrFormat: Int = 3)
   extends Table with SupportsRead with SupportsWrite {
+
+  // the one install point of the Zarr filter rule: every Zarr relation
+  // resolves through here during analysis, before the optimizer runs
+  SparkSession.getActiveSession.foreach(graft.plans.ZarrBboxPruning.installInto)
 
   override def name(): String = s"zarr:`$path`$group"
   override def schema(): StructType = tableSchema
@@ -383,10 +399,14 @@ class ZarrScan(
     if (pruningFilters.isEmpty && bboxFilter.isEmpty) None
     else rangeKeeperImpl
 
+  /** The session's Hadoop conf, built once per scan: the sidecar read and
+   *  the reader factory share it. */
+  private lazy val hadoopConf =
+    new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf())
+
   private def rangeKeeperImpl: Option[(Long, Long) => Boolean] = {
     val fullLen = arrays.headOption.map(_.length).getOrElse(0L)
-    val stats = ZarrStats.read(
-      new ZarrStore(path, SparkSession.active.sessionState.newHadoopConf()), group)
+    val stats = ZarrStats.read(new ZarrStore(path, hadoopConf.value), group)
       .filter(s => s.chunkRows > 0 && s.totalRows == fullLen &&
         s.nChunks.toLong == (fullLen + s.chunkRows - 1) / s.chunkRows)
     stats.map { s =>
@@ -428,16 +448,15 @@ class ZarrScan(
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf())
-    new ZarrPartitionReaderFactory(path, conf, requiredArrays, columnar, batchSize)
-  }
+  // lazy val, not def: physical planning asks once per BatchScanExec copy
+  private lazy val readerFactory =
+    new ZarrPartitionReaderFactory(path, hadoopConf, requiredArrays, columnar, batchSize)
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ZarrMicroBatchStream(path, group,
-      new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
-      requiredSchema.fieldNames.toSeq, targetRows)
+    new ZarrMicroBatchStream(path, group, hadoopConf, requiredSchema.fieldNames.toSeq, targetRows)
 }
 
 object ZarrScan {

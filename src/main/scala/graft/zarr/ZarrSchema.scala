@@ -213,8 +213,12 @@ object ZarrSchema {
     }
   }
 
-  def infer(store: ZarrStore, group: String): StructType = {
-    val arrays = listArrays(store, group)
+  def infer(store: ZarrStore, group: String): StructType =
+    schemaOf(listArrays(store, group), group)
+
+  /** The table schema of `group`'s listed child arrays; they must be
+   *  non-empty and share one length. */
+  def schemaOf(arrays: Seq[ZarrArrayMeta], group: String): StructType = {
     if (arrays.isEmpty) throw new ZarrException(s"group '$group' has no child arrays")
     val n = arrays.head.length
     arrays.find(_.length != n).foreach { a =>

@@ -70,6 +70,27 @@ class ObjectStoreSpec extends SparkSpec {
     assert(ms < 5000, s"latency amplification: $ms ms") // not O(rows) round-trips
   }
 
+  test("one load() + collect() opens the group document once") {
+    val dir = tempDir("zarr_mockfs_group")
+    spark.range(100).select(col("id"), (col("id") % 7).as("v"))
+      .coalesce(1).write.format("zarr").option("group", "/t")
+      .option("chunk_rows", "10").mode("overwrite").save(dir)
+    spark.sparkContext.hadoopConfiguration.set("fs.mockfs.impl",
+      classOf[MockObjectStoreFileSystem].getName)
+    val m = MockObjectStoreFileSystem
+    def groupDocOpens = m.openedPaths.toArray.count(_.toString.endsWith("/t/zarr.json"))
+    m.reset()
+    // schema inference lists the group; the table reuses that listing
+    assert(spark.read.format("zarr").option("group", "/t").load(s"mockfs://$dir")
+      .collect().length == 100)
+    assert(groupDocOpens == 1, s"group document opens: $groupDocOpens")
+    // a user-supplied schema skips inference, so the table lists it
+    m.reset()
+    assert(spark.read.format("zarr").option("group", "/t").schema("id LONG, v LONG")
+      .load(s"mockfs://$dir").collect().length == 100)
+    assert(groupDocOpens == 1, s"group document opens with a schema: $groupDocOpens")
+  }
+
   test("e2e non-file scheme: DSv2 write, read-back, and streaming through mockfs://") {
     val dir = tempDir("zarr_mockfs_e2e")
     spark.sparkContext.hadoopConfiguration.set("fs.mockfs.impl",
@@ -116,8 +137,11 @@ object MockObjectStoreFileSystem {
   val chunkOpens = new AtomicLong // opens of .../c/<i> or bare-index objects
   val lists = new AtomicLong
   val existsProbes = new AtomicLong
+  val openedPaths = new java.util.concurrent.ConcurrentLinkedQueue[String]
   @volatile var latencyMs: Long = 0
-  def reset(): Unit = { opens.set(0); chunkOpens.set(0); lists.set(0); existsProbes.set(0) }
+  def reset(): Unit = {
+    opens.set(0); chunkOpens.set(0); lists.set(0); existsProbes.set(0); openedPaths.clear()
+  }
   private[graft] def lag(): Unit = if (latencyMs > 0) Thread.sleep(latencyMs)
 }
 
@@ -127,6 +151,7 @@ class MockObjectStoreFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem 
   override def getUri: java.net.URI = java.net.URI.create("mockfs:///")
   override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int) = {
     opens.incrementAndGet()
+    openedPaths.add(f.toString)
     if (f.getParent != null && (f.getParent.getName == "c" || f.getName.forall(_.isDigit)))
       chunkOpens.incrementAndGet()
     lag()

@@ -68,6 +68,12 @@ class ZarrPartitionMathSpec extends SparkSpec {
     assert(parts == Seq((0L, 1234L)))
   }
 
+  test("a scan builds one reader factory, however often planning asks for it") {
+    spark // the factory's Hadoop conf comes from the active session
+    val s = scan(Seq(meta("x", 100L, 10L)), targetRows = 10L)
+    assert(s.createReaderFactory() eq s.createReaderFactory())
+  }
+
   test("empty table plans zero tasks") {
     assert(ranges(scan(Seq(meta("x", 0L, 1L << 20)), targetRows = 1L << 20)).isEmpty)
   }
@@ -89,10 +95,9 @@ class ZarrPartitionMathSpec extends SparkSpec {
 
   test("bbox pruning fires on an extensions-only session (SQL path)") {
     // a FRESH session built with extensions only — no register() call, so
-    // the optimizer rule must come from the extension's bbox_intersects
-    // function builder installing ZarrBboxPruning into the session's
-    // User Provided Optimizers batch (GraftExtensions deliberately does NOT
-    // use injectPreCBORule: pre-CBO runs before V2 scan pushdown)
+    // the optimizer rule must come from resolving the Zarr table, which
+    // installs ZarrBboxPruning into the session's User Provided Optimizers
+    // batch (not injectPreCBORule: pre-CBO runs before V2 scan pushdown)
     val dir = tempDir("zbbox_ext") + "/store.zarr"
     spark.range(100).select(col("id"),
         concat(lit("POLYGON (("),
@@ -122,9 +127,9 @@ class ZarrPartitionMathSpec extends SparkSpec {
       val q = fresh.sql("SELECT id FROM geo WHERE bbox_intersects(bbox, 34, 34, 36, 36)")
       assert(q.queryExecution.toRdd.getNumPartitions == 1) // chunk 3 only
       assert(q.collect().map(_.getLong(0)).sorted.toSeq == (33L to 37L))
-      // SQL using ONLY envelope-field comparisons must prune too — the
-      // bbox_envelope builder installs the same rule (a query can reach the
-      // extraction path without ever resolving bbox_intersects)
+      // SQL using ONLY envelope-field comparisons must prune too (a query
+      // can reach the extraction path without ever resolving
+      // bbox_intersects)
       val env = fresh.sql("""
         SELECT id FROM geo
         WHERE bbox_envelope(bbox).maxx >= 34 AND bbox_envelope(bbox).minx <= 36
