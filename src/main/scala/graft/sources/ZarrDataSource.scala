@@ -5,6 +5,7 @@ import java.util.OptionalLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -167,8 +168,7 @@ class ZarrTable(
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
     new ZarrWriteBuilder(path, group, info.schema(), chunkRows, rowIndexCol,
-      new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
-      shardRows, compression, zarrFormat)
+      HadoopConfBroadcast(SparkSession.active), shardRows, compression, zarrFormat)
 }
 
 class ZarrScanBuilder(
@@ -399,14 +399,11 @@ class ZarrScan(
     if (pruningFilters.isEmpty && bboxFilter.isEmpty) None
     else rangeKeeperImpl
 
-  /** The session's Hadoop conf, built once per scan: the sidecar read and
-   *  the reader factory share it. */
-  private lazy val hadoopConf =
-    new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf())
-
   private def rangeKeeperImpl: Option[(Long, Long) => Boolean] = {
     val fullLen = arrays.headOption.map(_.length).getOrElse(0L)
-    val stats = ZarrStats.read(new ZarrStore(path, hadoopConf.value), group)
+    // a driver-side read: a local conf, not the tasks' broadcast
+    val conf = SparkSession.active.sessionState.newHadoopConf()
+    val stats = ZarrStats.read(new ZarrStore(path, conf), group)
       .filter(s => s.chunkRows > 0 && s.totalRows == fullLen &&
         s.nChunks.toLong == (fullLen + s.chunkRows - 1) / s.chunkRows)
     stats.map { s =>
@@ -449,14 +446,15 @@ class ZarrScan(
   }
 
   // lazy val, not def: physical planning asks once per BatchScanExec copy
-  private lazy val readerFactory =
-    new ZarrPartitionReaderFactory(path, hadoopConf, requiredArrays, columnar, batchSize)
+  private lazy val readerFactory = new ZarrPartitionReaderFactory(path,
+    HadoopConfBroadcast(SparkSession.active), requiredArrays, columnar, batchSize)
 
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ZarrMicroBatchStream(path, group, hadoopConf, requiredSchema.fieldNames.toSeq, targetRows)
+    new ZarrMicroBatchStream(path, group, HadoopConfBroadcast(SparkSession.active),
+      requiredSchema.fieldNames.toSeq, targetRows)
 }
 
 object ZarrScan {
@@ -487,7 +485,7 @@ final case class ZarrInputPartition(start: Long, end: Long) extends InputPartiti
 
 class ZarrPartitionReaderFactory(
     path: String,
-    conf: SerializableHadoopConf,
+    val conf: Broadcast[SerializableHadoopConf],
     columns: Seq[ZarrArrayMeta],
     columnar: Boolean = true,
     batchSize: Int = 4096)
@@ -498,13 +496,13 @@ class ZarrPartitionReaderFactory(
   override def supportColumnarReads(partition: InputPartition): Boolean = columnar
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[ZarrInputPartition]
-    new ZarrPartitionReader(new ZarrStore(path, conf.value), columns, p.start, p.end)
+    new ZarrPartitionReader(new ZarrStore(path, conf.value.value), columns, p.start, p.end)
   }
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[ZarrInputPartition]
-    new ZarrColumnarPartitionReader(new ZarrStore(path, conf.value), columns, p.start, p.end,
-      batchSize)
+    new ZarrColumnarPartitionReader(new ZarrStore(path, conf.value.value), columns, p.start,
+      p.end, batchSize)
   }
 }
 

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 
@@ -25,13 +26,13 @@ case class ZarrOffset(rows: Long) extends Offset {
 class ZarrMicroBatchStream(
     path: String,
     group: String,
-    conf: SerializableHadoopConf,
+    conf: Broadcast[SerializableHadoopConf],
     requiredColumns: Seq[String],
     targetRows: Long)
   extends MicroBatchStream {
 
   private def freshArrays(): Seq[ZarrArrayMeta] = {
-    val found = ZarrSchema.listArrays(new ZarrStore(path, conf.value), group)
+    val found = ZarrSchema.listArrays(new ZarrStore(path, conf.value.value), group)
       .filter(a => requiredColumns.contains(a.name))
       .sortBy(a => requiredColumns.indexOf(a.name))
     // silently dropping a missing column would bind the remaining values to

@@ -6,6 +6,7 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
@@ -152,7 +153,7 @@ class ZarrStreamingWrite(
     schema: StructType,
     dataSchema: StructType,
     chunkRows: Int,
-    conf: SerializableHadoopConf,
+    conf: Broadcast[SerializableHadoopConf],
     optionShardRows: Int = 0,
     rowIdxOrdinal: Option[Int] = None)
   extends StreamingWrite {
@@ -192,7 +193,7 @@ class ZarrStreamingWrite(
           "rows routed per chunk) for distributed epochs")
     // appending onto an existing table: column names and chunk grid must match
     val existing =
-      try ZarrSchema.listArrays(new ZarrStore(path, conf.value),
+      try ZarrSchema.listArrays(new ZarrStore(path, conf.value.value),
         if (groupRel.isEmpty) "/" else s"/$groupRel")
       catch { case _: ZarrException => Seq.empty }
     if (existing.nonEmpty) {
@@ -327,7 +328,7 @@ class ZarrStreamingWrite(
    *  read) always fails the epoch. */
   private def existingState(healAbsent: Boolean)
       : (Map[String, String], Map[String, Seq[Int]]) = {
-    val store = new ZarrStore(path, conf.value)
+    val store = new ZarrStore(path, conf.value.value)
     try {
       val arrays = graft.zarr.ZarrSchema.listArrays(store,
         if (groupRel.isEmpty) "/" else s"/$groupRel")
@@ -357,11 +358,11 @@ class ZarrStreamingWrite(
       // marker-less (batch-created) table, published-length fallback after
       // a metadata-first crash would re-append the epoch's rows at the new
       // offset: silent duplicates.
-      val (e, rows) = ZarrStreamCommit.read(new ZarrStore(path, conf.value), groupRel)
+      val (e, rows) = ZarrStreamCommit.read(new ZarrStore(path, conf.value.value), groupRel)
       if (e >= 0) {
         val (attrs, tableDims) = existingState(healAbsent = true)
         ZarrWriteSupport.writeTableMetadata(
-          new Path(path).getFileSystem(conf.value), path, groupRel, dataSchema,
+          new Path(path).getFileSystem(conf.value.value), path, groupRel, dataSchema,
           rows, chunkRows, shardRows, attrsByName = attrs,
           dimsByName = ZarrWriteSupport.mergeDims(tableDims, msgs.map(_.dims),
             dataSchema, "zarr streaming sink"))
@@ -371,7 +372,7 @@ class ZarrStreamingWrite(
     val chunks = msgs.flatMap(_.chunks).sortBy(_._1)
     val allStats = msgs.flatMap(_.stats).sortBy(_.chunk)
     val (_, startRows) =
-      ZarrStreamCommit.resolveStart(new ZarrStore(path, conf.value), groupRel)
+      ZarrStreamCommit.resolveStart(new ZarrStore(path, conf.value.value), groupRel)
     // epoch coverage: dense whole chunks from the tail chunk, like the batch
     // commit — published metadata must never claim rows a gap would fake
     val totalRows =
@@ -398,7 +399,7 @@ class ZarrStreamingWrite(
       }
     val merged =
       ZarrStreamEpochCommit(chunks.toSeq, allStats.toSeq, totalRows, replayed = false)
-    val fs = new Path(path).getFileSystem(conf.value)
+    val fs = new Path(path).getFileSystem(conf.value.value)
     // ATOMIC publish for the sidecar and especially the MARKER: the marker
     // is the one document whose unparseability is a designed hard failure
     // (read() wedges the stream on a torn marker, by contract) — a
@@ -434,13 +435,13 @@ class ZarrStreamingWrite(
     if (c.stats.isEmpty) return None
     val nChunks = ((c.totalRows + chunkRows - 1) / chunkRows).toInt
     val fresh = c.stats.map(_.chunk).toSet
-    val old = ZarrStats.read(new ZarrStore(path, conf.value),
+    val old = ZarrStats.read(new ZarrStore(path, conf.value.value),
       if (groupRel.isEmpty) "/" else s"/$groupRel")
     val oldOk = old.filter(o => o.chunkRows == chunkRows &&
       (0 until nChunks).forall(i => fresh.contains(i.toLong) || i < o.nChunks))
     if (c.stats.map(_.chunk).min > 0 && oldOk.isEmpty) {
       // mid-stream without a usable previous sidecar → remove any stale one
-      val fs = new Path(path).getFileSystem(conf.value)
+      val fs = new Path(path).getFileSystem(conf.value.value)
       fs.delete(new Path(path, ZarrStats.relPath(groupRel)), false)
       return None
     }
@@ -484,7 +485,7 @@ class ZarrStreamingWriterFactory(
     schema: StructType,
     dataSchema: StructType,
     chunkRows: Int,
-    conf: SerializableHadoopConf,
+    conf: Broadcast[SerializableHadoopConf],
     shardRows: Int = 0,
     rowIdxOrdinal: Option[Int] = None)
   extends StreamingDataWriterFactory {
@@ -506,13 +507,13 @@ class ZarrStreamingDataWriter(
     dataSchema: StructType,
     chunkRows: Int,
     epochId: Long,
-    conf: SerializableHadoopConf,
+    conf: Broadcast[SerializableHadoopConf],
     shardRows: Int = 0,
     idxOrdinal: Option[Int] = None)
   extends DataWriter[InternalRow] {
 
-  private val fs = new Path(path).getFileSystem(conf.value)
-  private val store = new ZarrStore(path, conf.value)
+  private val fs = new Path(path).getFileSystem(conf.value.value)
+  private val store = new ZarrStore(path, conf.value.value)
   private val (lastEpoch, startRows) = ZarrStreamCommit.resolveStart(store, groupRel)
   /** A replay of an epoch the marker says is already applied → write nothing. */
   private val replay = lastEpoch >= epochId

@@ -9,6 +9,7 @@ import com.github.luben.zstd.Zstd
 
 import org.apache.hadoop.fs.Path
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
@@ -859,7 +860,7 @@ class ZarrWriteBuilder(
     schema: StructType,
     chunkRows: Int,
     rowIndexCol: Option[String],
-    conf: SerializableHadoopConf,
+    conf: Broadcast[SerializableHadoopConf],
     shardRows: Int = 0,
     compression: String = "zstd",
     zarrFormat: Int = 3)
@@ -894,7 +895,7 @@ class ZarrWrite(
     chunkRows: Int,
     rowIndexCol: Option[String],
     doTruncate: Boolean,
-    conf: SerializableHadoopConf,
+    conf: Broadcast[SerializableHadoopConf],
     shardRows: Int = 0,
     compression: String = "zstd",
     zarrFormat: Int = 3)
@@ -937,7 +938,7 @@ class ZarrWrite(
     if (!doTruncate) {
       val existing =
         try graft.zarr.ZarrSchema.listArrays(
-          new graft.zarr.ZarrStore(path, conf.value), s"/$groupRel")
+          new graft.zarr.ZarrStore(path, conf.value.value), s"/$groupRel")
         catch { case _: ZarrException => Seq.empty }
       if (existing.nonEmpty)
         throw new ZarrException(
@@ -994,7 +995,7 @@ class ZarrWrite(
     ZarrWriteSupport.attrsFromSchema(dataSchema)
     // overwrite: clear existing array dirs under the group BEFORE tasks write
     if (doTruncate) {
-      val fs = new Path(path).getFileSystem(conf.value)
+      val fs = new Path(path).getFileSystem(conf.value.value)
       val g = if (groupRel.isEmpty) new Path(path) else new Path(path, groupRel)
       if (fs.exists(g)) fs.delete(g, true)
       // root-group overwrite deletes the whole store dir (incl. .zmetadata)
@@ -1050,7 +1051,7 @@ class ZarrWrite(
     val dimsByName: Map[String, Seq[Int]] = ZarrWriteSupport.mergeDims(
       Map.empty, messages.map(_.asInstanceOf[ZarrCommit].dims).toSeq,
       dataSchema, "zarr write")
-    val fs = new Path(path).getFileSystem(conf.value)
+    val fs = new Path(path).getFileSystem(conf.value.value)
     def writeJson(p: Path, text: String): Unit = {
       val out = fs.create(p, true)
       try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
@@ -1102,7 +1103,7 @@ class ZarrWriterFactory(
     dataSchema: StructType,
     chunkRows: Int,
     idxOrdinal: Option[Int],
-    conf: SerializableHadoopConf,
+    conf: Broadcast[SerializableHadoopConf],
     shardRows: Int = 0,
     compression: String = "zstd",
     v2Keys: Boolean = false)
@@ -1120,13 +1121,13 @@ class ZarrDataWriter(
     dataSchema: StructType,
     chunkRows: Int,
     idxOrdinal: Option[Int],
-    conf: SerializableHadoopConf,
+    conf: Broadcast[SerializableHadoopConf],
     shardRows: Int = 0,
     compression: String = "zstd",
     v2Keys: Boolean = false)
   extends DataWriter[InternalRow] {
 
-  private val fs = new Path(path).getFileSystem(conf.value)
+  private val fs = new Path(path).getFileSystem(conf.value.value)
   private val dataOrdinals: Array[Int] =
     dataSchema.fields.map(f => schema.fieldIndex(f.name))
   private val ncols = dataOrdinals.length

@@ -1,9 +1,13 @@
 package graft.zarr
 
 import java.io.{IOException, ObjectInputStream, ObjectOutputStream}
+import java.lang.ref.WeakReference
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 
 /**
  * Store access over Hadoop `FileSystem` — one code path for `file://`,
@@ -103,10 +107,13 @@ object ZarrStore {
 }
 
 /**
- * Minimal serializable Hadoop `Configuration` wrapper so reader factories can
- * carry FS credentials/settings to executors.
+ * The payload of [[HadoopConfBroadcast]]: the session's Hadoop
+ * `Configuration` (FS credentials and settings) in a form Spark can
+ * broadcast to executors. Built only by that holder; tasks and the driver
+ * read the conf through the broadcast and never change it.
  */
-final class SerializableHadoopConf(@transient var value: Configuration) extends Serializable {
+final class SerializableHadoopConf private[zarr] (@transient var value: Configuration)
+    extends Serializable {
   @throws[IOException]
   private def writeObject(out: ObjectOutputStream): Unit = {
     out.defaultWriteObject()
@@ -117,5 +124,44 @@ final class SerializableHadoopConf(@transient var value: Configuration) extends 
     in.defaultReadObject()
     value = new Configuration(false)
     value.readFields(in)
+  }
+}
+
+/**
+ * The session's Hadoop conf as one broadcast, shared by every Zarr task the
+ * session launches. A task then carries the broadcast's handle, not the
+ * conf's entries (about 115 KB in a default local session, serialized into
+ * and deserialized out of every task binary).
+ *
+ * Each call builds `sessionState.newHadoopConf()` and broadcasts it again
+ * only when its entries differ from the cached one's (a
+ * `sparkContext.hadoopConfiguration` edit or any `spark.conf.set`, since
+ * the conf copies every SQL conf) or the `SparkContext` differs or has
+ * stopped. A replaced broadcast is never destroyed, because a running query
+ * may still hold it; `ContextCleaner` frees it once unreferenced. The
+ * context is held weakly, so a stopped one can be collected.
+ */
+object HadoopConfBroadcast {
+  private final class Cached(
+      val context: WeakReference[SparkContext],
+      val entries: java.util.Map[String, String],
+      val conf: Broadcast[SerializableHadoopConf])
+
+  private var cached: Cached = _
+
+  def apply(spark: SparkSession): Broadcast[SerializableHadoopConf] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val entries = new java.util.HashMap[String, String]
+    conf.forEach(e => entries.put(e.getKey, e.getValue))
+    val sc = spark.sparkContext
+    synchronized {
+      val c = cached
+      if (c != null && (c.context.get eq sc) && !sc.isStopped && c.entries == entries) c.conf
+      else {
+        val b = sc.broadcast(new SerializableHadoopConf(conf))
+        cached = new Cached(new WeakReference(sc), entries, b)
+        b
+      }
+    }
   }
 }

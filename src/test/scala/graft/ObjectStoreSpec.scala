@@ -138,9 +138,14 @@ object MockObjectStoreFileSystem {
   val lists = new AtomicLong
   val existsProbes = new AtomicLong
   val openedPaths = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  /** Conf key whose value, as this instance's conf holds it, each open and
+   *  create records with the path: which conf the caller's task carried. */
+  val ProbeKey = "graft.test.mockfs.probe"
+  val seenConf = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
   @volatile var latencyMs: Long = 0
   def reset(): Unit = {
     opens.set(0); chunkOpens.set(0); lists.set(0); existsProbes.set(0); openedPaths.clear()
+    seenConf.clear()
   }
   private[graft] def lag(): Unit = if (latencyMs > 0) Thread.sleep(latencyMs)
 }
@@ -152,10 +157,16 @@ class MockObjectStoreFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem 
   override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int) = {
     opens.incrementAndGet()
     openedPaths.add(f.toString)
+    seenConf.add((f.toString, getConf.get(ProbeKey)))
     if (f.getParent != null && (f.getParent.getName == "c" || f.getName.forall(_.isDigit)))
       chunkOpens.incrementAndGet()
     lag()
     super.open(f, bufferSize)
+  }
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: org.apache.hadoop.util.Progressable) = {
+    seenConf.add((f.toString, getConf.get(ProbeKey)))
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
   }
   override def listStatus(f: org.apache.hadoop.fs.Path) = {
     lists.incrementAndGet(); lag(); super.listStatus(f)

@@ -141,7 +141,7 @@ class ZarrStreamSinkSpec extends SparkSpec {
     // a REPLAYED epoch (what Spark delivers after the crash) must republish
     // the marker's shape — invoke the sink commit as the restarted driver would
     val write = new graft.sources.ZarrStreamingWrite(dir, "t", schema, schema, 4,
-      new graft.zarr.SerializableHadoopConf(hconf))
+      graft.zarr.HadoopConfBroadcast(spark))
     write.commit(0L, Array(
       graft.sources.ZarrStreamEpochCommit(Seq.empty, Seq.empty, 9L, replayed = true)))
     val healed = spark.read.format("zarr").option("group", "/t").load(dir)
@@ -179,7 +179,7 @@ class ZarrStreamSinkSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("vec", org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType, containsNull = false))))
     val write = new graft.sources.ZarrStreamingWrite(dir, "t", schema, schema, 4,
-      new graft.zarr.SerializableHadoopConf(hconf))
+      graft.zarr.HadoopConfBroadcast(spark))
     write.commit(0L, Array(
       graft.sources.ZarrStreamEpochCommit(Seq.empty, Seq.empty, 3L, replayed = true)))
     val healed = spark.read.format("zarr").option("group", "/t").load(dir)
