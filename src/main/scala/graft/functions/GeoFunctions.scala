@@ -55,14 +55,15 @@ object GeoFunctions {
 
   /** Static kernel for [[BboxEnvelope]]: parse → envelope row (null if empty). */
   def envelopeRow(wkt: UTF8String): InternalRow = {
-    val e = Wkt.envelope(wkt.toString)
+    val e = Wkt.envelope(wkt)
     if (e == null) null else InternalRow(e(0), e(1), e(2), e(3))
   }
 
   /**
    * bbox_intersects(wkt, minx, miny, maxx, maxy) → boolean.
    *
-   * Full `doGenCode` (straight static call into [[Wkt]]) so a bbox filter
+   * Full `doGenCode` (straight static call into [[Wkt]] on the column's
+   * `UTF8String`, never a `String` copy) so a bbox filter
    * stays inside the surrounding WholeStageCodegen span instead of forcing
    * the row-at-a-time CodegenFallback path; the registry builder casts the
    * box bounds to double up front ([[GeoFunctions.register]]), so neither
@@ -84,12 +85,21 @@ object GeoFunctions {
       }
     override def dataType: DataType = BooleanType
     override def nullable: Boolean = children.exists(_.nullable)
+    // the interpreted path: five locals and a null short-circuit per row,
+    // no per-row collection of child values
     override def eval(input: InternalRow): Any = {
-      val vs = children.map(_.eval(input))
-      if (vs.contains(null)) null
-      else Wkt.envelopeIntersects(vs.head.asInstanceOf[UTF8String].toString,
-        vs(1).asInstanceOf[Double], vs(2).asInstanceOf[Double],
-        vs(3).asInstanceOf[Double], vs(4).asInstanceOf[Double])
+      val wkt = children(0).eval(input)
+      if (wkt == null) return null
+      val minx = children(1).eval(input)
+      if (minx == null) return null
+      val miny = children(2).eval(input)
+      if (miny == null) return null
+      val maxx = children(3).eval(input)
+      if (maxx == null) return null
+      val maxy = children(4).eval(input)
+      if (maxy == null) return null
+      Wkt.envelopeIntersects(wkt.asInstanceOf[UTF8String], minx.asInstanceOf[Double],
+        miny.asInstanceOf[Double], maxx.asInstanceOf[Double], maxy.asInstanceOf[Double])
     }
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val evals = children.map(_.genCode(ctx))
@@ -102,7 +112,7 @@ object GeoFunctions {
           boolean ${ev.value} = false;
           if (!${ev.isNull}) {
             ${ev.value} = graft.functions.Wkt.envelopeIntersects(
-              ${evals(0).value}.toString(), ${evals(1).value},
+              ${evals(0).value}, ${evals(1).value},
               ${evals(2).value}, ${evals(3).value}, ${evals(4).value});
           }""")
     }
@@ -143,7 +153,7 @@ object GeoFunctions {
     override def update(buf: Array[Double], input: InternalRow): Array[Double] = {
       val v = child.eval(input)
       if (v != null) {
-        val e = Wkt.envelope(v.asInstanceOf[UTF8String].toString)
+        val e = Wkt.envelope(v.asInstanceOf[UTF8String])
         if (e != null) {
           if (e(0) < buf(0)) buf(0) = e(0)
           if (e(1) < buf(1)) buf(1) = e(1)

@@ -13,6 +13,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -35,7 +36,9 @@ import graft.zarr._
  *    chunk grid, which is what makes the source usable on a real cluster.
  *    Chunks are pruned one at a time, then adjacent kept chunks are
  *    coalesced up to `target_partition_rows` so tiny chunks don't explode
- *    the task count.
+ *    the task count — and no further than an even share of the kept rows
+ *    across the session's leaf parallelism, so a search that keeps two
+ *    chunks runs them as two tasks on two cores.
  *
  * Filter pushdown prunes chunks when the store carries the
  * `_graft_stats.json` sidecar our write path emits (per-chunk min/max/nulls
@@ -329,25 +332,45 @@ class ZarrScan(
    *  (one sidecar read).
    *
    *  A chunk here is one cell of the coarsest chunk grid among the required
-   *  columns. Each chunk is kept or skipped on its own; runs of adjacent
-   *  kept chunks are then coalesced, a range closing at a gap or where the
-   *  next chunk would take it past `step` rows. When nothing can be pruned
-   *  the walk strides a whole `step` at a time, so the plan is ranges cut
-   *  every `step` rows from 0 and no per-chunk work is spent. */
+   *  columns. Each chunk is kept or skipped on its own, once; runs of
+   *  adjacent kept chunks are then coalesced, a range closing at a gap or
+   *  where the next chunk would take it past `bound` rows. `bound` is
+   *  `step` (`target_partition_rows`, floored to whole chunks) unless an
+   *  even share of the kept rows across the session's leaf parallelism is
+   *  smaller — the bytes-per-core rule of Spark's file scans — so a search
+   *  that keeps a few chunks runs them on the idle cores instead of in one
+   *  task. A chunk is never split. When nothing can be pruned the kept rows
+   *  are the table's and the walk strides a whole `bound` at a time, so the
+   *  plan is ranges cut every `bound` rows from 0 and no per-chunk work is
+   *  spent. */
   private lazy val planned: ZarrScan.Plan = {
     val align = math.max(1L, requiredArrays.map(_.chunkLength).maxOption.getOrElse(tableRows))
     val step = math.max(align, (targetRows / align) * align)
     val chunks = (tableRows + align - 1) / align
+    var keptRows = tableRows
+    val kept = rangeKeeper.map { keep =>
+      val bits = new java.util.BitSet(Math.toIntExact(chunks))
+      keptRows = 0L
+      var c = 0
+      while (c < chunks) {
+        val (s, e) = (c * align, math.min((c + 1) * align, tableRows))
+        if (keep(s, e)) { bits.set(c); keptRows += e - s }
+        c += 1
+      }
+      bits
+    }
+    val cores = ZarrScan.leafParallelism
+    val share = (keptRows + cores - 1) / cores
+    val bound = math.min(step, math.max(align, (share + align - 1) / align * align))
     val ranges = Array.newBuilder[(Long, Long)]
     var pruned = 0L
     var open = -1L // start of the run being coalesced, -1 when none is open
-    val keep = rangeKeeper.getOrElse((_: Long, _: Long) => true)
-    val unit = if (rangeKeeper.isEmpty) step else align
+    val unit = if (kept.isEmpty) bound else align
     var s = 0L
     while (s < tableRows) {
       val e = math.min(s + unit, tableRows)
-      if (keep(s, e)) {
-        if (open >= 0 && e - open > step) { ranges += ((open, s)); open = s }
+      if (kept.forall(_.get((s / align).toInt))) {
+        if (open >= 0 && e - open > bound) { ranges += ((open, s)); open = s }
         if (open < 0) open = s
       } else {
         pruned += 1
@@ -460,6 +483,15 @@ class ZarrScan(
 object ZarrScan {
   /** Kept ranges plus the chunk counts they were planned from. */
   private final case class Plan(ranges: Array[(Long, Long)], chunks: Long, pruned: Long)
+
+  /** The session's leaf parallelism, read as Spark's own file scans read
+   *  it: `spark.sql.leafNodeDefaultParallelism`, else the context's default
+   *  parallelism. 1 (no split) outside a session. */
+  private def leafParallelism: Long =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).fold(1L) { s =>
+      s.sessionState.conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+        .getOrElse(s.sparkContext.defaultParallelism).toLong
+    }
 
   /** SQL metric names of the planning counts (driver-side). */
   val ChunksMetric = "chunks"

@@ -132,26 +132,57 @@ class ZarrStatsSpec extends SparkSpec {
     df.select("id").collect().map(_.getLong(0)).sorted.toSeq
 
   test("chunks are pruned one at a time, then kept neighbours coalesce into ranges") {
+    // one leaf core: no core is spare, so coalescing alone shapes the plan
+    withSQLConf("spark.sql.leafNodeDefaultParallelism" -> "1") {
+      val dir = writeStore()
+      val full = readWide(dir)
+      // nothing pruned: ranges cut every 40 rows from 0
+      assert(layout(full) == Seq((0L, 40L), (40L, 80L), (80L, 100L)))
+      val hi = full.filter(col("id") >= 95)
+      assert(layout(hi) == Seq((90L, 100L)))
+      assert(ids(hi) == (95L to 99L))
+      val band = full.filter(col("id") >= 33 && col("id") < 47)
+      assert(layout(band) == Seq((30L, 50L))) // chunks 3 and 4, one task
+      assert(ids(band) == (33L to 46L))
+      // statistics count the kept chunks' rows, not the ranges they sat in
+      val stats = scanOf(band).asInstanceOf[SupportsReportStatistics].estimateStatistics()
+      assert(stats.numRows().getAsLong == 20L)
+      val or2 = full.filter(col("id") < 10 || col("id") >= 90)
+      assert(layout(or2) == Seq((0L, 10L), (90L, 100L)))
+      assert(ids(or2) == (0L to 9L) ++ (90L to 99L))
+      // a run longer than target_partition_rows starts at its first kept chunk
+      val tail = full.filter(col("id") >= 15)
+      assert(layout(tail) == Seq((10L, 50L), (50L, 90L), (90L, 100L)))
+      assert(ids(tail) == (15L to 99L))
+    }
+  }
+
+  test("kept chunks split evenly across the session's cores, never past the target") {
+    // the shared session is local[4] and sets no leafNodeDefaultParallelism:
+    // the split falls back to the context's default parallelism
+    assert(spark.sparkContext.defaultParallelism == 4)
     val dir = writeStore()
     val full = readWide(dir)
-    // nothing pruned: ranges cut every 40 rows from 0
-    assert(layout(full) == Seq((0L, 40L), (40L, 80L), (80L, 100L)))
+    // 100 rows over 4 cores → 25, rounded up to whole 10-row chunks
+    assert(layout(full) == Seq((0L, 30L), (30L, 60L), (60L, 90L), (90L, 100L)))
+    val band = full.filter(col("id") >= 33 && col("id") < 47)
+    assert(layout(band) == Seq((30L, 40L), (40L, 50L))) // two kept chunks, two tasks
+    assert(scanOf(band).asInstanceOf[SupportsReportStatistics].estimateStatistics()
+      .numRows().getAsLong == 20L)
     val hi = full.filter(col("id") >= 95)
     assert(layout(hi) == Seq((90L, 100L)))
-    assert(ids(hi) == (95L to 99L))
-    val band = full.filter(col("id") >= 33 && col("id") < 47)
-    assert(layout(band) == Seq((30L, 50L))) // chunks 3 and 4, one task
+    for (q <- Seq(full, band, hi, full.filter(col("id") < 10 || col("id") >= 90),
+        full.filter(col("id") >= 15))) {
+      assert(layout(q).forall { case (s, e) => e - s <= 40L }, layout(q))
+      val oneCore = withSQLConf("spark.sql.leafNodeDefaultParallelism" -> "1")(ids(q))
+      assert(ids(q) == oneCore)
+      assert(q.collect().nonEmpty)
+      val node = new AdaptiveSparkPlanHelper {}.collect(q.queryExecution.executedPlan) {
+        case b: BatchScanExec => b
+      }.head
+      assert(node.metrics(ZarrScan.RangesPlannedMetric).value == layout(q).length.toLong)
+    }
     assert(ids(band) == (33L to 46L))
-    // statistics count the kept chunks' rows, not the ranges they sat in
-    val stats = scanOf(band).asInstanceOf[SupportsReportStatistics].estimateStatistics()
-    assert(stats.numRows().getAsLong == 20L)
-    val or2 = full.filter(col("id") < 10 || col("id") >= 90)
-    assert(layout(or2) == Seq((0L, 10L), (90L, 100L)))
-    assert(ids(or2) == (0L to 9L) ++ (90L to 99L))
-    // a run longer than target_partition_rows starts at its first kept chunk
-    val tail = full.filter(col("id") >= 15)
-    assert(layout(tail) == Seq((10L, 50L), (50L, 90L), (90L, 100L)))
-    assert(ids(tail) == (15L to 99L))
   }
 
   test("bbox pruning keeps only the chunk under the box inside a multi-chunk range") {

@@ -366,10 +366,9 @@ class ZarrStreamSinkSpec extends SparkSpec {
       .option("group", "/t").option("chunk_rows", "8").option("shard_rows", "2")
       .option("checkpointLocation", tempDir("zsink_shard_bad_ckpt"))
       .start(dir)
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q3.processAllAvailable()
+    val e = interceptQuietly[org.apache.spark.sql.streaming.StreamingQueryException] {
+      try q3.processAllAvailable() finally q3.stop()
     }
-    q3.stop()
     assert(e.getMessage.contains("must match") ||
       Option(e.getCause).exists(_.getMessage.contains("must match")))
   }
@@ -483,10 +482,9 @@ class ZarrStreamSinkSpec extends SparkSpec {
       .start(dir2)
     q3.processAllAvailable() // epoch 0: replayed no-op
     mem3.addData((5L, (0 until 4).map(_.toFloat)))
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q3.processAllAvailable()
+    val e = interceptQuietly[org.apache.spark.sql.streaming.StreamingQueryException] {
+      try q3.processAllAvailable() finally q3.stop()
     }
-    q3.stop()
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(m => m.contains("ragged") || m.contains("trailing")),
@@ -593,8 +591,8 @@ class ZarrStreamSinkSpec extends SparkSpec {
       .start(dir)
     try {
       mem.addData((0L until 8L).map(i => IdxDoc(i, i, s"w$i")): _*)
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q.processAllAvailable()
+      val e = interceptQuietly[org.apache.spark.sql.streaming.StreamingQueryException] {
+        try q.processAllAvailable() finally q.stop()
       }
       def hasMsg(t: Throwable): Boolean =
         t != null && (t.getMessage != null &&
@@ -625,8 +623,8 @@ class ZarrStreamSinkSpec extends SparkSpec {
       q.processAllAvailable()
       // epoch 2 restarts its index at 0 — behind the committed row count
       mem.addData(IdxDoc(0, 6, "w6"))
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q.processAllAvailable()
+      val e = interceptQuietly[org.apache.spark.sql.streaming.StreamingQueryException] {
+        try q.processAllAvailable() finally q.stop()
       }
       def hasMsg(t: Throwable): Boolean =
         t != null && (t.getMessage != null && t.getMessage.contains("behind the committed") ||
@@ -652,10 +650,9 @@ class ZarrStreamSinkSpec extends SparkSpec {
       .option("group", "/t").option("chunk_rows", "4")
       .option("checkpointLocation", tempDir("zsink_dtype_ckpt"))
       .start(dir)
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q.processAllAvailable()
+    val e = interceptQuietly[org.apache.spark.sql.streaming.StreamingQueryException] {
+      try q.processAllAvailable() finally q.stop()
     }
-    q.stop()
     def hasMsg(t: Throwable): Boolean =
       t != null && (t.getMessage != null && t.getMessage.contains("re-declare") ||
         hasMsg(t.getCause))
@@ -680,10 +677,9 @@ class ZarrStreamSinkSpec extends SparkSpec {
       .option("group", "/t").option("chunk_rows", "8")
       .option("checkpointLocation", tempDir("zsink_bad_ckpt"))
       .start(dir)
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q.processAllAvailable()
+    val e = interceptQuietly[org.apache.spark.sql.streaming.StreamingQueryException] {
+      try q.processAllAvailable() finally q.stop()
     }
-    q.stop()
     assert(e.getMessage.contains("must match") ||
       Option(e.getCause).exists(_.getMessage.contains("must match")))
   }

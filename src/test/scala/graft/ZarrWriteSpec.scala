@@ -330,7 +330,7 @@ class ZarrWriteSpec extends SparkSpec {
     // drop Hadoop LocalFS's .crc sidecar so OUR index checksum is what fires
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(dir, "t", "id", "c", ".0.crc"))
-    val e = intercept[Throwable] {
+    val e = interceptQuietly[Throwable] {
       spark.read.format("zarr").option("group", "/t").load(dir).collect()
     }
     val messages = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
@@ -429,7 +429,7 @@ class ZarrWriteSpec extends SparkSpec {
   test("failed write leaves no readable table (zarr.json only lands at commit)") {
     val dir = tempDir("zw_crash") + "/store.zarr"
     // chunk split across tasks → commit-time validation rejects the job
-    intercept[Throwable] {
+    interceptQuietly[Throwable] {
       spark.range(1000).select(col("id").as("idx"), col("id").as("v"))
         .repartition(8, col("idx"))
         .write.format("zarr").option("group", "/g")
@@ -446,7 +446,7 @@ class ZarrWriteSpec extends SparkSpec {
   test("chunks split across tasks are rejected at commit") {
     val dir = tempDir("zw_split") + "/store.zarr"
     // hash-repartition on idx scatters chunk rows across tasks → must fail
-    val e = intercept[Throwable] {
+    val e = interceptQuietly[Throwable] {
       spark.range(1000).select(col("id").as("idx"), col("id").as("v"))
         .repartition(8, col("idx"))
         .sortWithinPartitions("idx")
