@@ -56,21 +56,14 @@ object AtRest {
   def fsFor(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Write-then-rename, so no reader (or replay) ever sees a partial
-   *  file — every pointer/sidecar/marker the recovery paths depend on
-   *  goes through here. The tmp name is writer-unique so two concurrent
-   *  writers (e.g. sharded ingest streams adopting the same sidecar)
-   *  cannot clobber each other's in-flight tmp; the loser of the final
-   *  rename race fails loudly on stores where rename won't overwrite. */
-  def writeFile(fs: FileSystem, p: Path, bytes: Array[Byte]): Unit = {
-    val tmp = new Path(p.getParent,
-      s".tmp-${p.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new IllegalStateException(s"atomic write rename $tmp -> $p failed")
-  }
+  /** Write-then-rename ([[graft.zarr.AtomicPublish]]), so no reader (or
+   *  replay) ever sees a partial or a missing file — every pointer,
+   *  sidecar and marker the recovery paths depend on goes through here.
+   *  The temp name is writer-unique, so two concurrent writers (e.g.
+   *  sharded ingest streams adopting the same sidecar) cannot clobber
+   *  each other's in-flight temp file; the last rename wins. */
+  def writeFile(fs: FileSystem, p: Path, bytes: Array[Byte]): Unit =
+    graft.zarr.AtomicPublish.write(fs, p, bytes)
 
   def readFile(fs: FileSystem, p: Path): Array[Byte] = {
     val st = fs.getFileStatus(p)
@@ -278,9 +271,11 @@ object AtRest {
   def readMetaIn(spark: SparkSession, root: String, dir: String): Map[String, String] = {
     val fs = fsFor(spark, dir)
     val p = new Path(dir, "_meta.json")
-    // writeFile swaps via delete+rename, so a sidecar can vanish for a
-    // moment when a SAME-CONTENT concurrent writer (two sharded adopters)
-    // is mid-swap — retry through the window instead of reporting it gone
+    // on a store whose rename cannot replace a file, writeFile's fallback
+    // (FileContext's generic overwrite) deletes before it renames, so a
+    // sidecar can vanish for a moment when a SAME-CONTENT concurrent writer
+    // (two sharded adopters) is mid-swap — retry through the window
+    // instead of reporting it gone
     var attempt = 0
     while (true) {
       try {
@@ -488,8 +483,7 @@ object AtRest {
       catch { case _: java.io.IOException => "" }
     }.getOrElse("")
     if (holder == owner && holder.nonEmpty) {
-      // refresh the heartbeat; writeFile's delete+rename opens a brief
-      // no-lease window, so a lost rename race must not abort a healthy
+      // refresh the heartbeat; a failed publish must not abort a healthy
       // same-owner stream — re-check who actually holds it instead
       try writeFile(fs, p, utf8(leaseBody(owner)))
       catch { case _: IllegalStateException =>

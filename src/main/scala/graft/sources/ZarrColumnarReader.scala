@@ -16,8 +16,8 @@ import graft.zarr._
  *
  * Batches never span a chunk boundary *unnecessarily*: each column keeps the
  * one currently-needed decoded chunk, rows are visited in ascending order, so
- * every chunk is fetched + decoded exactly once per task — the same bounded
- * memory contract as [[ZarrPartitionReader]].
+ * every chunk is fetched + decoded exactly once per task and task memory
+ * stays at one decoded chunk per column whatever the range size.
  */
 class ZarrColumnarPartitionReader(
     store: ZarrStore,

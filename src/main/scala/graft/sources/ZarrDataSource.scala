@@ -161,11 +161,9 @@ class ZarrTable(
       TableCapability.STREAMING_WRITE).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // columnar=false forces the row reader (benchmark/debug escape hatch);
     // batch_size tunes ColumnarBatch row count (default 4096, parquet's)
-    val columnar = Option(options.get("columnar")).forall(_.toBoolean)
     val batchSize = ZarrDataSource.numericIntOption(options, "batch_size", 4096, 1)
-    new ZarrScanBuilder(path, group, arrays, tableSchema, targetRows, columnar, batchSize)
+    new ZarrScanBuilder(path, group, arrays, tableSchema, targetRows, batchSize)
   }
 
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -180,7 +178,6 @@ class ZarrScanBuilder(
     arrays: Seq[ZarrArrayMeta],
     fullSchema: StructType,
     targetRows: Long,
-    columnar: Boolean = true,
     batchSize: Int = 4096)
   extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownLimit
   with SupportsPushDownAggregates
@@ -251,7 +248,7 @@ class ZarrScanBuilder(
             "answer COUNT(*) (store missing, or a write target not yet committed)")
       new ZarrCountStarScan(arrays.head.length)
     } else new ZarrScan(path, group, arrays, requiredSchema, targetRows, limit, pruningFilters,
-      columnar, batchSize)
+      batchSize)
 }
 
 /** Completely-pushed COUNT(*): one partition, one row, zero chunk I/O. */
@@ -286,7 +283,6 @@ class ZarrScan(
     targetRows: Long,
     limit: Option[Long] = None,
     pruningFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-    columnar: Boolean = true,
     batchSize: Int = 4096,
     /** (column, minx, miny, maxx, maxy) from a `bbox_intersects` predicate,
      *  planted post-pushdown by [[graft.plans.ZarrBboxPruning]]: chunk ranges
@@ -299,7 +295,7 @@ class ZarrScan(
   def withBboxFilter(col: String, minx: Double, miny: Double,
       maxx: Double, maxy: Double): ZarrScan =
     new ZarrScan(path, group, arrays, requiredSchema, targetRows, limit, pruningFilters,
-      columnar, batchSize, Some((col, minx, miny, maxx, maxy)))
+      batchSize, Some((col, minx, miny, maxx, maxy)))
 
   private val tableRows: Long = {
     val n = arrays.headOption.map(_.length).getOrElse(0L)
@@ -470,7 +466,7 @@ class ZarrScan(
 
   // lazy val, not def: physical planning asks once per BatchScanExec copy
   private lazy val readerFactory = new ZarrPartitionReaderFactory(path,
-    HadoopConfBroadcast(SparkSession.active), requiredArrays, columnar, batchSize)
+    HadoopConfBroadcast(SparkSession.active), requiredArrays, batchSize)
 
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
@@ -515,68 +511,23 @@ final class ZarrRangesPlannedMetric
 
 final case class ZarrInputPartition(start: Long, end: Long) extends InputPartition
 
+/** The one Zarr read path: every scan, batch or micro-batch, reads
+ *  through [[ZarrColumnarPartitionReader]]. k-D columns are columnar too:
+ *  rows land in nested ArrayType vectors, the contiguous fast path
+ *  bulk-copying each row's element block into the leaf child vector. */
 class ZarrPartitionReaderFactory(
     path: String,
     val conf: Broadcast[SerializableHadoopConf],
     columns: Seq[ZarrArrayMeta],
-    columnar: Boolean = true,
     batchSize: Int = 4096)
   extends PartitionReaderFactory {
-  // k-D columns are columnar too (round 9): rows land in nested ArrayType
-  // vectors — the contiguous fast path bulk-copies each row's element
-  // block into the leaf child vector
-  override def supportColumnarReads(partition: InputPartition): Boolean = columnar
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[ZarrInputPartition]
-    new ZarrPartitionReader(new ZarrStore(path, conf.value.value), columns, p.start, p.end)
-  }
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new ZarrException("Zarr scans are columnar: Spark must call createColumnarReader")
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[ZarrInputPartition]
     new ZarrColumnarPartitionReader(new ZarrStore(path, conf.value.value), columns, p.start,
       p.end, batchSize)
-  }
-}
-
-/**
- * Streams rows of [start, end); per column keeps the one currently-needed
- * decoded chunk (rows are visited in order, so each chunk is fetched and
- * decoded exactly once per task — bounded memory regardless of range size).
- */
-class ZarrPartitionReader(
-    store: ZarrStore,
-    columns: Seq[ZarrArrayMeta],
-    start: Long,
-    end: Long)
-  extends PartitionReader[InternalRow] {
-
-  private var row = start - 1
-  private val ncols = columns.length
-  private val chunkIdx = Array.fill[Long](ncols)(-1L)
-  private val chunks = new Array[ColumnChunk](ncols)
-  private val current = new Array[Any](ncols)
-
-  override def next(): Boolean = {
-    row += 1
-    if (row >= end) return false
-    var c = 0
-    while (c < ncols) {
-      val meta = columns(c)
-      val ci = row / meta.chunkLength
-      if (ci != chunkIdx(c)) {
-        if (chunks(c) != null) chunks(c).close()
-        chunks(c) = ZarrCodecs.fetchChunk(store, meta, ci)
-        chunkIdx(c) = ci
-      }
-      current(c) = chunks(c).get((row % meta.chunkLength).toInt)
-      c += 1
-    }
-    true
-  }
-
-  override def get(): InternalRow = new GenericInternalRow(current.clone())
-  override def close(): Unit = {
-    var c = 0
-    while (c < ncols) { if (chunks(c) != null) chunks(c).close(); c += 1 }
   }
 }

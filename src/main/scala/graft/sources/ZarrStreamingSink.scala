@@ -406,8 +406,7 @@ class ZarrStreamingWrite(
     // truncate-then-write crash window here would turn a driver crash into
     // a permanently dead stream
     def writeFile(rel: String, text: String): Unit =
-      ZarrWriteSupport.atomicWrite(fs, new Path(path, rel),
-        text.getBytes(StandardCharsets.UTF_8))
+      AtomicPublish.write(fs, new Path(path, rel), text.getBytes(StandardCharsets.UTF_8))
     // order: stats → MARKER → metadata. The marker precedes the shape
     // publish so a crash in between is healed by the replay branch above;
     // metadata-before-marker on a marker-less table would instead replay
@@ -580,8 +579,9 @@ class ZarrStreamingDataWriter(
       finals(c) = chunkObjPath(f.name)
       // stream aside, publish by atomic rename: the tail rewrite covers
       // rows concurrent readers can already see
-      tmps(c) = new Path(finals(c).getParent, finals(c).getName + ".tmp")
-      outs(c) = fs.create(tmps(c), true)
+      val (tmp, out) = AtomicPublish.stage(fs, finals(c))
+      tmps(c) = tmp
+      outs(c) = out
       idxBufs(c) = java.nio.ByteBuffer.allocate(nInner * 16)
         .order(java.nio.ByteOrder.LITTLE_ENDIAN)
       accs(c) = new ZarrWriteSupport.ChunkStatsAcc(f.dataType)
@@ -722,7 +722,7 @@ class ZarrStreamingDataWriter(
           outs(c).close(); outs(c) = null
           // atomic publish: the tail-shard rewrite covers rows readers can
           // already see — the streamed object replaces the old one whole
-          ZarrWriteSupport.atomicRename(fs, tmps(c), finals(c))
+          AtomicPublish.publish(fs, tmps(c), finals(c))
           val (mn, mx, nl) = accs(c).result()
           mins(c) = mn; maxs(c) = mx; nulls(c) = nl
           if (envAccs(c) != null) envs(c) = envAccs(c).result()
@@ -748,7 +748,7 @@ class ZarrStreamingDataWriter(
             } else ZarrWriteSupport.encodeChunk(f.dataType, buffers(c), count, chunkRows)
           // atomic publish: the tail-chunk rewrite covers rows readers can
           // already see — truncate-then-write would expose a partial object
-          ZarrWriteSupport.atomicWrite(fs, chunkObjPath(f.name, leafInfo(c)._2), bytes)
+          AtomicPublish.write(fs, chunkObjPath(f.name, leafInfo(c)._2), bytes)
           c += 1
         }
       }

@@ -51,26 +51,6 @@ import graft.zarr.{SerializableHadoopConf, ZarrException}
  */
 object ZarrWriteSupport {
 
-
-  /** Write-aside + atomic rename (the pattern writeTableMetadata uses for
-   *  zarr.json): an in-place truncate-then-write of an object a concurrent
-   *  reader may fetch (the streaming sink's tail-chunk rewrite covers
-   *  already-published rows) can expose a partial object mid-write.
-   *
-   *  The rename-with-OVERWRITE is the whole point: a delete-then-rename
-   *  fallback would open a window in which a concurrent reader finds the
-   *  chunk object missing and silently decodes fill values for rows the
-   *  sink already published. So transient rename failures are retried and
-   *  a filesystem that cannot atomically overwrite fails the task loudly
-   *  (Spark's task retry covers transient causes; a genuinely unsupported
-   *  filesystem must not silently lose the atomicity guarantee). */
-  def atomicWrite(fs: org.apache.hadoop.fs.FileSystem, p: Path, bytes: Array[Byte]): Unit = {
-    val tmp = new Path(p.getParent, p.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    atomicRename(fs, tmp, p)
-  }
-
   /** Delete a stale store-root consolidated `.zmetadata` after a
    *  destructive operation (overwrite, DROP TABLE/NAMESPACE): zarr-python
    *  consolidates at the STORE ROOT with group-prefixed keys, so the
@@ -84,28 +64,6 @@ object ZarrWriteSupport {
     val rootZmeta = new Path(storeRoot, ".zmetadata")
     if (fs.exists(rootZmeta)) fs.delete(rootZmeta, false)
   }
-
-  /** The publish half of [[atomicWrite]], usable when the object was
-   *  STREAMED to `tmp` (the sink's sharded tail path writes gigabyte-scale
-   *  shards through an open stream — they must never exist as one byte
-   *  array — yet still needs the same atomic replace). */
-  def atomicRename(fs: org.apache.hadoop.fs.FileSystem, tmp: Path, p: Path): Unit = {
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, fs.getConf)
-    var attempt = 0
-    var lastFailure: Throwable = null
-    while (attempt < 3) {
-      try {
-        fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        return
-      } catch { case e: Exception => lastFailure = e; attempt += 1 }
-    }
-    throw new ZarrException(
-      s"cannot atomically publish chunk object $p after 3 attempts — " +
-        "this filesystem must support FileContext.rename(OVERWRITE); a " +
-        "delete-then-rename fallback would expose a missing-object window " +
-        s"to concurrent readers (last failure: $lastFailure)")
-  }
-
 
   /** Column names are interpolated into zarr.json / consolidated-metadata
    *  JSON and become directory names: a quote or backslash would commit
@@ -435,23 +393,9 @@ object ZarrWriteSupport {
       dimsByName: Map[String, Seq[Int]] = Map.empty): Unit = {
     // atomic publish: the streaming sink REWRITES these documents on every
     // epoch while the micro-batch source polls them for growth — a truncate-
-    // then-write create() lets the reader observe a partial document. Write
-    // aside + rename; object stores give atomic PUT for free.
-    def writeJson(p: Path, text: String): Unit = {
-      val tmp = new Path(p.getParent, p.getName + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
-      try {
-        // FileContext rename with OVERWRITE is the atomic-replace API
-        // (plain FileSystem.rename refuses to clobber on most impls)
-        org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, fs.getConf)
-          .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      } catch { case _: Exception =>
-        fs.delete(p, false)
-        if (!fs.rename(tmp, p))
-          throw new ZarrException(s"cannot publish metadata document $p")
-      }
-    }
+    // then-write create() lets the reader observe a partial document
+    def writeJson(p: Path, text: String): Unit =
+      graft.zarr.AtomicPublish.write(fs, p, text.getBytes(StandardCharsets.UTF_8))
     // array docs FIRST, the table group's doc LAST: the group doc is the
     // publish point, and it embeds a consolidated copy of every child array
     // document (zarr-python v3's consolidated_metadata convention) so a
@@ -544,7 +488,7 @@ object ZarrWriteSupport {
       compression: String = "zstd",
       dimsByName: Map[String, Seq[Int]] = Map.empty): Unit = {
     def writeJson(p: Path, text: String): Unit =
-      atomicWrite(fs, p, text.getBytes(StandardCharsets.UTF_8))
+      graft.zarr.AtomicPublish.write(fs, p, text.getBytes(StandardCharsets.UTF_8))
     val groupDir = if (groupRel.isEmpty) new Path(path) else new Path(path, groupRel)
     val arrayDocs = dataSchema.fields.map { f =>
       val dims = dimsByName.getOrElse(f.name, Nil)
@@ -1052,10 +996,8 @@ class ZarrWrite(
       Map.empty, messages.map(_.asInstanceOf[ZarrCommit].dims).toSeq,
       dataSchema, "zarr write")
     val fs = new Path(path).getFileSystem(conf.value.value)
-    def writeJson(p: Path, text: String): Unit = {
-      val out = fs.create(p, true)
-      try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    }
+    def writeJson(p: Path, text: String): Unit =
+      graft.zarr.AtomicPublish.write(fs, p, text.getBytes(StandardCharsets.UTF_8))
     // chunk-stats sidecar, merged from the tasks' per-chunk reports; written
     // BEFORE zarr.json so a table is never readable with stats still missing
     // (stats-less is fine — the scan treats them as advisory — but this

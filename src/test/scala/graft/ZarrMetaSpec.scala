@@ -184,7 +184,7 @@ class ZarrMetaSpec extends SparkSpec {
     val full = java.nio.file.Files.readAllBytes(chunk)
     // truncate the COMPRESSED stream → zstd or vlen parse must fail loudly
     java.nio.file.Files.write(chunk, full.take(full.length - 3))
-    val e = intercept[Throwable] {
+    val e = interceptQuietly[Throwable] {
       spark.read.format("zarr").option("group", "/g").load(dir).collect()
     }
     val msgs = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)

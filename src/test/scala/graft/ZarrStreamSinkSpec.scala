@@ -414,10 +414,12 @@ class ZarrStreamSinkSpec extends SparkSpec {
         assert(java.util.Arrays.equals(actual, expected),
           s"$name chunk $chunk: streamed sink bytes differ from buffered encodeShard")
       }
-      // no .tmp residue under the chunk dir after a clean commit
+      // no temp-file residue (AtomicPublish's ".tmp-" names) under the
+      // chunk dir after a clean commit
       val leftovers = java.nio.file.Files.list(
         java.nio.file.Paths.get(dir, "t", name, "c")).toArray
-        .map(_.toString).filter(_.endsWith(".tmp"))
+        .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+        .filter(_.startsWith(".tmp-"))
       assert(leftovers.isEmpty, s"$name: leftover tmp objects ${leftovers.toSeq}")
     }
   }

@@ -169,15 +169,14 @@ class ZarrV2Spec extends SparkSpec {
     implicit val ctx = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     mem.addData((7L, "x"))
-    val q = mem.toDF().toDF("id", "name").writeStream.format("zarr")
-      .option("group", "/meta").option("chunk_rows", "3")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_v2sink_ckpt").toString)
-      .start(fixture)
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q.processAllAvailable()
+    val e = interceptQuietly[org.apache.spark.sql.streaming.StreamingQueryException] {
+      val q = mem.toDF().toDF("id", "name").writeStream.format("zarr")
+        .option("group", "/meta").option("chunk_rows", "3")
+        .option("checkpointLocation",
+          Files.createTempDirectory("graft_v2sink_ckpt").toString)
+        .start(fixture)
+      try q.processAllAvailable() finally q.stop()
     }
-    q.stop()
     def hasMsg(t: Throwable): Boolean =
       t != null && (t.getMessage != null && t.getMessage.contains("v2 chunk keys") ||
         hasMsg(t.getCause))

@@ -220,7 +220,7 @@ class ZarrWriteSpec extends SparkSpec {
     }
   }
 
-  test("ranged shard reads: identical rows via row AND columnar readers") {
+  test("ranged shard reads: identical rows to whole-object reads") {
     // force every shard object over the ranged threshold: the scan must go
     // through stat + index range read + per-inner-chunk range reads with
     // the single-slot memo, and produce byte-identical results
@@ -237,12 +237,9 @@ class ZarrWriteSpec extends SparkSpec {
     val prev = graft.zarr.ZarrCodecs.rangedShardThresholdBytes
     graft.zarr.ZarrCodecs.rangedShardThresholdBytes = 0L
     try {
-      for (columnar <- Seq("true", "false")) {
-        val ranged = spark.read.format("zarr").option("group", "/t")
-          .option("columnar", columnar).load(dir)
-          .select("id", "score", "name").orderBy("id").collect().map(_.toSeq).toSeq
-        assert(ranged == whole, s"columnar=$columnar")
-      }
+      val ranged = spark.read.format("zarr").option("group", "/t").load(dir)
+        .select("id", "score", "name").orderBy("id").collect().map(_.toSeq).toSeq
+      assert(ranged == whole)
       // filters crossing inner-chunk boundaries exercise slot re-decode
       val f = spark.read.format("zarr").option("group", "/t").load(dir)
         .filter(col("id") % 10 === 9).select("id")

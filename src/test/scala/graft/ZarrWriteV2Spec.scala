@@ -198,7 +198,7 @@ class ZarrWriteV2Spec extends SparkSpec {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
     mem.addData(1L, 2L)
-    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+    val err = interceptQuietly[org.apache.spark.sql.streaming.StreamingQueryException] {
       val q = mem.toDF().toDF("id").writeStream.format("zarr")
         .option("group", "/g").option("zarr_format", "2")
         .option("checkpointLocation", chk).start(sink)
