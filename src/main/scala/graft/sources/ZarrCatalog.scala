@@ -143,8 +143,8 @@ class ZarrCatalog extends TableCatalog with SupportsNamespaces {
     val tShardRows = ZarrDataSource.numericIntOption(opts, "shard_rows", 0, 0)
     val compression = Option(opts.get("compression")).getOrElse("zstd")
     val zarrFormat = ZarrDataSource.numericIntOption(opts, "zarr_format", 3, 2)
-    if (zarrFormat != 2 && zarrFormat != 3)
-      throw new ZarrException(s"zarr option zarr_format must be 2 or 3, got $zarrFormat")
+    ZarrWriteSupport.validate(schema, tChunkRows, tShardRows, compression, zarrFormat,
+      streaming = false)
     val relG = rel(ident.namespace.toSeq :+ ident.name)
     // NO group docs are written here: the CTAS commit writes all metadata
     // (ancestors included) atomically-last, so a FAILED write leaves

@@ -122,8 +122,6 @@ class ZarrDataSource extends TableProvider with DataSourceRegister {
     // write-side store format: 3 (default) or 2 (.zarray/.zgroup layout for
     // zarr-python 2.x readers); reads auto-detect and ignore this option
     val zarrFormat = ZarrDataSource.numericIntOption(options, "zarr_format", 3, 2)
-    if (zarrFormat != 2 && zarrFormat != 3)
-      throw new ZarrException(s"zarr option zarr_format must be 2 or 3, got $zarrFormat")
     // a write target may not exist yet — build the table with the write
     // schema and no readable arrays (reads will fail with the store error)
     val arrays = inferred.collect { case (`path`, `group`, as) => as }.getOrElse {

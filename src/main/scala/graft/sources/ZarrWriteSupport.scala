@@ -7,14 +7,18 @@ import scala.collection.mutable
 
 import com.github.luben.zstd.Zstd
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FSDataOutputStream, Path}
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.zarr.{SerializableHadoopConf, ZarrException}
+import graft.zarr.{AtomicPublish, ColumnChunk, ColumnChunkStats, SerializableHadoopConf,
+  StoreChunkStats, ZarrCodecs, ZarrException, ZarrSchema, ZarrStats, ZarrStore}
 
 /**
  * DSv2 write path: `df.write.format("zarr").option("group", "/meta")
@@ -42,12 +46,15 @@ import graft.zarr.{SerializableHadoopConf, ZarrException}
  * full except the last — and only then commits the zarr.json metadata
  * (readers key off zarr.json, so a failed job leaves no readable table).
  * Without `row_index`, a single input partition is required (positions are
- * synthesized) — the metadata-scale path.
+ * synthesized) — the metadata-scale path. The streaming sink's epochs run
+ * through the same writer and commit ([[ZarrLayout]]): a batch write is the
+ * epoch that starts at row 0 in an empty group.
  *
  * Dtype mapping (write side of SURVEY §1.3): long→int64, int→int32,
  * short→int16, byte→int8, double→float64, float→float32, bool→bool,
  * string→vlen-utf8 (numcodecs framing), timestamp_ntz→datetime64[us]
- * (null → NaT). All columns zstd(0)-compressed.
+ * (null → NaT). Chunks are zstd(0)-compressed unless option
+ * `compression=blosc` asks for blosc-lz4.
  */
 object ZarrWriteSupport {
 
@@ -65,28 +72,6 @@ object ZarrWriteSupport {
     if (fs.exists(rootZmeta)) fs.delete(rootZmeta, false)
   }
 
-  /** Column names are interpolated into zarr.json / consolidated-metadata
-   *  JSON and become directory names: a quote or backslash would commit
-   *  unparseable metadata AFTER all chunk data is written; a slash or
-   *  control char breaks the object layout. Names that collide with the
-   *  store's own metadata objects (v3 zarr.json, v2 dot-files, the graft
-   *  sidecars) would shadow them with a chunk DIRECTORY — the commit's
-   *  atomic rename onto a non-empty dir then fails after every chunk was
-   *  already written, or worse leaves an unreadable store. Fail before any
-   *  task runs. */
-  def validateColumnNames(schema: StructType): Unit =
-    schema.fieldNames.foreach { n =>
-      if (n.isEmpty || n.exists(c => c == '"' || c == '\\' || c == '/' || c.isControl))
-        throw new ZarrException(
-          s"zarr write: column name '$n' cannot be stored " +
-            "(empty, or contains quote/backslash/slash/control characters)")
-      if (n == "zarr.json" || n.startsWith(".") ||
-          n == graft.zarr.ZarrStats.FileName || n == ZarrStreamCommit.FileName)
-        throw new ZarrException(
-          s"zarr write: column name '$n' is reserved for store metadata " +
-            "(zarr.json, dot-prefixed v2 documents, graft sidecars) — rename it")
-    }
-
   /** (leaf element type, trailing rank): (IntegerType, 0) for a scalar
    *  column, (FloatType, 1) for `ArrayType(Float)`, (DoubleType, 2) for
    *  `ArrayType(ArrayType(Double))` — the write-side mirror of the read
@@ -97,18 +82,75 @@ object ZarrWriteSupport {
     case other => (other, 0)
   }
 
-  /** Array columns must have fixed-width leaves: Zarr k-D chunks are dense
-   *  C-order blocks, and a vlen element type has no per-element extent. */
-  def validateArrayLeaf(f: StructField): Unit = {
-    val (leaf, depth) = leafType(f.dataType)
-    if (depth > 0) leaf match {
-      case StringType | BinaryType | _: StructType | _: MapType =>
+  /**
+   * The one validation of a Zarr write's options against its schema, run by
+   * batch writes, streaming queries and the catalog's CTAS before any task
+   * runs and before an overwrite deletes anything — a rejected write must
+   * leave the table it would have replaced.
+   *
+   *  - Column names are interpolated into metadata JSON and become
+   *    directory names: a quote, backslash, slash or control char would
+   *    commit unparseable metadata or break the object layout, and names
+   *    that collide with the store's own objects (v3 zarr.json, v2
+   *    dot-files, the graft sidecars) would shadow them with a chunk
+   *    directory.
+   *  - Array columns need fixed-width leaves: k-D chunks are dense C-order
+   *    blocks, and a vlen element has no per-element extent.
+   *  - The streaming sink writes zstd v3 stores only: its epochs republish
+   *    v3 metadata and re-encode tail chunks with one codec for the
+   *    table's lifetime, so another requested codec is rejected, never
+   *    silently dropped.
+   */
+  def validate(dataSchema: StructType, chunkRows: Int, shardRows: Int,
+      compression: String, zarrFormat: Int, streaming: Boolean): Unit = {
+    if (zarrFormat != 2 && zarrFormat != 3)
+      throw new ZarrException(s"zarr option zarr_format must be 2 or 3, got $zarrFormat")
+    if (streaming && zarrFormat == 2)
+      throw new ZarrException(
+        "zarr streaming sink writes Zarr v3 stores only (its epoch commits " +
+          "republish v3 consolidated metadata) — drop option zarr_format=2, " +
+          "or batch-write v2 tables with df.write")
+    if (streaming && compression != "zstd")
+      throw new ZarrException(
+        s"zarr streaming sink writes zstd-compressed chunks only (got " +
+          s"compression '$compression') — batch-write $compression tables " +
+          "with df.write")
+    if (shardRows > 0 && chunkRows % shardRows != 0)
+      throw new ZarrException(
+        s"option shard_rows=$shardRows must divide chunk_rows=$chunkRows " +
+          "(a shard holds whole inner chunks)")
+    if (zarrFormat == 2 && shardRows > 0)
+      throw new ZarrException(
+        "zarr v2 has no sharding extension — drop shard_rows or write zarr_format=3")
+    dataSchema.fields.foreach { f =>
+      val n = f.name
+      if (n.isEmpty || n.exists(c => c == '"' || c == '\\' || c == '/' || c.isControl))
         throw new ZarrException(
-          s"zarr write: array column '${f.name}' has ${leaf.simpleString} " +
-            "elements — only fixed-width numeric/boolean/timestamp elements " +
-            "can be stored as a k-D Zarr array")
-      case _ => ()
+          s"zarr write: column name '$n' cannot be stored " +
+            "(empty, or contains quote/backslash/slash/control characters)")
+      if (n == "zarr.json" || n.startsWith(".") ||
+          n == graft.zarr.ZarrStats.FileName || n == ZarrStreamCommit.FileName)
+        throw new ZarrException(
+          s"zarr write: column name '$n' is reserved for store metadata " +
+            "(zarr.json, dot-prefixed v2 documents, graft sidecars) — rename it")
+      val (leaf, depth) = leafType(f.dataType)
+      if (depth > 0) leaf match {
+        case StringType | BinaryType | _: StructType | _: MapType =>
+          throw new ZarrException(
+            s"zarr write: array column '$n' has ${leaf.simpleString} " +
+              "elements — only fixed-width numeric/boolean/timestamp elements " +
+              "can be stored as a k-D Zarr array")
+        case _ =>
+          if (shardRows > 0)
+            throw new ZarrException(
+              "shard_rows with an array (k-D) column is not supported — " +
+                "sharding covers the 1-D row layout; drop shard_rows")
+      }
+      if (zarrFormat == 2) dtypeV2(f.dataType) else dtypeJson(f.dataType)
     }
+    if (zarrFormat == 2) compressorV2Json(StringType, compression)
+    else codecsJson(StringType, compression)
+    attrsFromSchema(dataSchema)
   }
 
   def dtypeJson(dt0: DataType): String = leafType(dt0)._1 match {
@@ -186,22 +228,9 @@ object ZarrWriteSupport {
   def isGeoColumn(f: StructField): Boolean =
     f.name == "bbox" && f.dataType == StringType
 
-  /**
-   * Union envelope [minx, miny, maxx, maxy] of a chunk's parseable WKT
-   * values, or null when unknown (malformed text, or no geometry at all).
-   * Rows whose WKT yields no envelope evaluate `bbox_intersects` to false,
-   * so omitting them from the union never over-prunes.
-   */
-  def chunkEnvelope(values: Array[Any], count: Int): Array[Double] = {
-    val acc = new ChunkEnvelopeAcc
-    var i = 0
-    while (i < count) { acc.observe(values(i)); i += 1 }
-    acc.result()
-  }
-
-  /** Incremental per-chunk geometry envelope — the single definition behind
-   *  [[chunkEnvelope]]. The envelope is the union of the envelopes of the
-   *  chunk's PARSEABLE rows only: [[graft.functions.Wkt.envelope]] maps
+  /** Incremental per-chunk geometry envelope [minx, miny, maxx, maxy],
+   *  fed one row at a time by [[ZarrDataWriter]]. The envelope is the union
+   *  of the envelopes of the chunk's PARSEABLE rows only: [[graft.functions.Wkt.envelope]] maps
    *  malformed/non-2-D WKT to null (it never throws), and both scan-side
    *  predicates ([[graft.functions.Wkt.envelopeIntersects]] and the
    *  `bbox_envelope` expression) likewise treat unparseable WKT as
@@ -272,24 +301,10 @@ object ZarrWriteSupport {
        |"index_location":"end"}}]""".stripMargin.replace("\n", "")
 
   /**
-   * (min, max, nullCount) of the `count` buffered values of one column —
-   * recorded per chunk into the `_graft_stats.json` sidecar so the scan can
-   * prune chunk ranges from pushed filters ([[graft.zarr.ZarrStats]]).
-   * String order uses UTF8String binary comparison (Spark's own string
-   * ordering — a java.String compare would disagree on supplementary chars
-   * and make pruning unsound). min/max are null when every value is null.
-   */
-  def chunkColumnStats(dt: DataType, values: Array[Any], count: Int): (String, String, Long) = {
-    val acc = new ChunkStatsAcc(dt)
-    var i = 0
-    while (i < count) { acc.observe(values(i)); i += 1 }
-    acc.result()
-  }
-
-  /**
-   * Incremental per-chunk (min, max, nullCount) — the single definition
-   * behind [[chunkColumnStats]], usable row-by-row so the streaming sharded
-   * write path needs no whole-chunk value buffer.
+   * Incremental per-chunk (min, max, nullCount) of one column, fed one row
+   * at a time by [[ZarrDataWriter]] and recorded per chunk into the
+   * `_graft_stats.json` sidecar so the scan can prune chunk ranges from
+   * pushed filters ([[graft.zarr.ZarrStats]]).
    *
    * Semantics (all load-bearing for pruning soundness):
    *  - binary columns carry no orderable bounds (no comparison filter is
@@ -789,7 +804,7 @@ object ZarrWriteSupport {
    *  index entries followed by their little-endian crc32c
    *  (index_location=end, index_codecs bytes+crc32c) — the ONE definition
    *  shared by the buffered [[encodeShard]] and the streaming
-   *  [[ZarrDataWriter]] so the two writers can never diverge. */
+   *  [[ZarrDataWriter]], so their bytes can never diverge. */
   def shardIndexTrailer(idxEntries: Array[Byte]): Array[Byte] = {
     val crc = new java.util.zip.CRC32C()
     crc.update(idxEntries)
@@ -825,12 +840,167 @@ case class ZarrChunkStatsMsg(
     chunk: Long, min: Array[String], max: Array[String], nulls: Array[Long],
     envs: Array[Array[Double]] = null)
 
-/** One task's report: the chunks it wrote, their row counts, stats, and the
- *  trailing dims observed for k-D (ArrayType) columns — the driver needs
- *  them to write shape/chunk metadata, and validates tasks agree. */
-case class ZarrCommit(chunks: Seq[(Long, Int)], stats: Seq[ZarrChunkStatsMsg],
-    dims: Map[String, Seq[Int]] = Map.empty)
-  extends WriterCommitMessage
+
+/** One task's report, from a batch write and a streaming epoch alike: the
+ *  chunks it wrote (id → rows now in that chunk, merged tail rows
+ *  included), their stats, the row count the table reaches through this
+ *  task's chunks, whether the task was the replay of an epoch already
+ *  committed (it then wrote nothing), and the trailing dims it saw for k-D
+ *  (ArrayType) columns — the driver checks that tasks and the existing
+ *  table agree before publishing shape metadata. */
+case class ZarrTaskCommit(
+    chunks: Seq[(Long, Int)],
+    stats: Seq[ZarrChunkStatsMsg],
+    totalRows: Long,
+    replayed: Boolean,
+    dims: Map[String, Seq[Int]] = Map.empty) extends WriterCommitMessage
+
+/**
+ * Where a Zarr write goes and how its chunks are cut and encoded: what the
+ * one writer factory, the one data writer and the one driver commit share.
+ * A batch write is the epoch that starts at row 0 in an empty group; a
+ * streaming epoch starts at the committed row count (zstd, v3 keys, and
+ * the existing table's shard grid).
+ */
+case class ZarrLayout(
+    path: String,
+    groupRel: String,
+    schema: StructType,
+    dataSchema: StructType,
+    chunkRows: Int,
+    idxOrdinal: Option[Int],
+    conf: Broadcast[SerializableHadoopConf],
+    shardRows: Int = 0,
+    compression: String = "zstd",
+    zarrFormat: Int = 3) {
+
+  def group: String = if (groupRel.isEmpty) "/" else s"/$groupRel"
+  def store: ZarrStore = new ZarrStore(path, conf.value.value)
+
+  /** The factory of both write kinds. Without `row_index`, positions are
+   *  arrival order, so one task must see every row. */
+  def factory(numPartitions: Int): ZarrWriterFactory = {
+    if (idxOrdinal.isEmpty && numPartitions > 1)
+      throw new ZarrException(
+        s"zarr write with $numPartitions partitions needs option row_index " +
+          "(a GLOBAL dense 0-based position column, rows routed per chunk) — " +
+          "or coalesce(1) the input")
+    new ZarrWriterFactory(this)
+  }
+
+  /**
+   * The one driver commit. `startRows` is the committed row count (0 for
+   * a batch write), `attrs` and `tableDims` the existing table's per-array
+   * attributes and k-D dims, and `epoch` the streaming epoch, if any.
+   * Steps, in this order:
+   *
+   *  1. chunk coverage: dense from the chunk holding row `startRows`, no
+   *     chunk written by two tasks, every chunk full except the last —
+   *     published metadata must never claim rows a gap would fake;
+   *  2. the stats sidecar: fresh for a batch write, merged with the old
+   *     sidecar for an epoch;
+   *  3. streaming only: the commit marker with the k-D dims;
+   *  4. the table metadata, which readers key off.
+   *
+   * Chunk objects past the published shape are invisible, so a crash at
+   * any point leaves a consistent table. The marker precedes the shape
+   * publish so that a crash in between is healed by a replayed epoch
+   * ([[ZarrStreamingWrite.commit]]); metadata before the marker on a
+   * marker-less table would instead replay into duplicates. A batch commit
+   * reads neither marker nor old sidecar: its group is empty.
+   */
+  def commit(msgs: Seq[ZarrTaskCommit], startRows: Long, attrs: Map[String, String],
+      tableDims: Map[String, Seq[Int]], epoch: Option[Long]): Unit = {
+    val chunks = msgs.flatMap(_.chunks).sortBy(_._1)
+    val totalRows =
+      if (chunks.isEmpty) startRows
+      else {
+        val startChunk = startRows / chunkRows
+        chunks.zipWithIndex.foreach { case ((id, _), i) =>
+          if (id != startChunk + i) throw new ZarrException(
+            if (chunks.count(_._1 == id) > 1)
+              s"zarr write: chunk $id written by two tasks — route rows " +
+                "with repartition(row_index div chunk_rows)"
+            else
+              s"zarr write: coverage gap (expected chunk ${startChunk + i}, " +
+                s"saw $id) — row_index must be the global dense 0-based position")
+        }
+        chunks.dropRight(1).foreach { case (id, n) =>
+          if (n != chunkRows) throw new ZarrException(
+            s"zarr write: chunk $id has $n rows (expected $chunkRows) — a chunk " +
+              "was split across tasks; route rows with " +
+              "repartition(row_index div chunk_rows)")
+        }
+        chunks.last._1 * chunkRows + chunks.last._2
+      }
+    val dims = ZarrWriteSupport.mergeDims(tableDims, msgs.map(_.dims), dataSchema,
+      "zarr write")
+    val fs = new Path(path).getFileSystem(conf.value.value)
+    // atomic publish for the sidecar and especially the marker: a torn
+    // marker wedges the stream by design (ZarrStreamCommit.read)
+    def writeFile(rel: String, text: String): Unit =
+      AtomicPublish.write(fs, new Path(path, rel), text.getBytes(StandardCharsets.UTF_8))
+    val stats = msgs.flatMap(_.stats).sortBy(_.chunk)
+    if (stats.nonEmpty) {
+      val sidecar = ZarrStats.relPath(groupRel)
+      mergeStats(stats, totalRows, if (epoch.isEmpty) None else ZarrStats.read(store, group))
+        match {
+          case Some(s) => writeFile(sidecar, ZarrStats.toJson(s))
+          case None => fs.delete(new Path(path, sidecar), false)
+        }
+    }
+    epoch.foreach { e =>
+      writeFile(ZarrStreamCommit.relPath(groupRel),
+        s"""{"epoch":$e,"rows":$totalRows,"dims":${ZarrStreamCommit.dimsJson(dims)}}""")
+    }
+    if (zarrFormat == 2)
+      ZarrWriteSupport.writeTableMetadataV2(fs, path, groupRel, dataSchema, totalRows,
+        chunkRows, compression, dimsByName = dims)
+    else
+      ZarrWriteSupport.writeTableMetadata(fs, path, groupRel, dataSchema, totalRows,
+        chunkRows, shardRows, compression, attrsByName = attrs, dimsByName = dims)
+  }
+
+  /** Fold the written chunks' stats into the `old` sidecar (a rewritten tail
+   *  chunk replaces its entry). Stats are advisory: None — drop the file —
+   *  when chunks before the first written one have no entry to vouch for
+   *  them. */
+  private def mergeStats(stats: Seq[ZarrChunkStatsMsg], totalRows: Long,
+      old: Option[StoreChunkStats]): Option[StoreChunkStats] = {
+    val nChunks = ((totalRows + chunkRows - 1) / chunkRows).toInt
+    val first = stats.head.chunk
+    val oldOk = old.filter(o => o.chunkRows == chunkRows && first <= o.nChunks)
+    if (first > 0 && oldOk.isEmpty) return None
+    val byChunk = stats.map(s => s.chunk -> s).toMap
+    val fields = dataSchema.fields
+    val cols = fields.indices.map { ci =>
+      val oldCol = oldOk.flatMap(_.columns.get(fields(ci).name))
+      def pick[T](i: Int, fromNew: ZarrChunkStatsMsg => T,
+          fromOld: ColumnChunkStats => T, zero: T): T =
+        byChunk.get(i.toLong).map(fromNew)
+          .orElse(oldCol.collect { case o if i < o.nulls.length => fromOld(o) })
+          .getOrElse(zero)
+      fields(ci).name -> ColumnChunkStats(
+        Array.tabulate(nChunks)(i => pick[String](i, _.min(ci), _.min(i), null)),
+        Array.tabulate(nChunks)(i => pick[String](i, _.max(ci), _.max(i), null)),
+        Array.tabulate(nChunks)(i => pick[Long](i, _.nulls(ci), _.nulls(i), 0L)))
+    }.toMap
+    // geometry envelopes merge the same way; a REWRITTEN chunk (tail merge)
+    // whose fresh envelope is unknown stays unknown — never the stale entry
+    val envMap = fields.indices
+      .filter(ci => ZarrWriteSupport.isGeoColumn(fields(ci)))
+      .map { ci =>
+        val oldEnv = oldOk.flatMap(_.envelopes.get(fields(ci).name))
+        fields(ci).name -> Array.tabulate(nChunks) { i =>
+          byChunk.get(i.toLong)
+            .map(m => if (m.envs == null) null else m.envs(ci))
+            .orElse(oldEnv.collect { case e if i < e.length => e(i) })
+            .orNull
+        }
+      }.toMap
+    Some(StoreChunkStats(chunkRows, nChunks, totalRows, cols, envMap))
+  }
+}
 
 class ZarrWrite(
     path: String,
@@ -847,9 +1017,11 @@ class ZarrWrite(
   with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
 
   private val groupRel = group.stripPrefix("/").stripSuffix("/")
-  private def dataSchema: StructType =
-    StructType(schema.fields.filterNot(f => rowIndexCol.contains(f.name)))
-  ZarrWriteSupport.validateColumnNames(dataSchema)
+  private val layout = ZarrLayout(path, groupRel, schema,
+    StructType(schema.fields.filterNot(f => rowIndexCol.contains(f.name))), chunkRows,
+    rowIndexCol.map(schema.fieldIndex), conf, shardRows, compression, zarrFormat)
+  private def validate(streaming: Boolean): Unit = ZarrWriteSupport.validate(
+    layout.dataSchema, chunkRows, shardRows, compression, zarrFormat, streaming)
 
   // Without row_index Spark plans the single-partition metadata-scale write
   // itself (so CTAS and plain df.write just work); with row_index it sorts
@@ -881,8 +1053,7 @@ class ZarrWrite(
     // (Continuous APPEND is exactly what the STREAMING sink is for.)
     if (!doTruncate) {
       val existing =
-        try graft.zarr.ZarrSchema.listArrays(
-          new graft.zarr.ZarrStore(path, conf.value.value), s"/$groupRel")
+        try graft.zarr.ZarrSchema.listArrays(layout.store, layout.group)
         catch { case _: ZarrException => Seq.empty }
       if (existing.nonEmpty)
         throw new ZarrException(
@@ -893,51 +1064,26 @@ class ZarrWrite(
     this
   }
 
+  // With row_index the sink appends MULTI-PARTITION epochs: the column is
+  // the GLOBAL dense 0-based row position (the store's chunk grid is
+  // global, so only a global index can route whole chunks once the
+  // committed row count stops being chunk-aligned), and the caller
+  // repartitions on (row_index div chunk_rows) exactly like the
+  // distributed batch write. Without it: arrival order, one task.
   override def toStreaming
       : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-    if (zarrFormat == 2)
-      throw new ZarrException(
-        "zarr streaming sink writes Zarr v3 stores only (its epoch commits " +
-          "republish v3 consolidated metadata) — drop option zarr_format=2, " +
-          "or batch-write v2 tables with df.write")
+    validate(streaming = true)
     if (doTruncate)
       throw new ZarrException(
         "zarr streaming sink is append-only — use outputMode(\"append\")")
-    if (shardRows > 0 && chunkRows % shardRows != 0)
-      throw new ZarrException(
-        s"option shard_rows=$shardRows must divide chunk_rows=$chunkRows " +
-          "(a shard holds whole inner chunks)")
-    // With row_index the sink appends MULTI-PARTITION epochs: the column is
-    // the GLOBAL dense 0-based row position (not per-epoch — the store's
-    // chunk grid is global, so only a global index can route whole chunks
-    // once the committed row count stops being chunk-aligned), and the
-    // caller repartitions on (row_index div chunk_rows) exactly like the
-    // distributed batch write. Without it: arrival order, one task.
-    ZarrWriteSupport.attrsFromSchema(dataSchema) // fail-fast, as in batch
-    dataSchema.fields.foreach(ZarrWriteSupport.validateArrayLeaf)
-    if (shardRows > 0 &&
-        dataSchema.fields.exists(f => ZarrWriteSupport.leafType(f.dataType)._2 > 0))
-      throw new ZarrException(
-        "shard_rows with an array (k-D) column is not supported — " +
-          "sharding covers the 1-D row layout; drop shard_rows")
-    // the sink encodes zstd (its epoch metadata republish and tail rewrites
-    // assume one codec for the table's lifetime); silently dropping a
-    // requested codec is the bug class the catalog's TBLPROPERTIES
-    // validation exists for — reject loudly instead
-    if (compression != "zstd")
-      throw new ZarrException(
-        s"zarr streaming sink writes zstd-compressed chunks only (got " +
-          s"compression '$compression') — batch-write $compression tables " +
-          "with df.write")
-    new ZarrStreamingWrite(path, groupRel, schema, dataSchema, chunkRows, conf,
-      shardRows, rowIndexCol.map(c => schema.fieldIndex(c)))
+    new ZarrStreamingWrite(path, groupRel, schema, layout.dataSchema, chunkRows, conf,
+      shardRows, layout.idxOrdinal)
   }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    // fail-fast on garbage zarr.attributes metadata BEFORE any task runs —
-    // commit-time rejection would discard a whole distributed write's work
-    ZarrWriteSupport.attrsFromSchema(dataSchema)
-    // overwrite: clear existing array dirs under the group BEFORE tasks write
+    // every check runs before the overwrite below deletes the old table
+    validate(streaming = false)
+    val factory = layout.factory(info.numPartitions)
     if (doTruncate) {
       val fs = new Path(path).getFileSystem(conf.value.value)
       val g = if (groupRel.isEmpty) new Path(path) else new Path(path, groupRel)
@@ -946,205 +1092,204 @@ class ZarrWrite(
       if (groupRel.nonEmpty)
         ZarrWriteSupport.invalidateRootConsolidation(fs, path)
     }
-    if (rowIndexCol.isEmpty && info.numPartitions > 1)
-      throw new ZarrException(
-        s"zarr write with ${info.numPartitions} partitions needs option row_index " +
-          "(a dense 0-based position column, rows routed per chunk) — or coalesce(1)")
-    if (shardRows > 0 && chunkRows % shardRows != 0)
-      throw new ZarrException(
-        s"option shard_rows=$shardRows must divide chunk_rows=$chunkRows " +
-          "(a shard holds whole inner chunks)")
-    if (zarrFormat == 2 && shardRows > 0)
-      throw new ZarrException(
-        "zarr v2 has no sharding extension — drop shard_rows or write zarr_format=3")
-    dataSchema.fields.foreach(ZarrWriteSupport.validateArrayLeaf)
-    if (shardRows > 0 &&
-        dataSchema.fields.exists(f => ZarrWriteSupport.leafType(f.dataType)._2 > 0))
-      throw new ZarrException(
-        "shard_rows with an array (k-D) column is not supported — " +
-          "sharding covers the 1-D row layout; drop shard_rows")
-    // fail fast on unknown compression / unsupported v2 dtypes before any task runs
-    if (zarrFormat == 2) {
-      ZarrWriteSupport.compressorV2Json(StringType, compression)
-      dataSchema.fields.foreach(f => ZarrWriteSupport.dtypeV2(f.dataType))
-    } else ZarrWriteSupport.codecsJson(StringType, compression)
-    new ZarrWriterFactory(path, groupRel, schema, dataSchema, chunkRows,
-      rowIndexCol.map(c => schema.fieldIndex(c)), conf, shardRows, compression,
-      v2Keys = zarrFormat == 2)
+    factory
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val all = messages.flatMap(_.asInstanceOf[ZarrCommit].chunks).sortBy(_._1)
-    // validate dense full coverage: chunk ids 0..m, all full except the last
-    all.zipWithIndex.foreach { case ((id, _), i) =>
-      if (id != i) throw new ZarrException(
-        s"zarr write: chunk $i missing or duplicated (saw chunk id $id) — " +
-          "row_index must be dense 0..n-1 with whole chunks per task")
-    }
-    all.dropRight(1).foreach { case (id, n) =>
-      if (n != chunkRows) throw new ZarrException(
-        s"zarr write: chunk $id has $n rows (expected $chunkRows) — " +
-          "a chunk was split across tasks; repartition on (row_index div chunk_rows)")
-    }
-    val totalRows = all.map(_._2.toLong).sum
-    // k-D columns: every task that saw rows reports the trailing dims it
-    // validated against; tasks must agree (ragged data already failed
-    // task-side, but two tasks CAN each be self-consistent with different
-    // shapes), and an ArrayType column with zero non-null rows anywhere
-    // has no storable shape at all
-    val dimsByName: Map[String, Seq[Int]] = ZarrWriteSupport.mergeDims(
-      Map.empty, messages.map(_.asInstanceOf[ZarrCommit].dims).toSeq,
-      dataSchema, "zarr write")
-    val fs = new Path(path).getFileSystem(conf.value.value)
-    def writeJson(p: Path, text: String): Unit =
-      graft.zarr.AtomicPublish.write(fs, p, text.getBytes(StandardCharsets.UTF_8))
-    // chunk-stats sidecar, merged from the tasks' per-chunk reports; written
-    // BEFORE zarr.json so a table is never readable with stats still missing
-    // (stats-less is fine — the scan treats them as advisory — but this
-    // ordering makes the commit all-or-nothing for readers)
-    val allStats = messages.flatMap(_.asInstanceOf[ZarrCommit].stats).sortBy(_.chunk)
-    if (allStats.length == all.length && dataSchema.fields.nonEmpty) {
-      val fields = dataSchema.fields
-      val cols = fields.indices.map { c =>
-        fields(c).name -> graft.zarr.ColumnChunkStats(
-          allStats.map(_.min(c)).toArray,
-          allStats.map(_.max(c)).toArray,
-          allStats.map(_.nulls(c)).toArray)
-      }.toMap
-      val envMap = fields.indices
-        .filter(c => ZarrWriteSupport.isGeoColumn(fields(c)))
-        .map { c =>
-          fields(c).name ->
-            allStats.map(s => if (s.envs == null) null else s.envs(c)).toArray
-        }.toMap
-      val sidecar = graft.zarr.StoreChunkStats(chunkRows, allStats.length, totalRows, cols,
-        envMap)
-      val p = if (groupRel.isEmpty) new Path(path, graft.zarr.ZarrStats.FileName)
-        else new Path(new Path(path, groupRel), graft.zarr.ZarrStats.FileName)
-      writeJson(p, graft.zarr.ZarrStats.toJson(sidecar))
-    }
-    if (zarrFormat == 2)
-      ZarrWriteSupport.writeTableMetadataV2(fs, path, groupRel, dataSchema, totalRows,
-        chunkRows, compression, dimsByName = dimsByName)
-    else
-      ZarrWriteSupport.writeTableMetadata(fs, path, groupRel, dataSchema, totalRows,
-        chunkRows, shardRows, compression,
-        attrsByName = ZarrWriteSupport.attrsFromSchema(dataSchema),
-        dimsByName = dimsByName)
-  }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    layout.commit(messages.toSeq.map(_.asInstanceOf[ZarrTaskCommit]), 0L,
+      ZarrWriteSupport.attrsFromSchema(layout.dataSchema), Map.empty, None)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
   // no zarr.json is written until commit, so aborted chunk objects are
   // invisible to readers; a subsequent overwrite clears them
 }
 
-class ZarrWriterFactory(
-    path: String,
-    groupRel: String,
-    schema: StructType,
-    dataSchema: StructType,
-    chunkRows: Int,
-    idxOrdinal: Option[Int],
-    conf: Broadcast[SerializableHadoopConf],
-    shardRows: Int = 0,
-    compression: String = "zstd",
-    v2Keys: Boolean = false)
-  extends DataWriterFactory {
+/** The one writer factory, for batch tasks and streaming epochs. A streaming
+ *  task reads the committed row count and whether its epoch is a replay
+ *  from the store, as every task of the epoch and the driver commit do. */
+class ZarrWriterFactory(layout: ZarrLayout)
+  extends DataWriterFactory with StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ZarrDataWriter(path, groupRel, schema, dataSchema, chunkRows, idxOrdinal,
-      conf, shardRows, compression, v2Keys)
+    new ZarrDataWriter(layout, startRows = 0L, replay = false)
+
+  override def createWriter(partitionId: Int, taskId: Long,
+      epochId: Long): DataWriter[InternalRow] = {
+    val (lastEpoch, startRows) = ZarrStreamCommit.resolveStart(layout.store, layout.groupRel)
+    new ZarrDataWriter(layout, startRows, replay = lastEpoch >= epochId)
+  }
 }
 
-class ZarrDataWriter(
-    path: String,
-    groupRel: String,
-    schema: StructType,
-    dataSchema: StructType,
-    chunkRows: Int,
-    idxOrdinal: Option[Int],
-    conf: Broadcast[SerializableHadoopConf],
-    shardRows: Int = 0,
-    compression: String = "zstd",
-    v2Keys: Boolean = false)
+/**
+ * The one Zarr data writer. It places rows on the global chunk grid — from
+ * the `row_index` column, or by arrival order from `startRows` — streams
+ * them into one open chunk per column (bounded memory), feeds each row to
+ * the chunk's stats and envelope accumulators, and reports every chunk it
+ * wrote. A batch write starts at row 0 of an empty group; a streaming
+ * epoch starts at the committed row count, and the task that writes the
+ * partial tail chunk first merges the rows it already holds. A `replay`
+ * writes nothing.
+ *
+ * Sharded chunks stream too: one INNER chunk of values is buffered per
+ * column, and each is encoded and appended to the open shard object as it
+ * fills. Task memory is O(ncols × (shard_rows values + one open output
+ * stream's buffer)), not O(ncols × chunk_rows values + a whole compressed
+ * shard), which for 1 GiB shards was gigabytes per column per task.
+ */
+class ZarrDataWriter(layout: ZarrLayout, startRows: Long, replay: Boolean)
   extends DataWriter[InternalRow] {
+  import layout.{chunkRows, compression, conf, dataSchema, groupRel, idxOrdinal, path, schema,
+    shardRows, zarrFormat}
 
   private val fs = new Path(path).getFileSystem(conf.value.value)
-  private val dataOrdinals: Array[Int] =
-    dataSchema.fields.map(f => schema.fieldIndex(f.name))
-  private val ncols = dataOrdinals.length
-  private val sharded = shardRows > 0
+  private val fields = dataSchema.fields
+  private val dataOrdinals: Array[Int] = fields.map(f => schema.fieldIndex(f.name))
+  private val ncols = fields.length
   // k-D (ArrayType) columns: leaf element type + trailing depth, and the
-  // trailing dims discovered from the first non-null row (all later rows
-  // validate against them — a dense chunk grid cannot hold ragged rows)
+  // trailing dims discovered from the first non-null row (all later rows,
+  // merged tail rows included, validate against them)
   private val leafInfo: Array[(DataType, Int)] =
-    dataSchema.fields.map(f => ZarrWriteSupport.leafType(f.dataType))
+    fields.map(f => ZarrWriteSupport.leafType(f.dataType))
   private val colDims: Array[Array[Int]] = new Array(ncols)
-  // sharded writes STREAM: buffer one INNER chunk of values, encode and
-  // append it to the open shard object as it fills, and accumulate chunk
-  // stats row-by-row — the write-side mirror of the reader's ranged shard
-  // path. Task memory is O(ncols × (shard_rows values + one open output
-  // stream's buffer)): rows arrive row-wise across all columns, so every
-  // column's shard object stays open for the chunk's lifetime (on s3a
-  // fast-upload that is one multipart buffer per column). Still far below
-  // the buffered path's O(ncols × chunk_rows values + whole compressed
-  // shard), which for 1 GiB shards was gigabytes per column per task.
-  private val bufRows = if (sharded) shardRows else chunkRows
+  private val sharded = shardRows > 0
   private val nInner = if (sharded) chunkRows / shardRows else 0
   private val buffers: Array[Array[Any]] =
-    dataSchema.fields.map(_ => new Array[Any](bufRows))
+    fields.map(_ => new Array[Any](if (sharded) shardRows else chunkRows))
+  private val tailChunk = startRows / chunkRows
+  private val tailFill = (startRows % chunkRows).toInt
   private var currentChunk = -1L
-  private var count = 0 // rows of the current chunk seen so far
-  private var synthesized = 0L
+  private var count = 0 // rows of the current chunk so far
+  private var innerDone = 0 // inner chunks of the current shard written
+  private var synthesized = startRows // arrival-order positions
+  private var localTotal = startRows
   private val written = mutable.ArrayBuffer.empty[(Long, Int)]
   private val stats = mutable.ArrayBuffer.empty[ZarrChunkStatsMsg]
-  // streaming shard state (sharded only), reset per chunk
-  private var outs: Array[org.apache.hadoop.fs.FSDataOutputStream] = _
-  private var idxBufs: Array[ByteBuffer] = _
-  private var offs: Array[Long] = _
-  private var innerDone = 0
-  private var accs: Array[ZarrWriteSupport.ChunkStatsAcc] = _
-  private var envAccs: Array[ZarrWriteSupport.ChunkEnvelopeAcc] = _
+  // per open chunk and column
+  private val accs = new Array[ZarrWriteSupport.ChunkStatsAcc](ncols)
+  private val envAccs = new Array[ZarrWriteSupport.ChunkEnvelopeAcc](ncols)
+  private val outs = new Array[FSDataOutputStream](ncols)
+  private val finals = new Array[Path](ncols)
+  private val tmps = new Array[Path](ncols)
+  private val idxBufs: Array[ByteBuffer] =
+    fields.map(_ => ByteBuffer.allocate(nInner * 16).order(ByteOrder.LITTLE_ENDIAN))
+  private val offs = new Array[Long](ncols)
 
-  private def chunkPathOf(name: String, depth: Int = 0): Path = {
-    val arrayDir = if (groupRel.isEmpty) new Path(path, name)
-      else new Path(new Path(path, groupRel), name)
+  /** Only the partial tail chunk holds rows that readers can already see. */
+  private def rewritesTail: Boolean = tailFill > 0 && currentChunk == tailChunk
+
+  private def chunkPath(c: Int): Path = {
+    val arrayDir = if (groupRel.isEmpty) new Path(path, fields(c).name)
+      else new Path(new Path(path, groupRel), fields(c).name)
     // v3 default chunk-key encoding "c/<i>" vs v2's bare "<i>"; a k-D
     // column's trailing dims are unchunked (one grid cell), so its keys
     // carry `depth` trailing zero indices — "c/<i>/0" (v3) / "<i>.0" (v2)
-    if (v2Keys)
+    val depth = leafInfo(c)._2
+    if (zarrFormat == 2)
       new Path(arrayDir, (currentChunk.toString +: Seq.fill(depth)("0")).mkString("."))
     else
       (0 until depth).foldLeft(
         new Path(new Path(arrayDir, "c"), currentChunk.toString))((p, _) => new Path(p, "0"))
   }
 
-  private def openShardChunk(): Unit = {
-    outs = new Array(ncols)
-    idxBufs = new Array(ncols)
-    offs = new Array(ncols)
-    accs = new Array(ncols)
-    envAccs = new Array(ncols)
-    innerDone = 0
-    var c = 0
-    while (c < ncols) {
-      val f = dataSchema.fields(c)
-      outs(c) = fs.create(chunkPathOf(f.name), true)
-      idxBufs(c) = ByteBuffer.allocate(nInner * 16).order(ByteOrder.LITTLE_ENDIAN)
-      accs(c) = new ZarrWriteSupport.ChunkStatsAcc(f.dataType)
-      if (ZarrWriteSupport.isGeoColumn(f))
-        envAccs(c) = new ZarrWriteSupport.ChunkEnvelopeAcc
-      c += 1
+  /** Open column `c`'s chunk object. A chunk past the published shape is
+   *  created in place — no reader can see it, and on an object store a
+   *  rename is a copy. The tail chunk is staged aside and renamed over the
+   *  old object when closed, so its readers see the old or the new bytes,
+   *  never a partial object. */
+  private def openObject(c: Int): Unit = {
+    finals(c) = chunkPath(c)
+    if (rewritesTail) {
+      val (tmp, out) = AtomicPublish.stage(fs, finals(c))
+      tmps(c) = tmp
+      outs(c) = out
+    } else outs(c) = fs.create(finals(c), true)
+  }
+
+  private def closeObject(c: Int): Unit = {
+    outs(c).close()
+    outs(c) = null
+    if (tmps(c) != null) {
+      AtomicPublish.publish(fs, tmps(c), finals(c))
+      tmps(c) = null
     }
   }
 
+  private def open(chunk: Long): Unit = {
+    currentChunk = chunk
+    count = 0
+    innerDone = 0
+    var c = 0
+    while (c < ncols) {
+      accs(c) = new ZarrWriteSupport.ChunkStatsAcc(fields(c).dataType)
+      envAccs(c) =
+        if (ZarrWriteSupport.isGeoColumn(fields(c))) new ZarrWriteSupport.ChunkEnvelopeAcc
+        else null
+      if (sharded) {
+        openObject(c)
+        idxBufs(c).clear()
+        offs(c) = 0L
+      }
+      c += 1
+    }
+    if (rewritesTail) mergeTail()
+  }
+
+  /** Store column `c`'s value of the current row — the one ingest for live
+   *  rows and merged tail rows, so both encode alike. k-D values are
+   *  flattened now (Spark reuses a row's buffers, so a kept ArrayData would
+   *  change under us), which also checks their extents. */
+  private def put(c: Int, v0: Any): Unit = {
+    val v = v0 match {
+      case a: ArrayData =>
+        val (leaf, depth) = leafInfo(c)
+        if (colDims(c) == null)
+          colDims(c) = ZarrWriteSupport.discoverDims(fields(c).name, a, depth)
+        ZarrWriteSupport.flattenNdRow(fields(c).name, a, colDims(c), leaf)
+      case u: UTF8String => u.toString
+      case other => other
+    }
+    buffers(c)(count - innerDone * shardRows) = v
+    accs(c).observe(v)
+    if (envAccs(c) != null) envAccs(c).observe(v)
+  }
+
+  private def endRow(): Unit = {
+    count += 1
+    if (sharded && count - innerDone * shardRows == shardRows) writeInner(shardRows)
+    if (count == chunkRows) flush()
+  }
+
+  /** Merge the existing partial tail chunk so its rewrite keeps the old
+   *  rows — through [[put]] like live rows, with bounded memory even for a
+   *  multi-GiB sharded tail (fetchChunk's ranged path + one inner chunk of
+   *  buffered values). Only one task may write the tail chunk (whole-chunk
+   *  routing). */
+  private def mergeTail(): Unit = {
+    val store = layout.store
+    val arrays = ZarrSchema.listArrays(store, layout.group)
+    val old: Array[ColumnChunk] = fields.map { f =>
+      val meta = arrays.find(_.name == f.name).getOrElse(
+        throw new ZarrException(s"no existing array for streamed column '${f.name}'"))
+      ZarrCodecs.fetchChunk(store, meta, tailChunk)
+    }
+    try {
+      var i = 0
+      while (i < tailFill) {
+        var c = 0
+        while (c < ncols) { put(c, old(c).get(i)); c += 1 }
+        endRow()
+        i += 1
+      }
+    } finally old.foreach(_.close())
+  }
+
   /** Encode and append one inner chunk of `n` buffered rows (0 = all-fill
-   *  padding, exactly what the buffered encodeShard emitted). */
+   *  padding, exactly what the buffered encodeShard emits). */
   private def writeInner(n: Int): Unit = {
     var c = 0
     while (c < ncols) {
       val bytes = ZarrWriteSupport.encodeChunk(
-        dataSchema.fields(c).dataType, buffers(c), n, shardRows, compression)
+        fields(c).dataType, buffers(c), n, shardRows, compression)
       outs(c).write(bytes)
       idxBufs(c).putLong(offs(c)).putLong(bytes.length.toLong)
       offs(c) += bytes.length
@@ -1154,57 +1299,38 @@ class ZarrDataWriter(
   }
 
   override def write(row: InternalRow): Unit = {
+    if (replay) return
     val pos = idxOrdinal match {
       case Some(o) =>
         if (row.isNullAt(o)) // getLong on a null slot silently yields 0
           throw new ZarrException(
             "zarr write: row_index is NULL — the position column must be a " +
-              "non-null dense 0-based index")
+              "non-null global dense 0-based index")
         row.getLong(o)
       case None => val p = synthesized; synthesized += 1; p
     }
+    if (pos < startRows)
+      throw new ZarrException(
+        s"zarr write: row_index $pos is behind the committed row count " +
+          s"$startRows — row_index must be the GLOBAL dense 0-based position " +
+          "(a log offset), not a per-epoch index")
     val chunk = pos / chunkRows
-    val off = (pos % chunkRows).toInt
     if (chunk != currentChunk) {
       flush()
-      currentChunk = chunk
-      if (sharded) openShardChunk()
+      open(chunk)
     }
-    if (off != count)
+    if (pos % chunkRows != count)
       throw new ZarrException(
-        s"zarr write: row at position $pos arrived out of order (expected offset " +
-          s"$count in chunk $chunk) — sortWithinPartitions(row_index) required")
-    val slot = if (sharded) count - innerDone * shardRows else count
+        s"zarr write: row at position $pos arrived out of order (expected " +
+          s"offset $count in chunk $chunk) — row_index must be dense with " +
+          "whole chunks per task (repartition(row_index div chunk_rows))")
     var c = 0
     while (c < ncols) {
-      val f = dataSchema.fields(c)
-      val (leaf, depth) = leafInfo(c)
-      val v =
-        if (row.isNullAt(dataOrdinals(c))) null
-        else if (depth > 0) {
-          // flatten NOW: Spark reuses the incoming row's backing buffer, so
-          // a raw ArrayData reference would be invalid by flush time — and
-          // flattening validates the row's extents in the same pass
-          val a = row.get(dataOrdinals(c), f.dataType)
-            .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          if (colDims(c) == null)
-            colDims(c) = ZarrWriteSupport.discoverDims(f.name, a, depth)
-          ZarrWriteSupport.flattenNdRow(f.name, a, colDims(c), leaf)
-        }
-        else row.get(dataOrdinals(c), f.dataType) match {
-          case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-          case other => other
-        }
-      buffers(c)(slot) = v
-      if (sharded) {
-        accs(c).observe(v)
-        if (envAccs(c) != null) envAccs(c).observe(v)
-      }
+      val o = dataOrdinals(c)
+      put(c, if (row.isNullAt(o)) null else row.get(o, fields(c).dataType))
       c += 1
     }
-    count += 1
-    if (sharded && count - innerDone * shardRows == shardRows) writeInner(shardRows)
-    if (count == chunkRows) flush()
+    endRow()
   }
 
   private def flush(): Unit = {
@@ -1217,23 +1343,12 @@ class ZarrDataWriter(
         val residual = count - innerDone * shardRows
         if (residual > 0) writeInner(residual)
         while (innerDone < nInner) writeInner(0) // trailing all-fill inners
-        var c = 0
-        while (c < ncols) {
-          outs(c).write(ZarrWriteSupport.shardIndexTrailer(idxBufs(c).array()))
-          outs(c).close(); outs(c) = null
-          val (mn, mx, nl) = accs(c).result()
-          mins(c) = mn; maxs(c) = mx; nulls(c) = nl
-          if (envAccs(c) != null) envs(c) = envAccs(c).result()
-          c += 1
-        }
-      } else {
-        var c = 0
-        while (c < ncols) {
-          val f = dataSchema.fields(c)
-          val (mn, mx, nl) = ZarrWriteSupport.chunkColumnStats(f.dataType, buffers(c), count)
-          mins(c) = mn; maxs(c) = mx; nulls(c) = nl
-          if (ZarrWriteSupport.isGeoColumn(f))
-            envs(c) = ZarrWriteSupport.chunkEnvelope(buffers(c), count)
+      }
+      var c = 0
+      while (c < ncols) {
+        val f = fields(c)
+        if (sharded) outs(c).write(ZarrWriteSupport.shardIndexTrailer(idxBufs(c).array()))
+        else {
           val bytes =
             if (leafInfo(c)._2 > 0) {
               if (colDims(c) == null)
@@ -1245,26 +1360,36 @@ class ZarrDataWriter(
                 buffers(c), count, chunkRows, compression)
             } else ZarrWriteSupport.encodeChunk(f.dataType, buffers(c), count,
               chunkRows, compression)
-          val out = fs.create(chunkPathOf(f.name, leafInfo(c)._2), true)
-          try out.write(bytes) finally out.close()
-          c += 1
+          openObject(c)
+          outs(c).write(bytes)
         }
+        closeObject(c)
+        val (mn, mx, nl) = accs(c).result()
+        mins(c) = mn; maxs(c) = mx; nulls(c) = nl
+        if (envAccs(c) != null) envs(c) = envAccs(c).result()
+        c += 1
       }
       written += ((currentChunk, count))
       stats += ZarrChunkStatsMsg(currentChunk, mins, maxs, nulls, envs)
-      count = 0
+      localTotal = math.max(localTotal, currentChunk * chunkRows + count)
     }
     currentChunk = -1
+    count = 0
   }
 
-  /** Close any open shard streams (failed task): released, never published —
-   *  the commit protocol only exposes tables via metadata written at commit. */
-  private def releaseStreams(): Unit = if (outs != null) {
+  /** Close any open chunk object (failed task) and remove a staged tail
+   *  rewrite: the old tail object stays, and fresh objects past the
+   *  published shape stay invisible. */
+  private def releaseStreams(): Unit = {
     var c = 0
     while (c < ncols) {
       if (outs(c) != null) {
         try outs(c).close() catch { case _: java.io.IOException => }
         outs(c) = null
+      }
+      if (tmps(c) != null) {
+        try fs.delete(tmps(c), false) catch { case _: java.io.IOException => }
+        tmps(c) = null
       }
       c += 1
     }
@@ -1272,11 +1397,11 @@ class ZarrDataWriter(
 
   override def commit(): WriterCommitMessage = {
     flush()
-    val dims = dataSchema.fields.indices
+    val dims = fields.indices
       .filter(c => colDims(c) != null)
-      .map(c => dataSchema.fields(c).name -> colDims(c).toSeq)
+      .map(c => fields(c).name -> colDims(c).toSeq)
       .toMap
-    ZarrCommit(written.toSeq, stats.toSeq, dims)
+    ZarrTaskCommit(written.toSeq, stats.toSeq, localTotal, replay, dims)
   }
   override def abort(): Unit = releaseStreams()
   override def close(): Unit = releaseStreams()

@@ -7,7 +7,10 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{DelegateToFileSystem, FSDataOutputStream, FileSystem, Path,
+  RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.AtRest
@@ -109,8 +112,8 @@ class AtomicPublishSpec extends AnyFunSuite {
 
 object AtomicPublishSpec {
 
-  /** A local store that records every delete and rename, and whether
-   *  the watched path was missing right after one. */
+  /** A local store that records every create, delete and rename, and
+   *  whether the watched path was missing right after one. */
   class RecordingFs extends RawLocalFileSystem {
     override def getScheme: String = RecordingFs.Scheme
     override def getUri: URI = URI.create(s"${RecordingFs.Scheme}:///")
@@ -121,6 +124,14 @@ object AtomicPublishSpec {
       if (w != null && !pathToFile(w).exists()) RecordingFs.events.add(s"missing after $op")
       r
     }
+    override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+        blockSize: Long, progress: Progressable): FSDataOutputStream =
+      record(s"create ${f.getName}")(
+        super.create(f, overwrite, bufferSize, replication, blockSize, progress))
+    override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+        replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream =
+      record(s"create ${f.getName}")(
+        super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress))
     override def delete(f: Path, recursive: Boolean): Boolean =
       record(s"delete ${f.getName}")(super.delete(f, recursive))
     override def rename(src: Path, dst: Path): Boolean =

@@ -143,7 +143,7 @@ class ZarrStreamSinkSpec extends SparkSpec {
     val write = new graft.sources.ZarrStreamingWrite(dir, "t", schema, schema, 4,
       graft.zarr.HadoopConfBroadcast(spark))
     write.commit(0L, Array(
-      graft.sources.ZarrStreamEpochCommit(Seq.empty, Seq.empty, 9L, replayed = true)))
+      graft.sources.ZarrTaskCommit(Seq.empty, Seq.empty, 9L, replayed = true)))
     val healed = spark.read.format("zarr").option("group", "/t").load(dir)
       .orderBy("id").collect()
     assert(healed.map(_.getLong(healed.head.fieldIndex("id"))).toSeq == (0L until 9L))
@@ -181,7 +181,7 @@ class ZarrStreamSinkSpec extends SparkSpec {
     val write = new graft.sources.ZarrStreamingWrite(dir, "t", schema, schema, 4,
       graft.zarr.HadoopConfBroadcast(spark))
     write.commit(0L, Array(
-      graft.sources.ZarrStreamEpochCommit(Seq.empty, Seq.empty, 3L, replayed = true)))
+      graft.sources.ZarrTaskCommit(Seq.empty, Seq.empty, 3L, replayed = true)))
     val healed = spark.read.format("zarr").option("group", "/t").load(dir)
       .collect().sortBy(_.getLong(0))
     assert(healed.length == 3)
@@ -684,5 +684,134 @@ class ZarrStreamSinkSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("must match") ||
       Option(e.getCause).exists(_.getMessage.contains("must match")))
+  }
+
+  test("an epoch stages and renames only the partial tail chunk; fresh chunks " +
+      "are created in place") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import AtomicPublishSpec.RecordingFs
+    implicit val ctx = spark.sqlContext
+    spark.sparkContext.hadoopConfiguration.set(s"fs.${RecordingFs.Scheme}.impl",
+      classOf[RecordingFs].getName)
+    for (shardRows <- Seq(0, 2)) {
+      val dir = tempDir("zsink_create") + "/store.zarr"
+      val uri = s"${RecordingFs.Scheme}://$dir"
+      // 6 rows at chunk_rows=4: chunk 1 is a partial tail holding rows 4-5
+      spark.range(6).select(col("id"),
+          org.apache.spark.sql.functions.concat(
+            org.apache.spark.sql.functions.lit("w"), col("id")).as("word"))
+        .coalesce(1).write.format("zarr").option("group", "/t")
+        .option("chunk_rows", "4").option("shard_rows", shardRows.toString)
+        .mode("overwrite").save(uri)
+      val mem = MemoryStream[Doc]
+      val q = mem.toDF().writeStream.format("zarr")
+        .option("group", "/t").option("chunk_rows", "4")
+        .option("checkpointLocation", tempDir("zsink_create_ckpt"))
+        .start(uri)
+      RecordingFs.events.clear()
+      try {
+        // rows 6-15: the tail chunk 1, then fresh chunks 2 and 3
+        mem.addData((6L until 16L).map(i => Doc(i, s"w$i")): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      val events = RecordingFs.events.asScala.toSeq
+      def chunkEvents(op: String, name: String => Boolean): Seq[String] =
+        events.filter(_.startsWith(s"$op ")).map(_.stripPrefix(s"$op ")).filter(name)
+      val isChunk = (n: String) => n.nonEmpty && n.forall(_.isDigit)
+      // one staged object and one rename per column, all for chunk 1
+      assert(chunkEvents("rename", n => isChunk(n.split(" -> ").last))
+        .map(_.split(" -> ").last) == Seq("1", "1"), s"shard=$shardRows: $events")
+      assert(chunkEvents("create", _.startsWith(".tmp-")).map(_.split("-")(1))
+        .filter(isChunk) == Seq("1", "1"), s"shard=$shardRows: $events")
+      // fresh chunks: created in place, one object per column
+      assert(chunkEvents("create", isChunk).sorted == Seq("2", "2", "3", "3"),
+        s"shard=$shardRows: $events")
+      for (name <- Seq("id", "word")) {
+        val leftovers = new java.io.File(s"$dir/t/$name/c").list().filter(_.startsWith(".tmp-"))
+        assert(leftovers.isEmpty, s"shard=$shardRows $name: ${leftovers.toSeq}")
+      }
+      val back = spark.read.format("zarr").option("group", "/t").load(uri)
+        .orderBy("id").collect()
+      assert(back.map(r => (r.getAs[Long]("id"), r.getAs[String]("word"))).toSeq ==
+        (0L until 16L).map(i => (i, s"w$i")), s"shard=$shardRows")
+    }
+  }
+
+  test("batch write ≡ streamed epochs: byte-identical chunk objects and stats sidecar") {
+    // the same seeded rows written once by df.write and once as four
+    // epochs whose boundaries (5, 12, 21) all cut through a chunk of 8 rows,
+    // so every later epoch merges and rewrites a partial tail chunk
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    implicit val ctx = spark.sqlContext
+    val n = 27
+    val epochs = Seq(0 until 5, 5 until 12, 12 until 21, 21 until n)
+    val rnd = new scala.util.Random(20261020L)
+    def box(): String = {
+      val (x, y) = (rnd.nextInt(360) - 180.0, rnd.nextInt(180) - 90.0)
+      val (x1, y1) = (x + rnd.nextDouble() * 5, y + rnd.nextDouble() * 5)
+      s"POLYGON (($x $y, $x1 $y, $x1 $y1, $x $y1, $x $y))"
+    }
+    val scalar = (0 until n).map { i =>
+      (i.toLong,
+        if (rnd.nextInt(6) == 0) null else s"name${rnd.nextInt(1000)}",
+        rnd.nextGaussian(),
+        rnd.nextInt(8) match { case 0 => null; case 1 => "POLYGON ((oops"; case _ => box() })
+    }
+    val scalarCols = Seq("id", "name", "score", "bbox")
+    val vectors = (0 until n).map(i => (i.toLong, Seq.fill(3)(rnd.nextFloat())))
+    val vectorCols = Seq("id", "vec")
+
+    def batch(df: org.apache.spark.sql.DataFrame, opts: Map[String, String]): String = {
+      val dir = tempDir("zparity_batch") + "/store.zarr"
+      df.withColumn("idx", col("id")).coalesce(1).write.format("zarr")
+        .option("group", "/t").option("chunk_rows", "8").option("row_index", "idx")
+        .options(opts).mode("overwrite").save(dir)
+      dir
+    }
+    def stream[T: org.apache.spark.sql.Encoder](rows: Seq[T], cols: Seq[String],
+        opts: Map[String, String]): String = {
+      val dir = tempDir("zparity_stream") + "/store.zarr"
+      val mem = MemoryStream[T]
+      val q = mem.toDF().toDF(cols: _*).writeStream.format("zarr")
+        .option("group", "/t").option("chunk_rows", "8").options(opts)
+        .option("checkpointLocation", tempDir("zparity_ckpt"))
+        .start(dir)
+      try epochs.foreach { r =>
+        mem.addData(rows.slice(r.start, r.end): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      dir
+    }
+    /** Every chunk object of the table, by path under the group. */
+    def chunkObjects(dir: String): Map[String, Array[Byte]] = {
+      val root = Paths.get(dir, "t")
+      Files.walk(root).iterator().asScala
+        .filter(p => Files.isRegularFile(p) && !p.getFileName.toString.startsWith("."))
+        .map(p => root.relativize(p).toString)
+        .filter(_.split(java.io.File.separator).contains("c"))
+        .map(rel => rel -> Files.readAllBytes(root.resolve(rel))).toMap
+    }
+    def stats(dir: String): String =
+      new String(Files.readAllBytes(Paths.get(dir, "t", ZarrStats.FileName)), "UTF-8")
+
+    for ((layout, ncols, b, s) <- Seq(
+        ("scalar + bbox", 4, batch(scalar.toDF(scalarCols: _*), Map.empty),
+          stream(scalar, scalarCols, Map.empty)),
+        ("sharded", 4, batch(scalar.toDF(scalarCols: _*), Map("shard_rows" -> "4")),
+          stream(scalar, scalarCols, Map("shard_rows" -> "4"))),
+        ("2-D array", 2, batch(vectors.toDF(vectorCols: _*), Map.empty),
+          stream(vectors, vectorCols, Map.empty)))) {
+      val (bc, sc) = (chunkObjects(b), chunkObjects(s))
+      assert(bc.size == 4 * ncols, s"$layout: ${bc.keys}") // 27 rows = 4 chunks
+      assert(bc.keySet == sc.keySet, s"$layout: ${bc.keySet} vs ${sc.keySet}")
+      bc.foreach { case (k, bytes) =>
+        assert(java.util.Arrays.equals(bytes, sc(k)), s"$layout: $k differs")
+      }
+      assert(stats(b) == stats(s), s"$layout")
+      if (ncols == 4) assert(stats(b).contains("envelopes"), layout)
+    }
   }
 }

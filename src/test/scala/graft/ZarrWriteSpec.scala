@@ -346,6 +346,26 @@ class ZarrWriteSpec extends SparkSpec {
       Option(e.getCause).exists(_.getMessage.contains("must divide")))
   }
 
+  test("a rejected overwrite leaves the existing table in place") {
+    // every option check runs before the overwrite deletes the old group
+    val dir = tempDir("zw_bad_overwrite") + "/store.zarr"
+    spark.range(10).coalesce(1).write.format("zarr").option("group", "/t")
+      .option("chunk_rows", "4").mode("overwrite").save(dir)
+    for ((opts, why) <- Seq(
+        Map("chunk_rows" -> "40", "shard_rows" -> "9") -> "must divide",
+        Map("compression" -> "lz5") -> "unsupported compression",
+        Map("zarr_format" -> "2", "shard_rows" -> "2") -> "no sharding")) {
+      val e = intercept[Exception] {
+        spark.range(3).coalesce(1).write.format("zarr").option("group", "/t")
+          .options(opts).mode("overwrite").save(dir)
+      }
+      val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
+      assert(msgs.contains(why), s"$opts: $msgs")
+      assert(spark.read.format("zarr").option("group", "/t").load(dir).count() == 10, opts)
+    }
+  }
+
   test("append onto an existing table is rejected (not a silent overwrite)") {
     val dir = tempDir("zw_app") + "/store.zarr"
     spark.range(5).coalesce(1).write.format("zarr")
