@@ -15,8 +15,10 @@ object Verify {
     }
     val sfDir = args(0)
     val outDir = args(1)
-    // optional dev filter (the driver always passes two args): dump only
-    // the named queries — compare.py skips absent outputs, so a single
+    // optional dev filter (a full run passes two args): dump only
+    // the named queries. oracle_sql.json is filtered to the same names
+    // below, so compare.py checks only them (it reports every name in
+    // that file without a dump as "spark output missing") and a single
     // new query round-trips in seconds instead of a full-surface run
     val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, pmod, sum, when, xxhash64}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Shared at-rest table machinery for the incremental operators
@@ -17,8 +20,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *   root/_v<N>/...           <- one complete table per version
  *   root/_v<N>/_meta.json    <- layout parameters + "format": "1"
  *                               (swaps atomically with the data)
+ *   root/_v<N>/_ledger/ingest_batch=<B>/ <- per-batch stats deltas
  *   root/_lease              <- writer fence
  *   root/_committed/batch-<B><- exactly-once ingest markers (corpus/IVF)
+ *   root/_committed/recheck-<R>, recheck-frontier <- recheck markers
  * }}}
  * Every sidecar is stamped with [[Format]] by [[metaJson]], and
  * [[resolve]]/[[readMeta]] check it: a root holding data without
@@ -37,6 +42,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * before the swap still reads a complete table; the old version dies on
  * the NEXT maintenance pass (one-generation reader grace; a production
  * deployment would add a time-based grace instead).
+ *
+ * The exactly-once lifecycle lives here too, once for both table
+ * families: the stream wrapper ([[ingestStream]]), the batch protocol
+ * ([[ingestBatch]]: lease → marker replay → probe snapshot → commit-mutex
+ * delta re-probe → publish → ledger delta → `_committed` marker), the
+ * recheck marker and frontier ([[recheckSince]]/[[recheckIncremental]])
+ * and the stats ledger. A family supplies only how candidates are found
+ * and verified and how admitted rows are laid out ([[Admission]]).
  */
 object AtRest {
 
@@ -350,10 +363,9 @@ object AtRest {
    *  must fall back to a full sweep for that one pass (the r15 review's
    *  silently-skipped-range bug). Written BEFORE the version swap:
    *  a crashed staging leaves only a harmlessly-early frontier. */
-  def writeCollapseFrontier(fs: FileSystem, root: String,
-      foldedThrough: Long): Unit =
+  def writeCollapseFrontier(fs: FileSystem, root: String): Unit =
     writeFile(fs, new Path(root, "_committed/collapse-frontier"),
-      s"${foldedThrough + 1}".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      utf8(s"${maxCommittedBatch(fs, root) + 1}"))
 
   /** The first batch id NOT folded into the seed by past maintenance;
    *  0 when nothing was ever folded. LOUD on an unparsable file (the
@@ -384,9 +396,11 @@ object AtRest {
    *  batch below it can replay) and delete the `batch-<n>` markers
    *  below. Watermark first, then the sweep: a crash in between leaves
    *  extra markers, never missing coverage. Monotonic — lowering an
-   *  existing watermark would un-commit history. */
+   *  existing watermark would un-commit history. Runs under the root's
+   *  writer lease. A sharded fleet's watermark is the MINIMUM of the
+   *  shards' oldest replayable namespaced ids. */
   def compactMarkers(spark: SparkSession, root: String,
-      oldestReplayable: Long): Unit = {
+      oldestReplayable: Long): Unit = withLease(spark, root) {
     val fs = fsFor(spark, root)
     markerWatermark(fs, root).foreach { prev =>
       require(oldestReplayable >= prev,
@@ -582,7 +596,7 @@ object AtRest {
    * Same-shard writers are serialized exactly like the unsharded case.
    * Cross-shard near-duplicates are caught twice: the probe covers every
    * batch already committed at probe time, and the commit-mutex-serialized
-   * delta re-probe ([[withCommitLock]], [[DedupIndex.ingestBatch]]) covers
+   * delta re-probe ([[withCommitLock]], [[ingestBatch]]) covers
    * batches that commit between a batch's probe snapshot and its own
    * commit — so two in-flight batches racing on a cross-shard pair can no
    * longer both admit. The offline [[DedupIndex.recheckCorpus]] /
@@ -665,7 +679,7 @@ object AtRest {
    * design; the writer fences exist to make *unintended* concurrency
    * loud). Holding it, a writer's view of "batches committed before
    * mine" is total-ordered — the foundation of the cross-shard
-   * in-flight dedup close ([[DedupIndex.ingestBatch]]'s delta
+   * in-flight dedup close ([[ingestBatch]]'s delta
    * re-probe). TTL bounds a crashed holder's obstruction; its
    * half-published batch is unmarked and replays. */
   def withCommitLock[T](spark: SparkSession, root: String,
@@ -683,5 +697,524 @@ object AtRest {
       }
     }
     try body finally releaseLeaseAt(fs, p, owner)
+  }
+
+  // ------------------------------------------------------------------ ledger
+
+  /** The batch id of seed writes, ad-hoc appends and collapsed ledger
+   *  deltas: `ingest_batch=-1`. */
+  private[graft] val SeedBatch = -1L
+
+  /** A version directory's stats ledger: one long-form `(grp, counter,
+   *  value)` delta per `ingest_batch=<B>/` child. */
+  private[graft] def ledgerDir(dir: String): Path = new Path(dir, "_ledger")
+
+  /** The ledgerBy table property, if the table maintains a ledger. */
+  private[graft] def ledgerBy(spark: SparkSession, root: String): Option[String] =
+    readMeta(spark, root).flatMap(_.get("ledgerBy"))
+
+  /** One counter = the per-group row count of `rows`, long-form. */
+  private[graft] def countLong(rows: DataFrame, grp: String, counter: String): DataFrame =
+    rows.groupBy(col(grp).cast("string").as("grp"))
+      .agg(count(lit(1)).as("value"))
+      .select(col("grp"), lit(counter).as("counter"), col("value"))
+
+  /** Stage + atomic-rename publish of one ledger delta into version dir
+   *  `dir` (idempotent, like the data path). Deltas are sources ×
+   *  counters rows — one file. */
+  private[graft] def publishLedgerDelta(delta: DataFrame, dir: String, id: Long): Unit = {
+    val spark = delta.sparkSession
+    val ld = ledgerDir(dir)
+    fsFor(spark, dir).mkdirs(ld)
+    publishBatchDir(spark, ld.toString, id)(st =>
+      delta.coalesce(1).write.mode("overwrite").parquet(st))
+  }
+
+  /** All deltas of a version dir's ledger, long-form; None = no ledger. */
+  private[graft] def ledgerLong(spark: SparkSession, dir: String): Option[DataFrame] = {
+    val ld = ledgerDir(dir)
+    if (!fsFor(spark, dir).exists(ld)) None
+    else Some(spark.read.parquet(ld.toString)
+      .select(col("grp"), col("counter"), col("value")))
+  }
+
+  /** Carry the live version's ledger, plus `adjust`, into a staged
+   *  maintenance rewrite as ONE collapsed seed delta (same totals). A
+   *  version without ledger deltas carries nothing: an adjustment alone
+   *  would turn the card's loud "damaged" error into negative counts. */
+  private[graft] def carryLedger(spark: SparkSession, liveDir: String,
+      staging: Path, adjust: Option[DataFrame] = None): Unit =
+    ledgerLong(spark, liveDir).foreach { lf =>
+      val collapsed = adjust.fold(lf)(lf.unionByName(_))
+        .groupBy("grp", "counter").agg(sum(col("value")).as("value"))
+        .select("grp", "counter", "value")
+      publishLedgerDelta(collapsed, staging.toString, SeedBatch)
+    }
+
+  /**
+   * The per-group card, READ FROM THE LEDGER — O(committed batches ×
+   * groups × counters) rows, no table scan. One wide row per value of the
+   * table's `ledgerBy` column, one column per entry of `counters` (a
+   * family's own list); missing counters fold to 0. Loud on an unledgered
+   * table: a silent empty card would read as "clean". `seedFn`/`enableFn`
+   * name the family's entry points for the error text.
+   */
+  private[graft] def ledgerCard(spark: SparkSession, root: String,
+      counters: Seq[String], seedFn: String, enableFn: String): DataFrame = {
+    val grpName = ledgerBy(spark, root).getOrElse(
+      throw new IllegalStateException(
+        s"$root maintains no stats ledger — seed with " +
+          s"$seedFn(..., ledgerBy = <col>) or migrate with $enableFn"))
+    val lf = ledgerLong(spark, resolve(spark, root)).getOrElse(
+      throw new IllegalStateException(
+        s"$root declares ledgerBy=$grpName but has no _ledger deltas — " +
+          s"the table is damaged; re-run $enableFn to rebuild"))
+    val aggs = counters.map(c =>
+      sum(when(col("counter") === c, col("value")).otherwise(0L)).as(c))
+    lf.groupBy("grp").agg(aggs.head, aggs.tail: _*)
+      .withColumnRenamed("grp", grpName)
+      .orderBy(grpName)
+  }
+
+  /** Migrate a live unledgered table to ledger maintenance: `seedDelta`
+   *  (one recompute over the CURRENT table) becomes the collapsed seed
+   *  delta, and the `ledgerBy` meta property turns every later ingest
+   *  incremental. Drop-history counters start at 0 — the history before
+   *  enablement was never recorded. */
+  private[graft] def enableLedger(spark: SparkSession, root: String,
+      ledgerByCol: String, seedFn: String)(seedDelta: => DataFrame): Unit =
+    withLease(spark, root) {
+      val meta = readMeta(spark, root).getOrElse(
+        throw new IllegalStateException(
+          s"$root has no _meta.json — seed it through $seedFn first"))
+      val dir = resolve(spark, root)
+      val fs = fsFor(spark, root)
+      val ld = ledgerDir(dir)
+      if (fs.exists(ld)) fs.delete(ld, true)
+      publishLedgerDelta(seedDelta, dir, SeedBatch)
+      writeMeta(spark, root, meta + ("ledgerBy" -> ledgerByCol))
+    }
+
+  // ------------------------------------------------------ exactly-once ingest
+
+  private def batchMarker(root: String, batchId: Long): Path =
+    new Path(root, s"_committed/batch-$batchId")
+
+  /** The batch ids published under `dir` (its `ingest_batch=<id>` children). */
+  private def listBatchIds(fs: FileSystem, dir: String): Set[Long] = {
+    val p = new Path(dir)
+    if (!fs.exists(p)) Set.empty
+    else fs.listStatus(p).iterator.map(_.getPath.getName)
+      .filter(_.startsWith("ingest_batch="))
+      .flatMap(_.stripPrefix("ingest_batch=").toLongOption).toSet
+  }
+
+  /** Stage `dir/_staging_<id>` through `stage` (which writes in overwrite
+   *  mode, clobbering a dead attempt's partial staging), then publish it
+   *  with one atomic rename to `dir/ingest_batch=<id>`. A no-op when the
+   *  target is already published, so a replay cannot double-append. */
+  private[graft] def publishBatchDir(spark: SparkSession, dir: String, id: Long)(
+      stage: String => Unit): Unit = {
+    val fs = fsFor(spark, dir)
+    val target = new Path(dir, s"ingest_batch=$id")
+    if (fs.exists(target)) return
+    val staging = new Path(dir, s"_staging_$id")
+    stage(staging.toString)
+    if (!fs.rename(staging, target))
+      throw new IllegalStateException(s"publish rename $staging -> $target failed")
+  }
+
+  /**
+   * What a table family supplies to [[ingestBatch]] for one batch: how
+   * candidates are found and verified, and how admitted rows are laid out
+   * on disk. Built under the batch's leases, after the family validated
+   * its parameters and resolved its live version directories. Text tables
+   * probe banded MinHash keys and verify by shingle Jaccard; vector tables
+   * probe IVF lists and verify by cosine.
+   *
+   * @param b the batch's rows, deduplicated by id and cached
+   */
+  private[graft] abstract class Admission(val b: DataFrame) {
+    /** The live directory whose `ingest_batch=<id>` children are the
+     *  committed batches the probe reads. */
+    def probeDir: String
+    /** The live directories whose `ingest_batch=<batchId>` child a
+     *  crashed attempt may have left unmarked — a replay un-publishes
+     *  these first. */
+    def batchDirs: Seq[String]
+    /** The live version directory whose `_ledger` takes the batch's delta. */
+    def ledgerIn: String
+    /** Ids of `b` that near-duplicate a smaller id of `b`. */
+    def inBatchDrops: DataFrame
+    /** Ids of `b` that near-duplicate a committed row. */
+    def crossDrops: DataFrame
+    /** Ids of `admitted` that near-duplicate rows of the committed batches
+     *  `delta` (sorted); None when no such pair can exist. */
+    def reprobe(admitted: DataFrame, delta: Seq[Long]): Option[DataFrame]
+    /** Write the `n` (> 0) admitted rows: staged and renamed to
+     *  `ingest_batch=<batchId>`, or appended to the seed batch for an
+     *  ad-hoc (batchId < 0) ingest. */
+    def publish(admitted: DataFrame, n: Long): Unit
+    /** The admitted rows' ledger counters, long-form. */
+    def admittedStats(admitted: DataFrame, grp: String): DataFrame
+    /** Free the family's own per-batch caches. */
+    def release(): Unit = ()
+  }
+
+  /** Test seam: runs after the probe snapshot is materialized and before
+   *  the commit section — a spec injects a concurrent shard's commit here
+   *  to exercise the cross-shard delta re-probe deterministically. A
+   *  no-op in production. */
+  private[graft] var onBeforeCommit: () => Unit = () => ()
+
+  /** Take the whole-root (`nShards <= 1`) or shard lease on each root in
+   *  order; on failure release the ones already taken. */
+  private def acquireAll(spark: SparkSession, roots: Seq[String], owner: String,
+      shard: Int, nShards: Int): Unit =
+    roots.indices.foreach { i =>
+      try {
+        if (nShards <= 1) acquireLease(spark, roots(i), owner)
+        else acquireShardLease(spark, roots(i), owner, shard, nShards)
+      } catch { case e: Throwable =>
+        releaseAll(spark, roots.take(i), owner, shard, nShards); throw e
+      }
+    }
+
+  private def releaseAll(spark: SparkSession, roots: Seq[String], owner: String,
+      shard: Int, nShards: Int): Unit =
+    roots.reverseIterator.foreach { r =>
+      if (nShards <= 1) releaseLease(spark, r, owner)
+      else releaseShardLease(spark, r, owner, shard, nShards)
+    }
+
+  /**
+   * One micro-batch of an at-rest ingest loop: dedup `batch` within itself
+   * and against the committed table, publish the survivors, return the
+   * admitted count. `roots` are leased in order; the first holds the
+   * sharded commit mutex, the last the `_committed` markers and (in its
+   * live version) the ledger. `admit` receives the table's `ledgerBy`
+   * property and returns the family's [[Admission]].
+   *
+   * Within-batch semantics are the greedy local rule: a row drops when it
+   * is the strictly-LARGER member of any verified pair.
+   *
+   * Delivery with `batchId >= 0` is EXACTLY-ONCE: each data dir's batch
+   * stages under `_staging_<batchId>` and publishes with one atomic
+   * rename to `ingest_batch=<batchId>`, then the ledger delta, then a
+   * `_committed/batch-<batchId>` marker holding the admitted count. A
+   * replay short-circuits on the marker (a corrupt one means NOT
+   * committed); a replay after a partial crash first un-publishes the
+   * batch's unmarked dirs, so its probe sees the exact pre-attempt state
+   * and the admit decision is the same. A batchId below the
+   * compacted-marker watermark fails loudly. `batchId < 0` is the plain
+   * at-least-once append for direct one-shot callers, refused up front
+   * on a ledgered table (no replay identity, so its delta could
+   * double-count).
+   *
+   * Writer fencing: the call runs under each root's lease (`leaseOwner`
+   * null = a transient per-call owner; a stream passes its lifetime
+   * owner, which refreshes rather than re-claims). A sharded writer
+   * (`nShards > 1`) holds shard leases, rejects rows outside its id range
+   * `pmod(xxhash64(id), nShards) = shard` loudly, and commits under the
+   * first root's commit mutex: holding it, the batch re-probes exactly
+   * the batches whose markers appeared since its probe snapshot, and on a
+   * hit ITS member drops (the committed side is immutable). Two in-flight
+   * batches racing on a cross-shard pair therefore cannot both admit.
+   * Unsharded writers skip the mutex: their whole-root lease already
+   * excludes concurrency.
+   */
+  private[graft] def ingestBatch(batch: DataFrame, roots: Seq[String], idCol: String,
+      batchId: Long, leaseOwner: String, shard: Int, nShards: Int)(
+      admit: Option[String] => Admission): Long = {
+    val spark = batch.sparkSession
+    val root = roots.last
+    val fs = fsFor(spark, root)
+    val marker = batchMarker(root, batchId)
+    if (batchId >= 0 && fs.exists(marker)) {
+      utf8(readFile(fs, marker)).trim.toLongOption match {
+        case Some(n) => return n
+        case None => fs.delete(marker, false)
+      }
+    }
+    if (batchId >= 0) failIfBelowWatermark(fs, root, batchId)
+    val owner = Option(leaseOwner).getOrElse(java.util.UUID.randomUUID().toString)
+    acquireAll(spark, roots, owner, shard, nShards)
+    try StageCoalesce.sizeBased(spark) {
+      val grp = ledgerBy(spark, root)
+      if (grp.isDefined && batchId < 0)
+        throw new IllegalArgumentException(
+          s"$root maintains an exactly-once stats ledger, which an ad-hoc " +
+            "(batchId < 0) append cannot honor — pass a stable batchId >= 0 " +
+            "(or ingest through a stream)")
+      grp.foreach(g => require(batch.columns.contains(g),
+        s"ledger maintenance requires column '$g' ($root/_meta.json declares " +
+          s"ledgerBy=$g); got ${batch.columns.mkString("[", ", ", "]")}"))
+      val adm = admit(grp)
+      val b = adm.b
+      if (batchId >= 0) adm.batchDirs.foreach { d =>
+        val p = new Path(d, s"ingest_batch=$batchId")
+        val dfs = fsFor(spark, d)
+        if (dfs.exists(p)) dfs.delete(p, true)
+      }
+      if (nShards > 1) {
+        val nOutside = b.filter(
+          pmod(xxhash64(col(idCol)), lit(nShards.toLong)) =!= shard).count()
+        if (nOutside > 0)
+          throw new IllegalStateException(
+            s"$nOutside batch rows fall outside shard $shard of $nShards " +
+              s"(pmod(xxhash64($idCol), $nShards)); route every row to its " +
+              "owning shard's stream — the sharded streams filter automatically")
+      }
+      // localCheckpoint on the drop sets: tiny frames whose LINEAGE is the
+      // whole dedup/probe machinery; the admit anti-join, the ledger counts
+      // and the sharded commit's unions would each re-plan it otherwise
+      val inDrop = adm.inBatchDrops.localCheckpoint(true)
+      // snapshot of the committed batch dirs, taken before the probe: the
+      // sharded commit re-probes the batches that commit after this point
+      val pfs = fsFor(spark, adm.probeDir)
+      val snapshot = listBatchIds(pfs, adm.probeDir)
+      val crossDrop =
+        if (snapshot.isEmpty) b.select(col(idCol)).limit(0)
+        else adm.crossDrops.localCheckpoint(true)
+      // materialized HERE: the heavy probing finishes before the
+      // (serialized) commit section, whose queries plan against a leaf. A
+      // lost block just replays the batch, which the protocol allows.
+      val admitted0 = b.join(inDrop.unionByName(crossDrop).distinct(),
+          Seq(idCol), "left_anti")
+        .localCheckpoint(true)
+      onBeforeCommit()
+
+      def publish(admitted: DataFrame, crossDropAll: DataFrame): Long = {
+        val n = admitted.count()
+        if (n > 0) adm.publish(admitted, n)
+        // the ledger delta publishes AFTER the data, BEFORE the marker: a
+        // crash in between replays the whole batch, so card and table can
+        // never disagree. An all-dropped batch publishes too (its drop
+        // counters are real).
+        grp.foreach { g =>
+          val crossOnly = crossDropAll.join(inDrop, Seq(idCol), "left_anti")
+          val delta = adm.admittedStats(admitted, g)
+            .unionByName(countLong(b.join(inDrop, Seq(idCol), "left_semi"),
+              g, "n_dropped_batch"))
+            .unionByName(countLong(b.join(crossOnly, Seq(idCol), "left_semi"),
+              g, "n_dropped_cross"))
+          publishLedgerDelta(delta, adm.ledgerIn, batchId)
+        }
+        if (batchId >= 0) writeFile(fs, marker, utf8(n.toString))
+        n
+      }
+
+      val n =
+        if (nShards <= 1) publish(admitted0, crossDrop)
+        else withCommitLock(spark, roots.head) {
+          val delta = (listBatchIds(pfs, adm.probeDir) -- snapshot - batchId)
+            .filter(id => fs.exists(batchMarker(root, id)))
+          (if (delta.isEmpty) None else adm.reprobe(admitted0, delta.toSeq.sorted)) match {
+            case None => publish(admitted0, crossDrop)
+            case Some(more0) =>
+              val more = more0.persist(StorageLevel.MEMORY_AND_DISK_SER)
+              val admitted = admitted0.join(more, Seq(idCol), "left_anti")
+                .persist(StorageLevel.MEMORY_AND_DISK_SER)
+              val out = publish(admitted, crossDrop.unionByName(more).distinct())
+              admitted.unpersist(blocking = false)
+              more.unpersist(blocking = false)
+              out
+          }
+        }
+      adm.release()
+      admitted0.unpersist(blocking = false)
+      b.unpersist(blocking = false)
+      n
+    } finally if (leaseOwner == null) releaseAll(spark, roots, owner, shard, nShards)
+  }
+
+  /**
+   * The streaming wrapper: every micro-batch of `input` flows through
+   * `ingest(batch, batchId, leaseOwner)` with its foreachBatch id, making
+   * the loop exactly-once end to end (state lives in the at-rest roots,
+   * not in Spark streaming state — it survives restarts and is shared
+   * with batch probes).
+   *
+   * Holds each root's writer lease for the STREAM's lifetime, so a second
+   * concurrent writer fails at start(). The owner derives from the
+   * checkpoint path, so a restart on the same checkpoint re-claims its own
+   * lease; the lease releases on query termination (and goes stale by TTL
+   * if the Spark driver dies hard). A sharded stream (`nShards > 1`) holds
+   * shard leases, filters its input to `pmod(xxhash64(idCol), nShards) =
+   * shard` (so all shards can consume one source) and numbers its batches
+   * `id × nShards + shard`, so batch dirs, markers, bloom tags and ledger
+   * deltas never collide across shards.
+   */
+  private[graft] def ingestStream(input: DataFrame, roots: Seq[String],
+      checkpointPath: String, idCol: String, shard: Int = 0, nShards: Int = 1)(
+      ingest: (DataFrame, Long, String) => Unit): StreamingQuery = {
+    val spark = input.sparkSession
+    val owner = s"ckpt:$checkpointPath"
+    acquireAll(spark, roots, owner, shard, nShards)
+    def release(): Unit = releaseAll(spark, roots, owner, shard, nShards)
+    val own = if (nShards <= 1) input
+      else input.filter(pmod(xxhash64(col(idCol)), lit(nShards.toLong)) === shard)
+    val query =
+      try own.writeStream
+        .option("checkpointLocation", checkpointPath)
+        .foreachBatch((b: DataFrame, id: Long) => ingest(b, id * nShards + shard, owner))
+        .start()
+      catch { case e: Throwable => release(); throw e }
+    val qid = query.id
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        if (e.id == qid) {
+          release()
+          spark.streams.removeListener(this)
+        }
+    }
+    spark.streams.addListener(listener)
+    // a query that died BEFORE the listener registered never gets its
+    // termination event — release now instead of waiting out the TTL
+    if (!query.isActive) {
+      release()
+      spark.streams.removeListener(listener)
+    }
+    query
+  }
+
+  // ----------------------------------------------------------------- recheck
+
+  /** A committed recheck pass's recorded outcome: removed count, the
+   *  highest batch it covered, and the window START it actually ran
+   *  from (0 = provably adjudicated everything below its coverage —
+   *  what a frontier bootstrap may safely resume past; a caller-driven
+   *  window start > 0 proves nothing about the batches below it). */
+  private case class RecheckMarker(removed: Long, coveredUpTo: Long, since: Long)
+
+  private def recheckMarker(root: String, recheckId: Long): Path =
+    new Path(root, s"_committed/recheck-$recheckId")
+
+  /** Parse a committed recheck marker; an unparsable one is deleted
+   *  (= NOT committed), mirroring the batch-marker contract. */
+  private def recheckMarkerInfo(fs: FileSystem, root: String,
+      recheckId: Long): Option[RecheckMarker] = {
+    val marker = recheckMarker(root, recheckId)
+    if (!fs.exists(marker)) return None
+    utf8(readFile(fs, marker)).trim.split("\\s+").toSeq.map(_.toLongOption) match {
+      case Seq(Some(n), Some(cov), Some(since)) => Some(RecheckMarker(n, cov, since))
+      case _ => fs.delete(marker, false); None
+    }
+  }
+
+  /** The highest batch id with committed history under `root`: max over
+   *  the per-batch markers, floored by the compaction watermark (whose
+   *  markers are gone but were committed). -1 for a seed-only table. */
+  private def maxCommittedBatch(fs: FileSystem, root: String): Long = {
+    val dir = new Path(root, "_committed")
+    val fromMarkers =
+      if (!fs.exists(dir)) None
+      else fs.listStatus(dir).iterator.flatMap { st =>
+        val nm = st.getPath.getName
+        if (nm.startsWith("batch-")) nm.drop(6).toLongOption else None
+      }.maxOption
+    val fromWatermark = markerWatermark(fs, root).map(_ - 1)
+    (fromMarkers.toSeq ++ fromWatermark.toSeq).maxOption.getOrElse(-1L)
+  }
+
+  private def frontierPath(root: String) = new Path(root, "_committed/recheck-frontier")
+
+  /** The persisted incremental-recheck frontier: `(nextSince, nextId)` —
+   *  the first batch id not yet adjudicated and the next recheck id. */
+  private def readFrontier(fs: FileSystem, root: String): Option[(Long, Long)] = {
+    val p = frontierPath(root)
+    if (!fs.exists(p)) None
+    else {
+      val toks = utf8(readFile(fs, p)).trim.split("\\s+").toSeq
+      (toks.headOption.flatMap(_.toLongOption),
+        toks.lift(1).flatMap(_.toLongOption)) match {
+        case (Some(since), Some(id)) => Some((since, id))
+        case _ => throw new IllegalStateException(
+          s"$p is unparsable — restore it to '<nextSince> <nextRecheckId>' " +
+            "or delete it to restart the frontier from batch 0")
+      }
+    }
+  }
+
+  /**
+   * One EXACTLY-ONCE recheck pass over the batches `>= sinceBatch`: a
+   * committed `_committed/recheck-<recheckId>` marker short-circuits with
+   * its recorded count; otherwise `sweep(window)` runs under the root's
+   * lease and its count lands in the marker. `window` is `sinceBatch`, or
+   * None (= the whole table) when it starts below the collapse frontier:
+   * maintenance folded those batch dirs into the seed, so they cannot be
+   * scoped by dir and the one pass full-sweeps (the next window starts
+   * past the coverage and is incremental again). The marker records the
+   * highest committed batch — snapshotted under the lease, so no ingest
+   * can commit during the pass — and the window the pass actually ran
+   * from (a full sweep covers from 0).
+   */
+  private[graft] def recheckSince(spark: SparkSession, root: String, sinceBatch: Long,
+      recheckId: Long)(sweep: Option[Long] => Long): Long = {
+    require(recheckId >= 0, s"recheckId must be >= 0, got $recheckId")
+    val fs = fsFor(spark, root)
+    recheckMarkerInfo(fs, root, recheckId) match {
+      case Some(m) => return m.removed
+      case None => // absent or unparsable (the latter deleted) — run
+    }
+    StageCoalesce.sizeBased(spark)(withLease(spark, root) {
+      val coveredUpTo = maxCommittedBatch(fs, root)
+      val window = if (sinceBatch < collapseFrontier(fs, root)) None else Some(sinceBatch)
+      val n = sweep(window)
+      writeFile(fs, recheckMarker(root, recheckId),
+        utf8(s"$n $coveredUpTo ${window.getOrElse(0L)}"))
+      n
+    })
+  }
+
+  /**
+   * [[recheckSince]] with ZERO caller bookkeeping — the cron-shaped entry:
+   * `pass(sinceBatch, recheckId)` runs with both derived from the
+   * persisted `_committed/recheck-frontier` (absent = adjudicate
+   * everything since batch 0, next id after any existing recheck
+   * markers), and the frontier advances afterwards. The advance is
+   * REPLAY-SAFE because it derives from the recheck marker's own recorded
+   * coverage, not from re-listing: a crash between the recheck's commit
+   * and the frontier write re-runs with the same id, short-circuits on
+   * the marker, and advances to exactly the range that marker covered —
+   * batches ingested after the crash stay ahead of the frontier for the
+   * NEXT pass, never skipped.
+   */
+  private[graft] def recheckIncremental(spark: SparkSession, root: String)(
+      pass: (Long, Long) => Long): Long = {
+    val fs = fsFor(spark, root)
+    val (since, id) = readFrontier(fs, root).getOrElse {
+      val dir = new Path(root, "_committed")
+      val maxExisting =
+        if (!fs.exists(dir)) None
+        else fs.listStatus(dir).iterator.flatMap { st =>
+          val nm = st.getPath.getName
+          if (nm.startsWith("recheck-") && nm != "recheck-frontier")
+            nm.drop(8).toLongOption
+          else None
+        }.maxOption
+      // bootstrap after existing markers (a crash between the marker
+      // write and the first frontier write lands here): resume past the
+      // LATEST marker only when it PROVABLY covered everything below
+      // (window start 0 + recorded coverage); a caller-driven window
+      // starting above 0 proves nothing about the batches below it, so
+      // restart from 0 (idempotent re-adjudication, never a skip)
+      maxExisting match {
+        case Some(mid) =>
+          recheckMarkerInfo(fs, root, mid) match {
+            case Some(RecheckMarker(_, cov, 0L)) => (cov + 1L, mid + 1L)
+            case _ => (0L, mid + 1L)
+          }
+        case None => (0L, 0L)
+      }
+    }
+    val n = pass(since, id)
+    val nextSince = recheckMarkerInfo(fs, root, id).getOrElse(
+      throw new IllegalStateException(
+        s"recheck-$id committed but its marker is unreadable")).coveredUpTo + 1L
+    writeFile(fs, frontierPath(root), utf8(s"$nextSince ${id + 1L}"))
+    n
   }
 }

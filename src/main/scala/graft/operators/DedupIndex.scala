@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{SketchFunctions, TextFunctions}
+import AtRest.SeedBatch
 
 /**
  * At-rest MinHash-LSH dedup index — the INCREMENTAL half of [[Dedup]].
@@ -91,13 +92,6 @@ object DedupIndex {
       .withColumn("bucket_part", pmod(xxhash64(col("band"), col("bucket")), lit(nParts)))
       .select("bucket_part", "band", "bucket", "id")
 
-  private def bandedKeys(docs: DataFrame, textCol: String, idCol: String,
-      numHashes: Int, bands: Int, shingleWords: Int, nParts: Int): DataFrame = {
-    require(numHashes % bands == 0, s"bands ($bands) must divide numHashes ($numHashes)")
-    bandedKeysFromSigs(sigFrame(docs, textCol, idCol, numHashes, shingleWords),
-      bands, numHashes / bands, nParts)
-  }
-
   private def capBuckets(banded: DataFrame, maxBucket: Int): DataFrame = {
     val ok = banded.groupBy("band", "bucket")
       .agg(count(lit(1)).as("_n"))
@@ -115,34 +109,13 @@ object DedupIndex {
     docs.withColumn("id_part", pmod(xxhash64(col(idCol)), lit(nParts)))
 
   // Both at-rest tables nest `ingest_batch=<n>/<layout>=<p>/` so a batch
-  // publish is ONE atomic directory rename (`ingest_batch=<batchId>`);
-  // seed writes and ad-hoc appends use batch -1. Underscore-prefixed
-  // siblings (_staging_*, _bloom, _committed, _v<N>, _meta.json, _lease)
-  // are invisible to parquet partition discovery.
-  private[graft] val SeedBatch = -1L
+  // publish is ONE atomic directory rename (`ingest_batch=<batchId>`,
+  // [[AtRest.publishBatchDir]]); seed writes and ad-hoc appends use batch
+  // -1. Underscore-prefixed siblings (_staging_*, _bloom, _committed,
+  // _v<N>, _meta.json, _lease) are invisible to parquet partition discovery.
 
   private def fsFor(spark: SparkSession, path: String): FileSystem =
     AtRest.fsFor(spark, path)
-
-  /** Stage `df` under `dir/_staging_<batchId>` (partitioned by
-   *  `layoutCol`), then publish it with one atomic rename to
-   *  `dir/ingest_batch=<batchId>`. Idempotent: an already-published
-   *  target makes this a no-op, so a replayed micro-batch cannot
-   *  double-append. Overwrite mode clobbers a dead attempt's partial
-   *  staging. */
-  private def publishBatchDir(df: DataFrame, dir: String, layoutCol: String,
-      batchId: Long, alsoStage: Path => Unit = _ => ()): Unit = {
-    val fs = fsFor(df.sparkSession, dir)
-    val target = new Path(dir, s"ingest_batch=$batchId")
-    if (fs.exists(target)) return
-    val staging = new Path(dir, s"_staging_$batchId")
-    df.write.partitionBy(layoutCol).mode("overwrite").parquet(staging.toString)
-    // extra sidecars (e.g. the batch's `_sigs`) land INSIDE the staging
-    // dir so they publish in the same atomic rename
-    alsoStage(staging)
-    if (!fs.rename(staging, target))
-      throw new IllegalStateException(s"publish rename $staging -> $target failed")
-  }
 
   /** Cluster `df` before a `partitionBy(layoutCol)` write so FILE COUNT
    *  tracks DATA SIZE instead of the session's task count (guide §6):
@@ -321,8 +294,6 @@ object DedupIndex {
    *  release-card convention q_corpus_card pins). */
   val LedgerQualityLow = 0.6
 
-  private def ledgerDirOf(corpDir: String) = new Path(corpDir, "_ledger")
-
   private def requireCol(df: DataFrame, c: String, what: String): Unit =
     require(df.columns.contains(c),
       s"$what requires column '$c' (the corpus _meta.json declares ledgerBy=$c); " +
@@ -351,69 +322,13 @@ object DedupIndex {
           .as(Seq("counter", "value")))
   }
 
-  /** One counter = the per-group row count of `docs`, long-form. */
-  private[graft] def countLong(docs: DataFrame, grp: String, counter: String): DataFrame =
-    docs.groupBy(col(grp).cast("string").as("grp"))
-      .agg(count(lit(1)).as("value"))
-      .select(col("grp"), lit(counter).as("counter"), col("value"))
-
-  /** Stage + atomic-rename publish of one ledger delta (idempotent: an
-   *  already-published ledger batch is a no-op, mirroring the data
-   *  path). Deltas are sources × counters rows — one file. */
-  private[graft] def publishLedgerDelta(delta: DataFrame, corpDir: String,
-      ledgerId: Long): Unit = {
-    val spark = delta.sparkSession
-    val fs = fsFor(spark, corpDir)
-    val ld = ledgerDirOf(corpDir)
-    fs.mkdirs(ld)
-    val target = new Path(ld, s"ingest_batch=$ledgerId")
-    if (fs.exists(target)) return
-    val staging = new Path(ld, s"_staging_$ledgerId")
-    delta.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    if (!fs.rename(staging, target))
-      throw new IllegalStateException(s"ledger publish rename $staging -> $target failed")
-  }
-
-  /** All deltas of a version dir's ledger, long-form; None = no ledger. */
-  private[graft] def ledgerLong(spark: SparkSession, corpDir: String): Option[DataFrame] = {
-    val fs = fsFor(spark, corpDir)
-    val ld = ledgerDirOf(corpDir)
-    if (!fs.exists(ld)) None
-    else Some(spark.read.parquet(ld.toString)
-      .select(col("grp"), col("counter"), col("value")))
-  }
-
-  private[graft] def collapseLedger(lf: DataFrame): DataFrame =
-    lf.groupBy("grp", "counter").agg(sum(col("value")).as("value"))
-      .select("grp", "counter", "value")
-
-  /** The ledgerBy table property, if the corpus maintains a ledger. */
-  private def ledgerByOf(spark: SparkSession, corpusPath: String): Option[String] =
-    AtRest.readMeta(spark, corpusPath).flatMap(_.get("ledgerBy"))
-
   /**
    * The per-source corpus card, READ FROM THE LEDGER — O(committed
-   * batches × sources × counters) rows, no corpus scan. One wide row per
-   * group value of the table's `ledgerBy` column; missing counters fold
-   * to 0. Loud error on unledgered corpora (a silent empty card would
-   * read as "clean corpus").
+   * batches × sources × counters) rows, no corpus scan
+   * ([[AtRest.ledgerCard]]). Loud error on unledgered corpora.
    */
-  def ledgerCard(spark: SparkSession, corpusPath: String): DataFrame = {
-    val grpName = ledgerByOf(spark, corpusPath).getOrElse(
-      throw new IllegalStateException(
-        s"$corpusPath maintains no stats ledger — seed with " +
-          "writeCorpus(..., ledgerBy = <col>) or migrate with enableLedger"))
-    val dir = AtRest.resolve(spark, corpusPath)
-    val lf = ledgerLong(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"$corpusPath declares ledgerBy=$grpName but has no _ledger deltas — " +
-          "the table is damaged; re-run enableLedger to rebuild"))
-    val aggs = LedgerCounters.map(c =>
-      sum(when(col("counter") === c, col("value")).otherwise(0L)).as(c))
-    lf.groupBy("grp").agg(aggs.head, aggs.tail: _*)
-      .withColumnRenamed("grp", grpName)
-      .orderBy(grpName)
-  }
+  def ledgerCard(spark: SparkSession, corpusPath: String): DataFrame =
+    AtRest.ledgerCard(spark, corpusPath, LedgerCounters, "writeCorpus", "enableLedger")
 
   /**
    * Migrate an existing (unledgered) corpus to ledger maintenance: one
@@ -424,18 +339,9 @@ object DedupIndex {
    * was never recorded anywhere.
    */
   def enableLedger(spark: SparkSession, corpusPath: String, ledgerBy: String,
-      textCol: String = "text"): Unit = AtRest.withLease(spark, corpusPath) {
-    val meta = AtRest.readMeta(spark, corpusPath).getOrElse(
-      throw new IllegalStateException(
-        s"$corpusPath has no _meta.json — seed it through writeCorpus first"))
-    val dir = AtRest.resolve(spark, corpusPath)
-    val fs = fsFor(spark, corpusPath)
-    val ld = ledgerDirOf(dir)
-    if (fs.exists(ld)) fs.delete(ld, true)
-    val corpus = readCorpus(spark, corpusPath)
-    publishLedgerDelta(admittedStatsLong(corpus, ledgerBy, textCol), dir, SeedBatch)
-    AtRest.writeMeta(spark, corpusPath, meta + ("ledgerBy" -> ledgerBy))
-  }
+      textCol: String = "text"): Unit =
+    AtRest.enableLedger(spark, corpusPath, ledgerBy, "writeCorpus")(
+      admittedStatsLong(readCorpus(spark, corpusPath), ledgerBy, textCol))
 
   // ------------------------------------------------------------- tombstones
 
@@ -700,7 +606,7 @@ object DedupIndex {
         ("columns" -> docs.columns.sorted.mkString(","))
       AtRest.writeMetaStaged(spark, staging, meta)
       if (ledgerBy != null)
-        publishLedgerDelta(admittedStatsLong(docs, ledgerBy, textCol),
+        AtRest.publishLedgerDelta(admittedStatsLong(docs, ledgerBy, textCol),
           staging.toString, SeedBatch)
       val markers = new Path(path, "_committed")
       if (fs.exists(markers)) fs.delete(markers, true)
@@ -899,9 +805,6 @@ object DedupIndex {
 
   // ------------------------------------------------------------ ingest loop
 
-  private def committedMarker(corpusPath: String, batchId: Long): Path =
-    new Path(corpusPath, s"_committed/batch-$batchId")
-
   /**
    * One micro-batch of the CONTINUOUS ingest loop: dedup `batch` within
    * itself and against the accepted corpus, publish the survivors' text
@@ -919,21 +822,13 @@ object DedupIndex {
    * whole (self-deduped) first batch admits and seeds both paths (and
    * their `_meta.json` sidecars; later batches validate).
    *
-   * Delivery with `batchId >= 0` is EXACTLY-ONCE: each path's batch data
-   * stages under `_staging_<batchId>` and publishes with one atomic
-   * directory rename to `ingest_batch=<batchId>`, then a `_committed`
-   * marker (holding the admitted count) records completion. A replayed
-   * batch short-circuits on the marker; a replay after a partial crash
-   * recomputes the same admit set (the probe ignores same-id self-matches
-   * and a half-published index key finds no corpus text, so the decision
-   * is unchanged) and re-publishes only the missing renames. `batchId <
-   * 0` keeps the plain append path for direct one-shot callers
+   * Delivery, replay, leases, sharding and the ledger follow the one
+   * at-rest protocol ([[AtRest.ingestBatch]]): both roots are leased
+   * (index, then corpus), the markers and ledger live in the corpus, and
+   * the sharded commit mutex in the index. A half-published index key
+   * finds no corpus text, so a replay's admit decision is unchanged.
+   * `batchId < 0` keeps the plain append path for direct one-shot callers
    * (at-least-once under external retries).
-   *
-   * Writer fencing: the call runs under both roots' leases
-   * (`leaseOwner` null = a transient per-call owner; [[ingestStream]]
-   * passes its stream-lifetime owner so its own batches refresh rather
-   * than re-claim).
    */
   def ingestBatch(batch: DataFrame, indexPath: String, corpusPath: String,
       threshold: Double = 0.7, textCol: String = "text", idCol: String = "doc_id",
@@ -941,284 +836,110 @@ object DedupIndex {
       nParts: Int = 16, maxBucket: Int = 1000, batchId: Long = -1L,
       corpusParts: Int = 16, leaseOwner: String = null,
       shard: Int = 0, nShards: Int = 1): Long =
-      StageCoalesce.sizeBased(batch.sparkSession) {
-    val spark = batch.sparkSession
-    val fs = fsFor(spark, corpusPath)
-    if (batchId >= 0 && fs.exists(committedMarker(corpusPath, batchId))) {
-      // markers are written atomically (writeFile renames), but tolerate a
-      // corrupt one anyway: an unparsable marker means NOT committed — the
-      // partial-replay path below recomputes and re-publishes safely
-      val txt = new String(AtRest.readFile(fs, committedMarker(corpusPath, batchId)),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      txt.toLongOption match {
-        case Some(n) => return n
-        case None => fs.delete(committedMarker(corpusPath, batchId), false)
-      }
-    }
-    // marker absent: a batchId below the compacted-marker watermark is a
-    // checkpoint-history violation, not a legitimate replay — fail loudly
-    if (batchId >= 0) AtRest.failIfBelowWatermark(fs, corpusPath, batchId)
-    val owner = if (leaseOwner != null) leaseOwner
-      else java.util.UUID.randomUUID().toString
-    def acquire(p: String): Unit =
-      if (nShards <= 1) AtRest.acquireLease(spark, p, owner)
-      else AtRest.acquireShardLease(spark, p, owner, shard, nShards)
-    // transient per-call fence; a stream's lifetime lease stays held
-    def release(p: String): Unit = if (leaseOwner == null) {
-      if (nShards <= 1) AtRest.releaseLease(spark, p, owner)
-      else AtRest.releaseShardLease(spark, p, owner, shard, nShards)
-    }
-    acquire(indexPath)
-    try {
-      acquire(corpusPath)
-      try ingestBatchFenced(batch, indexPath, corpusPath, threshold, textCol,
-        idCol, numHashes, bands, shingleWords, nParts, maxBucket, batchId,
-        corpusParts, shard, nShards)
-      finally release(corpusPath)
-    } finally release(indexPath)
-  }
-
-  private def ingestBatchFenced(batch: DataFrame, indexPath: String,
-      corpusPath: String, threshold: Double, textCol: String, idCol: String,
-      numHashes: Int, bands: Int, shingleWords: Int, nParts: Int,
-      maxBucket: Int, batchId: Long, corpusParts: Int,
-      shard: Int = 0, nShards: Int = 1): Long = {
-    val spark = batch.sparkSession
-    val fs = fsFor(spark, corpusPath)
-    AtRest.validateOrAdoptMeta(spark, indexPath,
-      indexMeta(numHashes, bands, shingleWords, nParts, maxBucket))
-    requireNoLayoutCols(batch, "ingest batch")
-    validateCorpusColumns(spark, corpusPath, idCol, corpusParts, batch.columns)
-    val idxDir = AtRest.resolve(spark, indexPath)
-    val corpDir = AtRest.resolve(spark, corpusPath)
-    if (batchId >= 0) {
-      // a batch dir WITHOUT its marker is a half-published crash leftover:
-      // un-publish it before recomputing, so the replay's probe sees the
-      // exact pre-attempt state and the admit decision is bit-identical
-      // (a half-published index key could otherwise tip a bucket over the
-      // probe-side maxBucket re-cap and flip a candidate)
-      val ifs = fsFor(spark, indexPath)
-      val idxBatch = new Path(idxDir, s"ingest_batch=$batchId")
-      if (ifs.exists(idxBatch)) ifs.delete(idxBatch, true)
-      val corpBatch = new Path(corpDir, s"ingest_batch=$batchId")
-      if (fs.exists(corpBatch)) fs.delete(corpBatch, true)
-      // the ledger delta rides the same exactly-once protocol
-      val ledgerBatch = new Path(ledgerDirOf(corpDir), s"ingest_batch=$batchId")
-      if (fs.exists(ledgerBatch)) fs.delete(ledgerBatch, true)
-    }
-    // keep EVERY batch column (the corpus stores them, like writeCorpus;
-    // the ledger's grouping column in particular must survive to rest)
-    val b = batch.dropDuplicates(idCol)
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    // sharded fence: this writer's lease covers ONLY its id range — a
-    // misrouted row would race the owning shard's writer, so reject it
-    // loudly instead of silently writing outside the fence
-    if (nShards > 1) {
-      val nOutside = b.filter(
-        pmod(xxhash64(col(idCol)), lit(nShards.toLong)) =!= shard).count()
-      if (nOutside > 0)
-        throw new IllegalStateException(
-          s"$nOutside batch rows fall outside shard $shard of $nShards " +
-            s"(pmod(xxhash64($idCol), $nShards)); route every row to its owning " +
-            "shard's stream — ingestStreamSharded filters automatically")
-    }
-    // sign the batch ONCE: the signature frame feeds the in-batch sweep,
-    // the index probe AND the admitted-keys write (previously three
-    // independent shingle+minhash passes over the same batch text — the
-    // kernel is the dominant scan-local cost of the loop)
-    require(numHashes % bands == 0, s"bands ($bands) must divide numHashes ($numHashes)")
-    val sigRows = numHashes / bands
-    val sigs = b.select(col(idCol).as("id"),
-        Dedup.signatureFromShingles(
-          TextFunctions.wordShingles(col(textCol), shingleWords), numHashes).as("sig"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val banded = sigs.select(col("id"),
-        posexplode(Dedup.bandBuckets(col("sig"), bands, sigRows)).as(Seq("band", "bucket")))
-      .withColumn("bucket_part", pmod(xxhash64(col("band"), col("bucket")), lit(nParts)))
-      .select("bucket_part", "band", "bucket", "id")
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    // localCheckpoint: the drop sets are tiny but their LINEAGE is the
-    // whole in-batch near-dup machinery; four downstream consumers
-    // (admit anti-join, two ledger counts, the sharded commit's unions)
-    // would each re-plan it otherwise
-    val inBatchDrop = Dedup.nearDuplicatesFromSigs(
-        b.select(col(idCol).as("id"), col(textCol).as("text")), sigs,
-        threshold, shingleWords, bands, sigRows, maxBucket)
-      .select(col("id_b").as(idCol)).distinct()
-      .localCheckpoint(true)
-    // data dirs only: _bloom/_staging/_committed don't make an index
-    val hasIndex = {
-      val ifs = fsFor(spark, indexPath)
-      val p = new Path(idxDir)
-      ifs.exists(p) && ifs.listStatus(p).exists(_.getPath.getName.startsWith("ingest_batch="))
-    }
-    // snapshot of the index's batch dirs, taken just before the probe:
-    // the sharded commit section re-probes against batches that COMMIT
-    // after this point (the cross-shard in-flight window)
-    val ifs2 = fsFor(spark, indexPath)
-    val snapshotIds = listIndexBatchIds(ifs2, idxDir)
-    val crossDrop =
-      if (hasIndex)
-        probeAtRest(spark, indexPath, b, corpusPath, threshold, textCol, idCol,
-            numHashes, bands, shingleWords, nParts, maxBucket, corpusParts,
-            preBanded = banded)
-          .select(col("batch_id").as(idCol)).distinct()
-          .localCheckpoint(true) // same lineage-cut as inBatchDrop (the probe plan)
-      else b.select(col(idCol)).limit(0)
-    // materialized HERE — the heavy signing/probing must finish before
-    // the (serialized) sharded commit section below. localCheckpoint, not
-    // persist: the probe's logical plan is enormous (banded signatures +
-    // preBanded probe + bloom pruning), and every downstream action over
-    // a persisted frame RE-PLANS that whole lineage — AQE alone spends
-    // whole seconds per action stringifying it. Truncating the lineage
-    // makes the commit section's queries (keys semi-join, ledger stats,
-    // delta re-probe) plan against a leaf. A lost block just replays the
-    // batch — the exactly-once protocol already assumes that.
-    val admitted0 = b.join(inBatchDrop.unionByName(crossDrop).distinct(),
-        Seq(idCol), "left_anti")
-      .localCheckpoint(true)
-    onBeforeCommit()
-
-    def publishAdjudicated(admitted: DataFrame, crossDropAll: DataFrame): Long = {
-      val n = admitted.count()
-      if (n > 0) {
-        // the admitted docs' keys are a semi-join filter of the shared
-        // banded frame — no third signature pass
-        val keys = capBuckets(
-            banded.join(admitted.select(col(idCol).as("id")), Seq("id"), "left_semi"),
-            maxBucket)
+    AtRest.ingestBatch(batch, Seq(indexPath, corpusPath), idCol, batchId, leaseOwner,
+        shard, nShards) { _ =>
+      val spark = batch.sparkSession
+      AtRest.validateOrAdoptMeta(spark, indexPath,
+        indexMeta(numHashes, bands, shingleWords, nParts, maxBucket))
+      requireNoLayoutCols(batch, "ingest batch")
+      validateCorpusColumns(spark, corpusPath, idCol, corpusParts, batch.columns)
+      require(numHashes % bands == 0, s"bands ($bands) must divide numHashes ($numHashes)")
+      val idxDir = AtRest.resolve(spark, indexPath)
+      val corpDir = AtRest.resolve(spark, corpusPath)
+      // keep EVERY batch column (the corpus stores them, like writeCorpus;
+      // the ledger's grouping column in particular must survive to rest)
+      new AtRest.Admission(batch.dropDuplicates(idCol)
+          .persist(StorageLevel.MEMORY_AND_DISK_SER)) {
+        val probeDir = idxDir
+        val batchDirs = Seq(idxDir, corpDir, AtRest.ledgerDir(corpDir).toString)
+        val ledgerIn = corpDir
+        // sign the batch ONCE: the signature frame feeds the in-batch
+        // sweep, the index probe AND the admitted-keys write (the kernel is
+        // the dominant scan-local cost of the loop)
+        private val sigRows = numHashes / bands
+        private val sigs = sigFrame(b, textCol, idCol, numHashes, shingleWords)
           .persist(StorageLevel.MEMORY_AND_DISK_SER)
-        // file-count sizing (guide §6): the admitted count n is already
-        // on hand, so the lane derivation costs nothing — without it a
-        // micro-batch published tasks × nParts near-empty files that
-        // every later probe/recheck/compact scan re-opens
-        val keysOut = clusterForWrite(keys, "bucket_part", "id",
-          n * bands, keyRowsPerFile(spark))
-        val docsOut = clusterForWrite(withIdPart(admitted, idCol, corpusParts),
-          "id_part", idCol, n, docRowsPerFile(spark))
-        // the admitted docs' signatures persist beside their index keys
-        // (see SigsDir) — the shared banded pass already computed them,
-        // so future rechecks never re-sign these documents
-        val admittedSigs = sigs.join(
-          admitted.select(col(idCol).as("id")), Seq("id"), "left_semi")
-        if (batchId >= 0) {
-          // bloom before data: committed keys must always be bloom-covered
-          writeBloomFile(keys, idxDir, s"b$batchId", estimatedKeys = n * bands)
-          publishBatchDir(keysOut, idxDir, "bucket_part", batchId,
-            alsoStage = st => writeSigs(admittedSigs, st.toString, n))
-          publishBatchDir(docsOut, corpDir, "id_part", batchId)
-        } else {
-          writeSigs(admittedSigs, idxDir, n, append = true)
-          writeBloomFile(keys, idxDir, s"a${System.nanoTime()}")
-          keysOut.withColumn("ingest_batch", lit(SeedBatch))
-            .write.partitionBy("ingest_batch", "bucket_part").mode("append").parquet(idxDir)
-          docsOut.withColumn("ingest_batch", lit(SeedBatch))
-            .write.partitionBy("ingest_batch", "id_part").mode("append").parquet(corpDir)
-        }
-        keys.unpersist(blocking = false)
-      }
-      // ledger delta (if the corpus maintains one): published AFTER the
-      // data, BEFORE the marker — a crash in between replays the whole
-      // batch and rewrites both, so card and corpus can never disagree.
-      // Even an all-dropped batch publishes (its drop counters are real).
-      ledgerByOf(spark, corpusPath).foreach { g =>
-        val crossOnly = crossDropAll.join(inBatchDrop, Seq(idCol), "left_anti")
-        val delta = admittedStatsLong(admitted, g, textCol)
-          .unionByName(countLong(b.join(inBatchDrop, Seq(idCol), "left_semi"),
-            g, "n_dropped_batch"))
-          .unionByName(countLong(b.join(crossOnly, Seq(idCol), "left_semi"),
-            g, "n_dropped_cross"))
-        // ad-hoc (batchId < 0) appends have no replay identity, so their
-        // ledger delta could double-count on a retry — which would break
-        // ledgerCard's exactly-once headline. Reject instead of weakening
-        // the card's contract: a ledgered corpus takes checkpointed
-        // (batchId >= 0) ingests only.
-        if (batchId < 0)
-          throw new IllegalArgumentException(
-            s"$corpusPath maintains an exactly-once stats ledger, which an " +
-              "ad-hoc (batchId < 0) append cannot honor — pass a stable " +
-              "batchId >= 0 (or ingest through ingestStream)")
-        publishLedgerDelta(delta, corpDir, batchId)
-      }
-      if (batchId >= 0)
-        AtRest.writeFile(fs, committedMarker(corpusPath, batchId),
-          n.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      n
-    }
+        private val banded = bandedKeysFromSigs(sigs, bands, sigRows, nParts)
+          .persist(StorageLevel.MEMORY_AND_DISK_SER)
+        private def keysOf(admitted: DataFrame) =
+          banded.join(admitted.select(col(idCol).as("id")), Seq("id"), "left_semi")
 
-    // SHARDED commit: serialized by the index root's commit mutex, so
-    // commits are total-ordered and each one adjudicates against every
-    // batch committed before it — closing the cross-shard in-flight
-    // window (two shards concurrently ingesting near-identical docs
-    // could both admit before either published). The re-probe covers
-    // exactly the batches whose markers appeared since this batch's
-    // probe snapshot; on a hit, MY member drops (the committed side is
-    // immutable) — the offline recheck's keep-best pass refines the
-    // survivor choice if scores matter. Unsharded writers skip the lock:
-    // their whole-root lease already excludes concurrency.
-    val n =
-      if (nShards <= 1) publishAdjudicated(admitted0, crossDrop)
-      else AtRest.withCommitLock(spark, indexPath) {
-        val delta = (listIndexBatchIds(ifs2, idxDir) -- snapshotIds - batchId)
-          .filter(idB => fs.exists(committedMarker(corpusPath, idB)))
-        // bloom short-circuit FIRST: each committed delta batch published
-        // a bloom over its keys before its data (bloom-b<id>); if none of
-        // my admitted keys might-match any delta bloom, no cross-shard
-        // pair can exist and the whole re-probe is ONE cheap scan-local
-        // filter + take(1) instead of joins + shingle verification — the
-        // no-collision case is the every-batch case in a healthy fleet.
-        // A delta batch with no bloom (it admitted no keys) forces the
-        // full verify: a false "no hit" would break dedup, a false hit
-        // only costs the verify.
-        val deltaBlooms = delta.toSeq.sorted.map(idB =>
-          readBloomTag(spark, idxDir, s"b$idB"))
-        val mightHit = delta.nonEmpty && {
-          if (deltaBlooms.exists(_.isEmpty)) true
-          else {
-            val myKeys = banded.join(admitted0.select(col(idCol).as("id")),
-              Seq("id"), "left_semi")
-            !myKeys.filter(deltaBlooms.flatten
+        def inBatchDrops: DataFrame = Dedup.nearDuplicatesFromSigs(
+            b.select(col(idCol).as("id"), col(textCol).as("text")), sigs,
+            threshold, shingleWords, bands, sigRows, maxBucket)
+          .select(col("id_b").as(idCol)).distinct()
+
+        def crossDrops: DataFrame =
+          probeAtRest(spark, indexPath, b, corpusPath, threshold, textCol, idCol,
+              numHashes, bands, shingleWords, nParts, maxBucket, corpusParts,
+              preBanded = banded)
+            .select(col("batch_id").as(idCol)).distinct()
+
+        // bloom short-circuit FIRST: each committed delta batch published a
+        // bloom over its keys before its data (bloom-b<id>); if none of my
+        // admitted keys might-match any delta bloom, no cross-shard pair can
+        // exist and the re-probe is ONE scan-local filter + take(1) instead
+        // of joins + shingle verification. A delta batch with no bloom (it
+        // admitted no keys) forces the full verify: a false "no hit" would
+        // break dedup, a false hit only costs the verify.
+        def reprobe(admitted: DataFrame, delta: Seq[Long]): Option[DataFrame] = {
+          val deltaBlooms = delta.map(idB => readBloomTag(spark, idxDir, s"b$idB"))
+          val mightHit = deltaBlooms.exists(_.isEmpty) ||
+            !keysOf(admitted).filter(deltaBlooms.flatten
                 .map(bl => SketchFunctions.bloom_contains(bl,
                   xxhash64(col("band"), col("bucket"))))
                 .reduce(_ || _))
               .isEmpty
-          }
+          if (!mightHit) None
+          else Some(deltaProbeDrops(spark, idxDir, corpDir, delta, banded, admitted,
+            threshold, textCol, idCol, shingleWords))
         }
-        if (!mightHit) publishAdjudicated(admitted0, crossDrop)
-        else {
-          val dropMore = deltaProbeDrops(spark, idxDir, corpDir, delta.toSeq,
-              banded, admitted0, threshold, textCol, idCol, shingleWords)
+
+        def publish(admitted: DataFrame, n: Long): Unit = {
+          // the admitted docs' keys are a semi-join filter of the shared
+          // banded frame — no third signature pass
+          val keys = capBuckets(keysOf(admitted), maxBucket)
             .persist(StorageLevel.MEMORY_AND_DISK_SER)
-          val admitted = admitted0.join(dropMore, Seq(idCol), "left_anti")
-            .persist(StorageLevel.MEMORY_AND_DISK_SER)
-          val out = publishAdjudicated(admitted,
-            crossDrop.unionByName(dropMore).distinct())
-          admitted.unpersist(blocking = false)
-          dropMore.unpersist(blocking = false)
-          out
+          // file-count sizing (clusterForWrite): the admitted count n is
+          // already on hand, so the lane derivation costs nothing
+          val keysOut = clusterForWrite(keys, "bucket_part", "id",
+            n * bands, keyRowsPerFile(spark))
+          val docsOut = clusterForWrite(withIdPart(admitted, idCol, corpusParts),
+            "id_part", idCol, n, docRowsPerFile(spark))
+          // the admitted docs' signatures persist beside their index keys
+          // (see SigsDir), so future rechecks never re-sign these documents
+          val admittedSigs = sigs.join(
+            admitted.select(col(idCol).as("id")), Seq("id"), "left_semi")
+          if (batchId >= 0) {
+            // bloom before data: committed keys must always be bloom-covered
+            writeBloomFile(keys, idxDir, s"b$batchId", estimatedKeys = n * bands)
+            // the sigs land INSIDE the staging dir, publishing in the same rename
+            AtRest.publishBatchDir(spark, idxDir, batchId) { st =>
+              keysOut.write.partitionBy("bucket_part").mode("overwrite").parquet(st)
+              writeSigs(admittedSigs, st, n)
+            }
+            AtRest.publishBatchDir(spark, corpDir, batchId)(st =>
+              docsOut.write.partitionBy("id_part").mode("overwrite").parquet(st))
+          } else {
+            writeSigs(admittedSigs, idxDir, n, append = true)
+            writeBloomFile(keys, idxDir, s"a${System.nanoTime()}")
+            keysOut.withColumn("ingest_batch", lit(SeedBatch))
+              .write.partitionBy("ingest_batch", "bucket_part").mode("append").parquet(idxDir)
+            docsOut.withColumn("ingest_batch", lit(SeedBatch))
+              .write.partitionBy("ingest_batch", "id_part").mode("append").parquet(corpDir)
+          }
+          keys.unpersist(blocking = false)
+        }
+
+        def admittedStats(admitted: DataFrame, grp: String): DataFrame =
+          admittedStatsLong(admitted, grp, textCol)
+
+        override def release(): Unit = {
+          banded.unpersist(blocking = false)
+          sigs.unpersist(blocking = false)
         }
       }
-    banded.unpersist(blocking = false)
-    sigs.unpersist(blocking = false)
-    admitted0.unpersist(blocking = false)
-    b.unpersist(blocking = false)
-    n
-  }
-
-  /** Test seam: runs after the probe snapshot is materialized and before
-   *  the commit section — a spec injects a concurrent shard's commit
-   *  here to exercise the cross-shard delta re-probe deterministically.
-   *  A no-op in production. */
-  private[graft] var onBeforeCommit: () => Unit = () => ()
-
-  private def listIndexBatchIds(fs: org.apache.hadoop.fs.FileSystem,
-      idxDir: String): Set[Long] = {
-    val p = new Path(idxDir)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("ingest_batch="))
-      .flatMap(_.stripPrefix("ingest_batch=").toLongOption).toSet
-  }
+    }
 
   /** Near-dup pairs between MY admitted docs and docs COMMITTED by
    *  concurrent batches after my probe snapshot: my banded keys join the
@@ -1250,90 +971,31 @@ object DedupIndex {
       .select(col("id").as(idCol)).distinct()
   }
 
-  /** The streaming wrapper: every micro-batch of `docs` flows through
-   *  [[ingestBatch]] with its foreachBatch batchId, making the loop
-   *  exactly-once end to end (state lives in the two at-rest paths, NOT
-   *  in Spark streaming state — it survives restarts, is shared with
-   *  batch probes, and is unbounded-corpus-safe; the watermark-state
-   *  alternative, [[Dedup.streamingNearDupCandidates]], bounds state but
-   *  forgets old buckets).
-   *
-   *  Holds both roots' writer leases for the STREAM's lifetime — a
-   *  second concurrent ingest stream fails at start() instead of
-   *  silently corrupting. The owner derives from the checkpoint path, so
-   *  a restart on the same checkpoint re-claims its own lease; the lease
-   *  releases on query termination (and goes stale by TTL if the driver
-   *  dies hard). */
+  /** The streaming wrapper ([[AtRest.ingestStream]]): every micro-batch
+   *  of `docs` flows through [[ingestBatch]] with its foreachBatch
+   *  batchId, under both roots' stream-lifetime leases — exactly-once end
+   *  to end. State lives in the two at-rest paths, not in Spark streaming
+   *  state; the watermark-state alternative,
+   *  [[Dedup.streamingNearDupCandidates]], bounds state but forgets old
+   *  buckets. */
   def ingestStream(docs: DataFrame, indexPath: String, corpusPath: String,
       checkpointPath: String, threshold: Double = 0.7, textCol: String = "text",
       idCol: String = "doc_id", numHashes: Int = 32, bands: Int = 8,
       shingleWords: Int = 3, nParts: Int = 16, maxBucket: Int = 1000,
-      corpusParts: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = docs.sparkSession
-    val owner = s"ckpt:$checkpointPath"
-    AtRest.acquireLease(spark, indexPath, owner)
-    try AtRest.acquireLease(spark, corpusPath, owner)
-    catch { case e: Throwable =>
-      AtRest.releaseLease(spark, indexPath, owner); throw e
+      corpusParts: Int = 16): org.apache.spark.sql.streaming.StreamingQuery =
+    AtRest.ingestStream(docs, Seq(indexPath, corpusPath), checkpointPath, idCol) {
+      (b, id, owner) =>
+        ingestBatch(b, indexPath, corpusPath, threshold, textCol, idCol,
+          numHashes, bands, shingleWords, nParts, maxBucket, batchId = id,
+          corpusParts = corpusParts, leaseOwner = owner)
     }
-    val query =
-      try docs.writeStream
-        .option("checkpointLocation", checkpointPath)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          ingestBatch(b, indexPath, corpusPath, threshold, textCol, idCol,
-            numHashes, bands, shingleWords, nParts, maxBucket, batchId = id,
-            corpusParts = corpusParts, leaseOwner = owner)
-          ()
-        }
-        .start()
-      catch {
-        case e: Throwable =>
-          AtRest.releaseLease(spark, indexPath, owner)
-          AtRest.releaseLease(spark, corpusPath, owner)
-          throw e
-      }
-    val qid = query.id
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == qid) {
-          AtRest.releaseLease(spark, indexPath, owner)
-          AtRest.releaseLease(spark, corpusPath, owner)
-          spark.streams.removeListener(this)
-        }
-    }
-    spark.streams.addListener(listener)
-    // a query that died BEFORE the listener registered never gets its
-    // termination event delivered — without this check its leases would
-    // sit until the TTL, blocking maintenance for ten minutes
-    if (!query.isActive) {
-      AtRest.releaseLease(spark, indexPath, owner)
-      AtRest.releaseLease(spark, corpusPath, owner)
-      spark.streams.removeListener(listener)
-    }
-    query
-  }
 
   /**
    * SHARDED multi-writer ingest — N concurrent streams sharing one
    * corpus/index pair, each owning the disjoint id range
    * `pmod(xxhash64(id), nShards) = shard` (the same hash family the
-   * corpus `id_part` layout uses). Each stream:
-   *  - holds per-shard leases on both roots ([[AtRest.acquireShardLease]])
-   *    for its lifetime — a second stream on the SAME shard fails at
-   *    start(), a whole-root writer or maintenance pass fails while any
-   *    shard lease is live, and mixed shard schemes fail loudly;
-   *  - FILTERS its input to its own shard (so all N streams can consume
-   *    the same source; [[ingestBatch]] additionally rejects misrouted
-   *    rows loudly for direct callers);
-   *  - namespaces its foreachBatch ids as `batchId × nShards + shard`,
-   *    so batch directories, `_committed` markers, bloom tags and ledger
-   *    deltas never collide across shards and each shard's exactly-once
-   *    replay protocol is untouched.
+   * corpus `id_part` layout uses); [[AtRest.ingestStream]] holds the
+   * shard leases, filters the input and namespaces the batch ids.
    *
    * Cross-shard dedup contract: bucket keys derive from TEXT, not from
    * the writer, so a cross-shard near-duplicate pair collides in the
@@ -1341,15 +1003,11 @@ object DedupIndex {
    * The probe catches pairs against every batch COMMITTED at probe
    * time; pairs against batches that commit while this batch is in
    * flight are caught by the commit-mutex-serialized delta re-probe
-   * inside [[ingestBatch]] (commits are total-ordered per index root;
-   * each commit re-adjudicates against exactly the batches committed
-   * since its probe snapshot, and the later committer's member drops).
-   * Two in-flight batches racing on a cross-shard pair therefore can
-   * no longer both admit. [[recheckIncremental]]/[[recheckCorpus]]
+   * ([[AtRest.ingestBatch]]). [[recheckIncremental]]/[[recheckCorpus]]
    * remain the offline backstop for banded-recall stragglers (pairs
    * LSH itself missed — a recall property, not a race).
-   * [[compactMarkers]] watermarks must use the MINIMUM of the shards'
-   * oldest replayable namespaced ids.
+   * [[AtRest.compactMarkers]] watermarks must use the MINIMUM of the
+   * shards' oldest replayable namespaced ids.
    */
   def ingestStreamSharded(docs: DataFrame, indexPath: String, corpusPath: String,
       checkpointPath: String, shard: Int, nShards: Int,
@@ -1360,61 +1018,12 @@ object DedupIndex {
     require(nShards > 1 && shard >= 0 && shard < nShards,
       s"ingestStreamSharded needs nShards > 1 and shard in [0, nShards): " +
         s"got $shard of $nShards (single-writer = ingestStream)")
-    val spark = docs.sparkSession
-    val owner = s"ckpt:$checkpointPath"
-    def releaseBoth(): Unit = {
-      AtRest.releaseShardLease(spark, indexPath, owner, shard, nShards)
-      AtRest.releaseShardLease(spark, corpusPath, owner, shard, nShards)
+    AtRest.ingestStream(docs, Seq(indexPath, corpusPath), checkpointPath, idCol,
+        shard, nShards) { (b, id, owner) =>
+      ingestBatch(b, indexPath, corpusPath, threshold, textCol, idCol,
+        numHashes, bands, shingleWords, nParts, maxBucket, batchId = id,
+        corpusParts = corpusParts, leaseOwner = owner, shard = shard, nShards = nShards)
     }
-    AtRest.acquireShardLease(spark, indexPath, owner, shard, nShards)
-    try AtRest.acquireShardLease(spark, corpusPath, owner, shard, nShards)
-    catch { case e: Throwable =>
-      AtRest.releaseShardLease(spark, indexPath, owner, shard, nShards); throw e
-    }
-    val own = docs.filter(
-      pmod(xxhash64(col(idCol)), lit(nShards.toLong)) === shard)
-    val query =
-      try own.writeStream
-        .option("checkpointLocation", checkpointPath)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          ingestBatch(b, indexPath, corpusPath, threshold, textCol, idCol,
-            numHashes, bands, shingleWords, nParts, maxBucket,
-            batchId = id * nShards + shard, corpusParts = corpusParts,
-            leaseOwner = owner, shard = shard, nShards = nShards)
-          ()
-        }
-        .start()
-      catch { case e: Throwable => releaseBoth(); throw e }
-    val qid = query.id
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == qid) {
-          releaseBoth()
-          spark.streams.removeListener(this)
-        }
-    }
-    spark.streams.addListener(listener)
-    if (!query.isActive) {
-      releaseBoth()
-      spark.streams.removeListener(listener)
-    }
-    query
-  }
-
-  /** Retention maintenance for the corpus's `_committed` replay markers:
-   *  set the watermark to `oldestReplayable` (derive it from the ingest
-   *  stream's checkpoint — typically last committed batchId, below which
-   *  Spark will never replay) and sweep the markers below it. Keeps the
-   *  marker count bounded by the replayable window instead of the
-   *  table's lifetime batch count ([[AtRest.compactMarkers]]). */
-  def compactMarkers(spark: SparkSession, corpusPath: String,
-      oldestReplayable: Long): Unit = AtRest.withLease(spark, corpusPath) {
-    AtRest.compactMarkers(spark, corpusPath, oldestReplayable)
   }
 
   // ------------------------------------------------------------- compaction
@@ -1568,18 +1177,15 @@ object DedupIndex {
       val metaMap = AtRest.readMeta(spark, corpusPath)
       metaMap.foreach(m => AtRest.writeMetaStaged(spark, staging, m))
       // this rewrite also folds batch dirs into the seed (see compactCorpus)
-      AtRest.writeCollapseFrontier(fs, corpusPath,
-        maxCommittedBatch(fs, corpusPath))
+      AtRest.writeCollapseFrontier(fs, corpusPath)
       // ledger adjustment: the removed stragglers' admitted-side counters
       // subtract back out and count under n_removed_recheck — collapsed
       // with the existing deltas into the new version, swapping atomically
       metaMap.flatMap(_.get("ledgerBy")).foreach { g =>
         val removed = corpus.join(dropIds, Seq(idCol), "left_semi")
         val adjust = admittedStatsLong(removed, g, textCol, sign = -1)
-          .unionByName(countLong(removed, g, "n_removed_recheck"))
-        val merged = ledgerLong(spark, AtRest.resolve(spark, corpusPath))
-          .map(_.unionByName(adjust)).getOrElse(adjust)
-        publishLedgerDelta(collapseLedger(merged), staging.toString, SeedBatch)
+          .unionByName(AtRest.countLong(removed, g, "n_removed_recheck"))
+        AtRest.carryLedger(spark, AtRest.resolve(spark, corpusPath), staging, Some(adjust))
       }
       AtRest.publishVersion(spark, corpusPath, v)
       // rebuild the index from the signatures already on hand (the
@@ -1643,173 +1249,77 @@ object DedupIndex {
       bands: Int = 8, shingleWords: Int = 3, maxBucket: Int = 1000,
       nParts: Int = 16, corpusParts: Int = 16,
       score: org.apache.spark.sql.Column => org.apache.spark.sql.Column = length(_))
-      : Long = StageCoalesce.sizeBased(spark) {
-    require(recheckId >= 0, s"recheckId must be >= 0, got $recheckId")
+      : Long = AtRest.recheckSince(spark, corpusPath, sinceBatch, recheckId) { window =>
+    AtRest.validateMeta(spark, corpusPath, corpusMeta(idCol, corpusParts))
     val fs = fsFor(spark, corpusPath)
-    val marker = new Path(corpusPath, s"_committed/recheck-$recheckId")
-    recheckMarkerInfo(fs, corpusPath, recheckId) match {
-      case Some(m) => return m.removed
-      case None => // absent or unparsable (the latter deleted) — run
-    }
-    AtRest.withLease(spark, corpusPath) {
-      AtRest.validateMeta(spark, corpusPath, corpusMeta(idCol, corpusParts))
-      val corpDir = AtRest.resolve(spark, corpusPath)
-      // the highest COMMITTED batch this pass will have adjudicated —
-      // snapshotted under the lease (no ingest can commit during the
-      // pass) and recorded in the marker, so [[recheckIncremental]]'s
-      // frontier advance derives from what was actually covered, never
-      // from post-crash re-listing
-      val coveredUpTo = maxCommittedBatch(fs, corpusPath)
-      // un-publish a crashed earlier attempt's unmarked leftovers, so the
-      // recompute below sees the exact pre-attempt corpus (the ingest
-      // replay contract)
-      val ledgerId = RecheckLedgerBase - recheckId
-      val leftTs = new Path(tombstoneDirOf(corpDir), s"recheck=$recheckId")
-      if (fs.exists(leftTs)) fs.delete(leftTs, true)
-      val leftLd = new Path(ledgerDirOf(corpDir), s"ingest_batch=$ledgerId")
-      if (fs.exists(leftLd)) fs.delete(leftLd, true)
-      val corpus = readCorpus(spark, corpusPath)
-      // maintenance (compactCorpus / a recheckCorpus rewrite) folds batch
-      // dirs into the seed — when this window starts below the fold
-      // frontier, the folded batches can't be scoped by dir: probe the
-      // WHOLE corpus this one pass (the next window starts past
-      // coveredUpTo and is incremental again)
-      val fullSweep = sinceBatch < AtRest.collapseFrontier(fs, corpusPath)
-      // the marker records the window the pass ACTUALLY ran from (a
-      // full sweep covers from 0) — what a bootstrap may resume past
-      val effSince = if (fullSweep) 0L else sinceBatch
-      val newDocs =
-        (if (fullSweep) corpus
-         else corpus.filter(col("ingest_batch") >= sinceBatch))
-          .select(col(idCol), col(textCol))
-      // one probe covers BOTH pair kinds: new-vs-old (index supplies old
-      // keys) and new-vs-new (both sides indexed; each pair arrives twice
-      // and the least/greatest projection collapses it)
-      val pairs = probeAtRest(spark, indexPath, newDocs, corpusPath, threshold,
-        textCol, idCol, numHashes, bands, shingleWords, nParts, maxBucket,
-        corpusParts)
-      val und = pairs.select(
-          least(col("batch_id"), col("corpus_id")).as("id_a"),
-          greatest(col("batch_id"), col("corpus_id")).as("id_b"))
-        .distinct()
-      val members = und.select(col("id_a").as(idCol))
-        .unionByName(und.select(col("id_b").as(idCol))).distinct()
-      val memberDocs = corpus.join(members, Seq(idCol), "left_semi")
-        .withColumn("_score", score(col(textCol)))
-      val best = Dedup.nearDupKeepBest(memberDocs, und, "_score", idCol)
-      val dropIds = best.filter(col("doc_id") =!= col("keep_id"))
-        .select(col("doc_id").as(idCol))
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
-      val n = dropIds.count()
-      if (n > 0) {
-        // stage the tombstone file, SNAPSHOT the ledger adjustment (a
-        // bounded sources × counters collect — it must be computed against
-        // the pre-publish corpus view; a lazy frame re-evaluated after the
-        // rename would anti-join the very rows it is accounting for), then
-        // rename, then publish the delta, then the marker — a crash
-        // between any two steps replays the whole pass
-        val td = tombstoneDirOf(corpDir)
-        fs.mkdirs(td)
-        val staging = new Path(td, s"_staging_$recheckId")
-        dropIds.select(col(idCol).as("id")).coalesce(1)
-          .write.mode("overwrite").parquet(staging.toString)
-        val adjusted = ledgerByOf(spark, corpusPath).map { g =>
-          val removed = corpus.join(dropIds, Seq(idCol), "left_semi")
-          val adjust = admittedStatsLong(removed, g, textCol, sign = -1)
-            .unionByName(countLong(removed, g, "n_removed_recheck"))
-          (adjust.collect().toSeq, adjust.schema)
-        }
-        val target = new Path(td, s"recheck=$recheckId")
-        if (!fs.rename(staging, target))
-          throw new IllegalStateException(
-            s"tombstone publish rename $staging -> $target failed")
-        adjusted.foreach { case (rows, schema) =>
-          import scala.jdk.CollectionConverters._
-          publishLedgerDelta(spark.createDataFrame(rows.asJava, schema),
-            corpDir, ledgerId)
-        }
+    val corpDir = AtRest.resolve(spark, corpusPath)
+    // un-publish a crashed earlier attempt's unmarked leftovers, so the
+    // recompute below sees the exact pre-attempt corpus (the ingest
+    // replay contract)
+    val ledgerId = RecheckLedgerBase - recheckId
+    val leftTs = new Path(tombstoneDirOf(corpDir), s"recheck=$recheckId")
+    if (fs.exists(leftTs)) fs.delete(leftTs, true)
+    val leftLd = new Path(AtRest.ledgerDir(corpDir), s"ingest_batch=$ledgerId")
+    if (fs.exists(leftLd)) fs.delete(leftLd, true)
+    val corpus = readCorpus(spark, corpusPath)
+    val newDocs = window.fold(corpus)(since => corpus.filter(col("ingest_batch") >= since))
+      .select(col(idCol), col(textCol))
+    // one probe covers BOTH pair kinds: new-vs-old (index supplies old
+    // keys) and new-vs-new (both sides indexed; each pair arrives twice
+    // and the least/greatest projection collapses it)
+    val pairs = probeAtRest(spark, indexPath, newDocs, corpusPath, threshold,
+      textCol, idCol, numHashes, bands, shingleWords, nParts, maxBucket,
+      corpusParts)
+    val und = pairs.select(
+        least(col("batch_id"), col("corpus_id")).as("id_a"),
+        greatest(col("batch_id"), col("corpus_id")).as("id_b"))
+      .distinct()
+    val members = und.select(col("id_a").as(idCol))
+      .unionByName(und.select(col("id_b").as(idCol))).distinct()
+    val memberDocs = corpus.join(members, Seq(idCol), "left_semi")
+      .withColumn("_score", score(col(textCol)))
+    val best = Dedup.nearDupKeepBest(memberDocs, und, "_score", idCol)
+    val dropIds = best.filter(col("doc_id") =!= col("keep_id"))
+      .select(col("doc_id").as(idCol))
+      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    val n = dropIds.count()
+    if (n > 0) {
+      // stage the tombstone file, SNAPSHOT the ledger adjustment (a
+      // bounded sources × counters collect — it must be computed against
+      // the pre-publish corpus view; a lazy frame re-evaluated after the
+      // rename would anti-join the very rows it is accounting for), then
+      // rename, then publish the delta — a crash between any two steps
+      // replays the whole pass (the marker comes last)
+      val td = tombstoneDirOf(corpDir)
+      fs.mkdirs(td)
+      val staging = new Path(td, s"_staging_$recheckId")
+      dropIds.select(col(idCol).as("id")).coalesce(1)
+        .write.mode("overwrite").parquet(staging.toString)
+      val adjusted = AtRest.ledgerBy(spark, corpusPath).map { g =>
+        val removed = corpus.join(dropIds, Seq(idCol), "left_semi")
+        val adjust = admittedStatsLong(removed, g, textCol, sign = -1)
+          .unionByName(AtRest.countLong(removed, g, "n_removed_recheck"))
+        (adjust.collect().toSeq, adjust.schema)
       }
-      AtRest.writeFile(fs, marker,
-        s"$n $coveredUpTo $effSince"
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      dropIds.unpersist(blocking = false)
-      n
-    }
-  }
-
-  /** A committed recheck pass's recorded outcome: removed count, the
-   *  highest batch it covered, and the window START it actually ran
-   *  from (0 = provably adjudicated everything below its coverage —
-   *  what a frontier bootstrap may safely resume past; a caller-driven
-   *  window start > 0 proves nothing about the batches below it). */
-  private[graft] case class RecheckMarker(removed: Long, coveredUpTo: Long,
-      since: Long)
-
-  /** Parse a committed recheck marker; an unparsable one is deleted
-   *  (= NOT committed), mirroring the batch-marker contract. */
-  private[graft] def recheckMarkerInfo(fs: org.apache.hadoop.fs.FileSystem,
-      corpusPath: String, recheckId: Long): Option[RecheckMarker] = {
-    val marker = new Path(corpusPath, s"_committed/recheck-$recheckId")
-    if (!fs.exists(marker)) return None
-    new String(AtRest.readFile(fs, marker), java.nio.charset.StandardCharsets.UTF_8)
-        .trim.split("\\s+").toSeq.map(_.toLongOption) match {
-      case Seq(Some(n), Some(cov), Some(since)) => Some(RecheckMarker(n, cov, since))
-      case _ => fs.delete(marker, false); None
-    }
-  }
-
-  /** The highest batch id with committed history under `corpusPath`:
-   *  max over the per-batch markers, floored by the compaction
-   *  watermark (whose markers are gone but were committed). -1 for a
-   *  seed-only corpus. */
-  private[graft] def maxCommittedBatch(fs: org.apache.hadoop.fs.FileSystem,
-      corpusPath: String): Long = {
-    val dir = new Path(corpusPath, "_committed")
-    val fromMarkers =
-      if (!fs.exists(dir)) None
-      else fs.listStatus(dir).iterator.flatMap { st =>
-        val nm = st.getPath.getName
-        if (nm.startsWith("batch-")) nm.drop(6).toLongOption else None
-      }.maxOption
-    val fromWatermark = AtRest.markerWatermark(fs, corpusPath).map(_ - 1)
-    (fromMarkers.toSeq ++ fromWatermark.toSeq).maxOption.getOrElse(-1L)
-  }
-
-  private[graft] def frontierPath(corpusPath: String) =
-    new Path(corpusPath, "_committed/recheck-frontier")
-
-  /** The persisted incremental-recheck frontier: `(nextSince, nextId)` —
-   *  the first batch id not yet adjudicated and the next recheck id. */
-  private[graft] def readFrontier(fs: org.apache.hadoop.fs.FileSystem,
-      corpusPath: String): Option[(Long, Long)] = {
-    val p = frontierPath(corpusPath)
-    if (!fs.exists(p)) None
-    else {
-      val toks = new String(AtRest.readFile(fs, p),
-        java.nio.charset.StandardCharsets.UTF_8).trim.split("\\s+").toSeq
-      (toks.headOption.flatMap(_.toLongOption),
-        toks.lift(1).flatMap(_.toLongOption)) match {
-        case (Some(since), Some(id)) => Some((since, id))
-        case _ => throw new IllegalStateException(
-          s"$p is unparsable — restore it to '<nextSince> <nextRecheckId>' " +
-            "or delete it to restart the frontier from batch 0")
+      val target = new Path(td, s"recheck=$recheckId")
+      if (!fs.rename(staging, target))
+        throw new IllegalStateException(
+          s"tombstone publish rename $staging -> $target failed")
+      adjusted.foreach { case (rows, schema) =>
+        import scala.jdk.CollectionConverters._
+        AtRest.publishLedgerDelta(spark.createDataFrame(rows.asJava, schema),
+          corpDir, ledgerId)
       }
     }
+    dropIds.unpersist(blocking = false)
+    n
   }
 
   /**
    * [[recheckSince]] with ZERO caller bookkeeping — the cron-shaped
-   * entry a production loop runs: the pass derives `sinceBatch` and
-   * `recheckId` from the persisted `_committed/recheck-frontier`
-   * marker (absent = adjudicate everything since batch 0, next id after
-   * any existing recheck markers) and advances it afterwards. The
-   * advance is REPLAY-SAFE because it derives from the recheck marker's
-   * own recorded coverage, not from re-listing: a crash between the
-   * recheck's commit and the frontier write re-runs with the same id,
-   * short-circuits on the marker, and advances to exactly the range
-   * that marker covered — batches ingested after the crash stay ahead
-   * of the frontier and are adjudicated by the NEXT pass, never
-   * skipped.
+   * entry a production loop runs: `sinceBatch` and `recheckId` derive
+   * from the persisted `_committed/recheck-frontier`, which advances
+   * replay-safely afterwards ([[AtRest.recheckIncremental]]).
    */
   def recheckIncremental(spark: SparkSession, corpusPath: String,
       indexPath: String, threshold: Double = 0.7, textCol: String = "text",
@@ -1817,45 +1327,10 @@ object DedupIndex {
       shingleWords: Int = 3, maxBucket: Int = 1000, nParts: Int = 16,
       corpusParts: Int = 16,
       score: org.apache.spark.sql.Column => org.apache.spark.sql.Column = length(_))
-      : Long = {
-    val fs = fsFor(spark, corpusPath)
-    val (since, id) = readFrontier(fs, corpusPath).getOrElse {
-      // no frontier yet: start from batch 0, after any caller-driven
-      // recheck markers already present (ids must not collide with them)
-      val dir = new Path(corpusPath, "_committed")
-      val maxExisting =
-        if (!fs.exists(dir)) None
-        else fs.listStatus(dir).iterator.flatMap { st =>
-          val nm = st.getPath.getName
-          if (nm.startsWith("recheck-") && nm != "recheck-frontier")
-            nm.drop(8).toLongOption
-          else None
-        }.maxOption
-      // bootstrap after existing markers (a crash between the marker
-      // write and the first frontier write lands here): resume past the
-      // LATEST marker only when it PROVABLY covered everything below
-      // (window start 0 + recorded coverage); a caller-driven window
-      // starting above 0 proves nothing about the batches below it, so
-      // restart from 0 (idempotent re-adjudication, never a skip)
-      maxExisting match {
-        case Some(mid) =>
-          recheckMarkerInfo(fs, corpusPath, mid) match {
-            case Some(RecheckMarker(_, cov, 0L)) =>
-              (cov + 1L, mid + 1L)
-            case _ => (0L, mid + 1L)
-          }
-        case None => (0L, 0L)
-      }
-    }
-    val n = recheckSince(spark, corpusPath, indexPath, since, id, threshold,
+      : Long = AtRest.recheckIncremental(spark, corpusPath) { (since, id) =>
+    recheckSince(spark, corpusPath, indexPath, since, id, threshold,
       textCol, idCol, numHashes, bands, shingleWords, maxBucket, nParts,
       corpusParts, score)
-    val nextSince = recheckMarkerInfo(fs, corpusPath, id).getOrElse(
-      throw new IllegalStateException(
-        s"recheck-$id committed but its marker is unreadable")).coveredUpTo + 1L
-    AtRest.writeFile(fs, frontierPath(corpusPath),
-      s"$nextSince ${id + 1L}".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    n
   }
 
   /** [[compact]]'s corpus twin: collapse the per-batch corpus directories
@@ -1878,15 +1353,14 @@ object DedupIndex {
     ensureReadableIfEmpty(laid, dataDir)
     // the ledger compacts with its corpus: all accreted deltas collapse
     // into one seed delta inside the new version (same totals, one file)
-    ledgerLong(spark, cur).foreach(lf =>
-      publishLedgerDelta(collapseLedger(lf), staging.toString, SeedBatch))
+    AtRest.carryLedger(spark, cur, staging)
     val merged = AtRest.readMeta(spark, path).getOrElse(Map("kind" -> "dedup_corpus")) ++
       Map("idCol" -> idCol, "corpusParts" -> nParts.toString)
     AtRest.writeMetaStaged(spark, staging, merged)
     // batch dirs fold into the seed here: record how far, so a later
     // incremental recheck knows its window can't be scoped by dir and
     // full-sweeps the folded range once instead of silently skipping it
-    AtRest.writeCollapseFrontier(fs, path, maxCommittedBatch(fs, path))
+    AtRest.writeCollapseFrontier(fs, path)
     AtRest.publishVersion(spark, path, v)
   })
 }

@@ -511,9 +511,8 @@ object Similarity {
         require(corpus.columns.contains(g),
           s"ledgerBy=$g is not a column of the seed corpus " +
             s"(got ${corpus.columns.mkString("[", ", ", "]")})")
-        DedupIndex.publishLedgerDelta(
-          DedupIndex.countLong(corpus, g, "n_vecs"),
-          staging.toString, DedupIndex.SeedBatch)
+        AtRest.publishLedgerDelta(AtRest.countLong(corpus, g, "n_vecs"),
+          staging.toString, AtRest.SeedBatch)
       }
       AtRest.writeMetaStaged(spark, staging,
         ivfMeta(centroids, replicas, idCol, lshScheme)
@@ -540,7 +539,7 @@ object Similarity {
     AtRest.withLease(spark, path) {
       // an ad-hoc append has no replay identity, so it cannot maintain the
       // exactly-once stats ledger — same contract as the corpus twin
-      if (ivfLedgerByOf(spark, path).isDefined)
+      if (AtRest.ledgerBy(spark, path).isDefined)
         throw new IllegalArgumentException(
           s"$path maintains an exactly-once vector-stats ledger, which an " +
             "ad-hoc append cannot honor — ingest through ivfIngestBatch " +
@@ -911,19 +910,13 @@ object Similarity {
     // a ledgered table's counters survive maintenance: the accreted deltas
     // collapse to ONE seed delta in the new version (no vector is added or
     // removed by compact/retrain, so the collapsed ledger stays exact)
-    val ledgerBy = ivfLedgerByOf(spark, path)
-    ledgerBy.foreach { _ =>
-      DedupIndex.ledgerLong(spark, AtRest.resolve(spark, path)).foreach { lf =>
-        // a recheck's negative adjustment (removed vectors subtract back
-        // out) merges into the collapsed seed delta — evaluated HERE,
-        // against the pre-swap version, while staging (before the pointer
-        // moves), so the adjustment can never anti-join the rows it is
-        // itself accounting for
-        val merged = Option(ledgerAdjust).fold(lf)(lf.unionByName(_))
-        DedupIndex.publishLedgerDelta(DedupIndex.collapseLedger(merged),
-          staging.toString, DedupIndex.SeedBatch)
-      }
-    }
+    // a recheck's negative adjustment (removed vectors subtract back out)
+    // merges into the collapsed seed delta — evaluated HERE, against the
+    // pre-swap version, while staging (before the pointer moves), so the
+    // adjustment can never anti-join the rows it is itself accounting for
+    val ledgerBy = AtRest.ledgerBy(spark, path)
+    if (ledgerBy.isDefined)
+      AtRest.carryLedger(spark, AtRest.resolve(spark, path), staging, Option(ledgerAdjust))
     // the signature scheme travels with the rewrite like the PQ model:
     // the data columns ride in `assigned`, the meta keys that make them
     // interpretable must land in the new version too (an explicit
@@ -937,8 +930,7 @@ object Similarity {
     // this rewrite folds every batch dir into the seed — record how far,
     // so an incremental recheck whose window starts below cannot silently
     // skip the folded (never-adjudicated) batches
-    AtRest.writeCollapseFrontier(fs, path,
-      DedupIndex.maxCommittedBatch(fs, path))
+    AtRest.writeCollapseFrontier(fs, path)
     AtRest.publishVersion(spark, path, v)
   }
 
@@ -1578,16 +1570,13 @@ object Similarity {
    * pair). Survivors append under the EXISTING codebook (validated
    * against the persisted sidecar). Returns the admitted count.
    *
-   * Delivery with `batchId >= 0` is EXACTLY-ONCE, the same protocol as
-   * the dedup loop: the admitted vectors stage under
-   * `_staging_<batchId>` and publish with one atomic rename to
-   * `ingest_batch=<batchId>`, then a `_committed` marker (holding the
-   * admitted count) records completion; replays short-circuit on the
-   * marker, partial crashes un-publish and recompute. The admit
-   * decision is ALSO content-idempotent as defense in depth — a
-   * replayed vector finds its previously-appended copy at cosine ~1.0
-   * (same-id matches included by design) and drops. `batchId < 0`
-   * keeps the plain at-least-once append for direct one-shot callers.
+   * Delivery, replay, leases, sharding and the ledger follow the one
+   * at-rest protocol ([[AtRest.ingestBatch]]) with the table as the only
+   * root. The admit decision is ALSO content-idempotent as defense in
+   * depth — a replayed vector finds its previously-appended copy at
+   * cosine ~1.0 (same-id matches included by design) and drops.
+   * `batchId < 0` keeps the plain at-least-once append for direct
+   * one-shot callers.
    *
    * Recall caveat (cross-probe only): a true near-dup in a list outside
    * the arrival's nProbe nearest can be missed — but near-duplicates
@@ -1599,26 +1588,11 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       batchId: Long = -1L, maxExactBatch: Long = 10000L,
       leaseOwner: String = null, shard: Int = 0, nShards: Int = 1,
-      rerankFrom: DataFrame = null): Long = StageCoalesce.sizeBased(newVecs.sparkSession) {
-    val spark = newVecs.sparkSession
-    val fs = AtRest.fsFor(spark, path)
-    val marker = new org.apache.hadoop.fs.Path(path, s"_committed/batch-$batchId")
-    if (batchId >= 0 && fs.exists(marker)) {
-      val txt = new String(AtRest.readFile(fs, marker),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      txt.toLongOption match {
-        case Some(n) => return n
-        case None => fs.delete(marker, false)
-      }
-    }
-    // marker absent below the compacted-marker watermark = checkpoint
-    // truncation, not a replay — fail loudly (AtRest.compactMarkers)
-    if (batchId >= 0) AtRest.failIfBelowWatermark(fs, path, batchId)
-    val owner = if (leaseOwner != null) leaseOwner
-      else java.util.UUID.randomUUID().toString
-    if (nShards <= 1) AtRest.acquireLease(spark, path, owner)
-    else AtRest.acquireShardLease(spark, path, owner, shard, nShards)
-    try {
+      rerankFrom: DataFrame = null): Long =
+    AtRest.ingestBatch(newVecs, Seq(path), idCol, batchId, leaseOwner, shard,
+        nShards) { ledgerBy =>
+      val spark = newVecs.sparkSession
+      val fs = AtRest.fsFor(spark, path)
       val codesOnly = ivfCodesOnlyOf(spark, path)
       if (codesOnly && rerankFrom == null)
         throw new IllegalStateException(
@@ -1631,67 +1605,27 @@ object Similarity {
       validateCodebook(spark, path, centroids)
       requireIdCol(spark, path, idCol)
       val dir = adoptDir(spark, path, centroids, idCol)
-      if (batchId >= 0) {
-        // un-publish a half-published crash leftover so the replay's probe
-        // sees the exact pre-attempt state
-        val batchDir = new org.apache.hadoop.fs.Path(dir, s"ingest_batch=$batchId")
-        if (fs.exists(batchDir)) fs.delete(batchDir, true)
-      }
-      val ledgerBy = ivfLedgerByOf(spark, path)
-      // same contract as the corpus twin: a ledgered table takes
-      // checkpointed (replay-identified) ingests only, or the card's
-      // exactly-once headline would silently weaken to at-least-once
-      if (ledgerBy.isDefined && batchId < 0)
-        throw new IllegalArgumentException(
-          s"$path maintains an exactly-once vector-stats ledger, which an " +
-            "ad-hoc (batchId < 0) append cannot honor — pass a stable " +
-            "batchId >= 0 (or ingest through ivfIngestStream)")
-      ledgerBy.foreach(g => require(newVecs.columns.contains(g),
-        s"vector-stats ledger maintenance requires column '$g' (the table's " +
-          s"_meta.json declares ledgerBy=$g); got " +
-          newVecs.columns.mkString("[", ", ", "]")))
       val keepCols = (Seq(idCol, vecCol) ++ ledgerBy).distinct
-      val b = newVecs.select(keepCols.map(col): _*).dropDuplicates(idCol)
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
-      // sharded fence covers only this writer's id range — reject
-      // misrouted rows loudly (mirrors DedupIndex.ingestBatch)
-      if (nShards > 1) {
-        val nOutside = b.filter(
-          pmod(xxhash64(col(idCol)), lit(nShards.toLong)) =!= shard).count()
-        if (nOutside > 0)
-          throw new IllegalStateException(
-            s"$nOutside batch rows fall outside shard $shard of $nShards " +
-              s"(pmod(xxhash64($idCol), $nShards)); route rows to their owning " +
-              "shard's stream")
-      }
-      val nB = b.count()
-      // localCheckpoint on the drop sets: tiny frames, enormous lineage
-      // (all-pairs/LSH dedup, pruned table probe) that every downstream
-      // consumer — admit anti-join, ledger counts, the sharded commit's
-      // unions — would otherwise re-plan per action
-      val inDrop = (
-        if (nB <= maxExactBatch) {
-          val lhs = b.select(col(idCol).as("_ia"), col(vecCol).as("_va"))
-          val rhs = b.select(col(idCol).as("_ib"), col(vecCol).as("_vb"))
-          lhs.join(broadcast(rhs), col("_ia") < col("_ib"))
-            .filter(cosine(col("_va"), col("_vb")) >= threshold)
-            .select(col("_ib").as(idCol)).distinct()
-        } else
-          // bulk-load guard: banded sign-LSH candidates + exact verify —
-          // no broadcast NLJ in the plan, linear-ish in the batch
-          embeddingDuplicates(b, threshold, idCol = idCol, vecCol = vecCol)
-            .select(col("id_b").as(idCol)).distinct()
-      ).localCheckpoint(true)
-      val hasTable = {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("ingest_batch="))
-      }
-      // snapshot of the table's batch dirs, taken just before the probe:
-      // the sharded commit section re-probes against batches that COMMIT
-      // after this point (the cross-shard in-flight window)
-      val snapshotIds = ivfListBatchIds(fs, dir)
-      val crossDrop =
-        if (hasTable) {
+      new AtRest.Admission(newVecs.select(keepCols.map(col): _*).dropDuplicates(idCol)
+          .persist(StorageLevel.MEMORY_AND_DISK_SER)) {
+        val probeDir = dir
+        val batchDirs = Seq(dir)
+        val ledgerIn = dir
+
+        def inBatchDrops: DataFrame =
+          if (b.count() <= maxExactBatch) {
+            val lhs = b.select(col(idCol).as("_ia"), col(vecCol).as("_va"))
+            val rhs = b.select(col(idCol).as("_ib"), col(vecCol).as("_vb"))
+            lhs.join(broadcast(rhs), col("_ia") < col("_ib"))
+              .filter(cosine(col("_va"), col("_vb")) >= threshold)
+              .select(col("_ib").as(idCol)).distinct()
+          } else
+            // bulk-load guard: banded sign-LSH candidates + exact verify —
+            // no broadcast NLJ in the plan, linear-ish in the batch
+            embeddingDuplicates(b, threshold, idCol = idCol, vecCol = vecCol)
+              .select(col("id_b").as(idCol)).distinct()
+
+        def crossDrops: DataFrame = {
           val probes = b.select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"))
           val probeLists = ivfProbeLists(probes, centroids, nProbe)
           // bounded collect over the MODEL's keyspace (≤ nLists), the same
@@ -1703,115 +1637,40 @@ object Similarity {
           // no same-id exclusion here (unlike the pair-REPORTING probes):
           // an arrival matching an at-rest row under its own id IS "already
           // ingested" — dropping it is what makes replays content-idempotent
-          (if (codesOnly)
+          if (codesOnly)
             crossProbeCodesOnly(spark, dir, path, pruned, probeLists,
               rerankFrom, centroids, threshold, idCol, vecCol)
           else pruned
             .join(broadcast(probeLists), "list_id")
             .filter(cosine(col("probe_vec"), col(vecCol)) >= threshold)
-            .select(col("probe_id").as(idCol)).distinct())
-            .localCheckpoint(true) // same lineage-cut as inDrop
-        } else b.select(col(idCol)).limit(0)
-      // materialized HERE — the heavy probing finishes before the
-      // (serialized) sharded commit section below; checkpointed so the
-      // commit's queries plan against a leaf, not the probe lineage
-      val admitted0 = b.join(inDrop.unionByName(crossDrop).distinct(),
-          Seq(idCol), "left_anti")
-        .localCheckpoint(true)
-      onBeforeCommitIvf()
-
-      def publishAdjudicated(admitted: DataFrame, crossDropAll: DataFrame): Long = {
-        val n = admitted.count()
-        if (n > 0) {
-          // signed tables sign arrivals under the recorded scheme (one
-          // signature set per vector, before replica fan-out)
-          val preSigned = lshSchemeOf(spark, path).fold(admitted) {
-            case (p, t) => withLshSigs(admitted, vecCol, p, t)
-          }
-          val encoded = withPqCodes(
-            ivfAssignMulti(preSigned, centroids, vecCol,
-              ivfReplicasOf(spark, path)),
-            spark, path, vecCol)
-          // a codes-only table stays codes-only: assign + encode, then
-          // drop the raw vectors like the seed write did
-          val assigned = if (codesOnly) encoded.drop(vecCol) else encoded
-          if (batchId >= 0) {
-            // stage + one atomic rename, the exactly-once publish
-            val target = new org.apache.hadoop.fs.Path(dir, s"ingest_batch=$batchId")
-            if (!fs.exists(target)) {
-              val staging = new org.apache.hadoop.fs.Path(dir, s"_staging_$batchId")
-              writeListData(assigned, idCol, "overwrite", staging.toString)
-              if (!fs.rename(staging, target))
-                throw new IllegalStateException(
-                  s"publish rename $staging -> $target failed")
-            }
-          } else {
-            writeListData(assigned, idCol, "append",
-              new org.apache.hadoop.fs.Path(dir, "ingest_batch=-1").toString)
-          }
+            .select(col("probe_id").as(idCol)).distinct()
         }
-        // ledger delta: published AFTER the data, BEFORE the marker — a
-        // crash in between replays the whole batch and rewrites both
-        // (publishLedgerDelta is an idempotent no-op on the replay), so
-        // card and table can never disagree. Even an all-dropped batch
-        // publishes (its drop counters are real).
-        ledgerBy.foreach { g =>
-          val crossOnly = crossDropAll.join(inDrop, Seq(idCol), "left_anti")
-          val delta = DedupIndex.countLong(admitted, g, "n_vecs")
-            .unionByName(DedupIndex.countLong(
-              b.join(inDrop, Seq(idCol), "left_semi"), g, "n_dropped_batch"))
-            .unionByName(DedupIndex.countLong(
-              b.join(crossOnly, Seq(idCol), "left_semi"), g, "n_dropped_cross"))
-          DedupIndex.publishLedgerDelta(delta, dir, batchId)
-        }
-        if (batchId >= 0)
-          AtRest.writeFile(fs, marker,
-            n.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        n
-      }
 
-      // SHARDED commit: serialized by the table root's commit mutex, so
-      // commits are total-ordered and each one re-adjudicates against
-      // every batch committed since its probe snapshot — closing the
-      // cross-shard in-flight window (two shards concurrently ingesting
-      // near-identical vectors could both admit before either
-      // published), exactly as [[DedupIndex.ingestBatch]] does for text.
-      // The re-probe reads the delta batch DIRS only (batch-proportional
-      // I/O); on a hit MY member drops — the committed side is
-      // immutable. Unsharded writers skip the lock: their whole-root
-      // lease already excludes concurrency.
-      val n =
-        if (nShards <= 1) publishAdjudicated(admitted0, crossDrop)
-        else AtRest.withCommitLock(spark, path) {
-          val delta = (ivfListBatchIds(fs, dir) -- snapshotIds - batchId)
-            .filter(idB => fs.exists(
-              new org.apache.hadoop.fs.Path(path, s"_committed/batch-$idB")))
-          // prune by the SAME nProbe ranking as the main probe: a pair
-          // this re-probe should catch sits in a delta list my arrivals
-          // would probe, so only those list sub-dirs are read — and when
-          // the intersection is empty (the every-batch case in a healthy
-          // fleet) the whole re-probe is one bounded probe-list job plus
-          // driver-side directory listings, no data read at all.
-          val myLists: Set[Int] =
-            if (delta.isEmpty) Set.empty
-            else ivfProbeLists(
-                admitted0.select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec")),
-                centroids, nProbe)
-              .select("list_id").distinct().collect().map(_.getInt(0)).toSet
-          val deltaDirs = delta.toSeq.sorted.flatMap { idB =>
+        // prune by the SAME nProbe ranking as the main probe: a pair this
+        // re-probe should catch sits in a delta list my arrivals would
+        // probe, so only those list sub-dirs are read — and when the
+        // intersection is empty (the every-batch case in a healthy fleet)
+        // the re-probe is one bounded probe-list job plus directory
+        // listings on the Spark driver, no data read at all.
+        def reprobe(admitted: DataFrame, delta: Seq[Long]): Option[DataFrame] = {
+          val myLists: Set[Int] = ivfProbeLists(
+              admitted.select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec")),
+              centroids, nProbe)
+            .select("list_id").distinct().collect().map(_.getInt(0)).toSet
+          val deltaDirs = delta.flatMap { idB =>
             val bd = new org.apache.hadoop.fs.Path(dir, s"ingest_batch=$idB")
             fs.listStatus(bd).map(_.getPath).filter { p =>
               p.getName.startsWith("list_id=") &&
                 p.getName.stripPrefix("list_id=").toIntOption.exists(myLists)
             }
           }
-          if (deltaDirs.isEmpty) publishAdjudicated(admitted0, crossDrop)
+          if (deltaDirs.isEmpty) None
           else {
-            // codes-only: the delta dirs hold codes, not vectors — fetch
-            // the (batch-sized) delta ids' vectors from the store. The
-            // committed shard's arrivals are in the store by contract
-            // (the store is upstream of ingest); a gap fails open, the
-            // recheck's coverage check screams later.
+            // codes-only: the delta dirs hold codes, not vectors — fetch the
+            // (batch-sized) delta ids' vectors from the store. The committed
+            // shard's arrivals are in the store by contract (the store is
+            // upstream of ingest); a gap fails open, the recheck's coverage
+            // check screams later.
             val theirs =
               if (codesOnly) {
                 val theirIds = spark.read.parquet(deltaDirs.map(_.toString): _*)
@@ -1821,28 +1680,37 @@ object Similarity {
                   .select(col(vecCol).as("_vt")).distinct()
               } else spark.read.parquet(deltaDirs.map(_.toString): _*)
                 .select(col(vecCol).as("_vt")).distinct()
-            val more = theirs.join(
-                broadcast(admitted0.select(col(idCol), col(vecCol))),
+            Some(theirs.join(
+                broadcast(admitted.select(col(idCol), col(vecCol))),
                 cosine(col("_vt"), col(vecCol)) >= threshold)
-              .select(col(idCol)).distinct()
-              .persist(StorageLevel.MEMORY_AND_DISK_SER)
-            val admitted = admitted0.join(more, Seq(idCol), "left_anti")
-              .persist(StorageLevel.MEMORY_AND_DISK_SER)
-            val out = publishAdjudicated(admitted,
-              crossDrop.unionByName(more).distinct())
-            admitted.unpersist(blocking = false)
-            more.unpersist(blocking = false)
-            out
+              .select(col(idCol)).distinct())
           }
         }
-      admitted0.unpersist(blocking = false)
-      b.unpersist(blocking = false)
-      n
-    } finally if (leaseOwner == null) {
-      if (nShards <= 1) AtRest.releaseLease(spark, path, owner)
-      else AtRest.releaseShardLease(spark, path, owner, shard, nShards)
+
+        def publish(admitted: DataFrame, n: Long): Unit = {
+          // signed tables sign arrivals under the recorded scheme (one
+          // signature set per vector, before replica fan-out)
+          val preSigned = lshSchemeOf(spark, path).fold(admitted) {
+            case (p, t) => withLshSigs(admitted, vecCol, p, t)
+          }
+          val encoded = withPqCodes(
+            ivfAssignMulti(preSigned, centroids, vecCol, ivfReplicasOf(spark, path)),
+            spark, path, vecCol)
+          // a codes-only table stays codes-only: assign + encode, then
+          // drop the raw vectors like the seed write did
+          val assigned = if (codesOnly) encoded.drop(vecCol) else encoded
+          if (batchId >= 0)
+            AtRest.publishBatchDir(spark, dir, batchId)(
+              writeListData(assigned, idCol, "overwrite", _))
+          else
+            writeListData(assigned, idCol, "append",
+              new org.apache.hadoop.fs.Path(dir, "ingest_batch=-1").toString)
+        }
+
+        def admittedStats(admitted: DataFrame, grp: String): DataFrame =
+          AtRest.countLong(admitted, grp, "n_vecs")
+      }
     }
-  }
 
   /** Session conf: per-arrival candidate count for the codes-only
    *  cross-probe's ADC pass (default 64). ADC is an approximation whose
@@ -1910,12 +1778,6 @@ object Similarity {
       .select(col("probe_id").as(idCol)).distinct()
   }
 
-  /** Test seam: runs after the probe snapshot is materialized and before
-   *  the commit section — a spec injects a concurrent shard's commit here
-   *  to exercise the cross-shard delta re-probe deterministically. A
-   *  no-op in production. */
-  private[graft] var onBeforeCommitIvf: () => Unit = () => ()
-
   /** Test seam: receives [[ivfPqTopKAtRest]]'s ADC candidate frame before
    *  the candidate-id collect, so a spec can assert the code scan's
    *  partition pruning and column pruning on the OPERATOR's own plan (the
@@ -1953,21 +1815,7 @@ object Similarity {
       default: Int): Int =
     spark.conf.getOption(key).map(_.trim.toInt).getOrElse(default)
 
-  private def ivfListBatchIds(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Set[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("ingest_batch="))
-      .flatMap(_.stripPrefix("ingest_batch=").toLongOption).toSet
-  }
-
   // ----------------------------------------------------------- vector ledger
-
-  /** The ledgerBy table property, if the IVF table maintains a ledger. */
-  private def ivfLedgerByOf(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[String] =
-    AtRest.readMeta(spark, path).flatMap(_.get("ledgerBy"))
 
   private val IvfLedgerCounters =
     Seq("n_vecs", "n_dropped_batch", "n_dropped_cross", "n_removed_recheck")
@@ -1978,65 +1826,32 @@ object Similarity {
    * and the ingest loop's near-duplicate drop history (in-batch vs
    * cross-table), grouped by the table's `ledgerBy` column, read from
    * O(committed batches × sources) tiny ledger rows instead of a table
-   * scan. Maintained by [[ivfIngestBatch]] under the same exactly-once
-   * protocol as the data (delta publishes after the batch dir, before the
-   * `_committed` marker — a crash between them replays and rewrites
-   * both), collapsed to one seed delta by [[ivfCompactAtRest]]/
-   * [[ivfRetrain]] (which move no vectors, so the card is invariant
-   * across maintenance). Enable at seed time
+   * scan ([[AtRest.ledgerCard]]). Maintained by [[ivfIngestBatch]] under
+   * the same exactly-once protocol as the data, collapsed to one seed
+   * delta by [[ivfCompactAtRest]]/[[ivfRetrain]] (which move no vectors,
+   * so the card is invariant across maintenance). Enable at seed time
    * ([[ivfWriteAtRest]]`(..., ledgerBy = <col>)`) or migrate a live table
    * with [[ivfEnableLedger]]. Loud error on unledgered tables.
    */
   def ivfLedgerCard(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val grpName = ivfLedgerByOf(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"$path maintains no vector-stats ledger — seed with " +
-          "ivfWriteAtRest(..., ledgerBy = <col>) or migrate with ivfEnableLedger"))
-    val lf = DedupIndex.ledgerLong(spark, AtRest.resolve(spark, path)).getOrElse(
-      throw new IllegalStateException(
-        s"$path declares ledgerBy=$grpName but has no _ledger deltas — " +
-          "the table is damaged; re-run ivfEnableLedger to rebuild"))
-    val aggs = IvfLedgerCounters.map(c =>
-      sum(when(col("counter") === c, col("value")).otherwise(0L)).as(c))
-    lf.groupBy("grp").agg(aggs.head, aggs.tail: _*)
-      .withColumnRenamed("grp", grpName)
-      .orderBy(grpName)
-  }
+      path: String): DataFrame =
+    AtRest.ledgerCard(spark, path, IvfLedgerCounters, "ivfWriteAtRest", "ivfEnableLedger")
 
   /** Migrate an existing (unledgered) IVF table to ledger maintenance:
    *  one recompute of `n_vecs` over the CURRENT table as the collapsed
-   *  seed delta, plus the meta property that turns every later
-   *  [[ivfIngestBatch]] incremental. Drop-history counters start at 0 —
-   *  the history before enablement was never recorded anywhere. */
+   *  seed delta ([[AtRest.enableLedger]]). */
   def ivfEnableLedger(spark: org.apache.spark.sql.SparkSession, path: String,
-      ledgerBy: String): Unit = AtRest.withLease(spark, path) {
-    val meta = AtRest.readMeta(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"$path has no _meta.json — seed it through ivfWriteAtRest first"))
-    val dir = AtRest.resolve(spark, path)
-    val fs = AtRest.fsFor(spark, path)
-    val ld = new org.apache.hadoop.fs.Path(dir, "_ledger")
-    if (fs.exists(ld)) fs.delete(ld, true)
-    // drop the assignment columns and dedupe: a multi-assigned table holds
-    // each vector once per replica, which must not inflate n_vecs
-    val cur = ivfRead(spark, path).drop("list_id", "ingest_batch").dropDuplicates()
-    require(cur.columns.contains(ledgerBy),
-      s"ledgerBy=$ledgerBy is not a column of the at-rest table " +
-        s"(got ${cur.columns.mkString("[", ", ", "]")}) — re-ingest with it " +
-        "or pick a persisted column")
-    DedupIndex.publishLedgerDelta(DedupIndex.countLong(cur, ledgerBy, "n_vecs"),
-      dir, DedupIndex.SeedBatch)
-    AtRest.writeMeta(spark, path, meta + ("ledgerBy" -> ledgerBy))
-  }
-
-  /** Marker-retention maintenance for the IVF table, mirroring
-   *  [[graft.operators.DedupIndex.compactMarkers]]: watermark + sweep of
-   *  `_committed` markers below the oldest replayable batchId. */
-  def ivfCompactMarkers(spark: org.apache.spark.sql.SparkSession, path: String,
-      oldestReplayable: Long): Unit = AtRest.withLease(spark, path) {
-    AtRest.compactMarkers(spark, path, oldestReplayable)
-  }
+      ledgerBy: String): Unit =
+    AtRest.enableLedger(spark, path, ledgerBy, "ivfWriteAtRest") {
+      // drop the assignment columns and dedupe: a multi-assigned table
+      // holds each vector once per replica, which must not inflate n_vecs
+      val cur = ivfRead(spark, path).drop("list_id", "ingest_batch").dropDuplicates()
+      require(cur.columns.contains(ledgerBy),
+        s"ledgerBy=$ledgerBy is not a column of the at-rest table " +
+          s"(got ${cur.columns.mkString("[", ", ", "]")}) — re-ingest with it " +
+          "or pick a persisted column")
+      AtRest.countLong(cur, ledgerBy, "n_vecs")
+    }
 
   /** [[ivfIngestBatch]] under the table's OWN persisted codebook. */
   def ivfIngestBatch(newVecs: DataFrame, path: String, threshold: Double,
@@ -2113,92 +1928,27 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       scoreCol: String = null, planesPerTable: Int = 0, tables: Int = 0,
       maxBucket: Int = 1000, rerankFrom: DataFrame = null): Long =
-      StageCoalesce.sizeBased(spark) {
-    require(recheckId >= 0, s"recheckId must be >= 0, got $recheckId")
-    val fs = AtRest.fsFor(spark, path)
-    DedupIndex.recheckMarkerInfo(fs, path, recheckId) match {
-      case Some(m) => return m.removed
-      case None => // absent or unparsable (the latter deleted) — run
-    }
-    AtRest.withLease(spark, path) {
-      // the highest COMMITTED batch this pass will have adjudicated —
-      // snapshotted under the lease and recorded in the marker, so the
-      // frontier advance derives from actual coverage
-      val coveredUpTo = DedupIndex.maxCommittedBatch(fs, path)
-      // maintenance (compact/retrain/recheck-rewrite) folds batch dirs
-      // into the seed: when this window starts below the fold frontier,
-      // the folded batches have no dirs to scope by — fall back to a
-      // FULL sweep for this one pass (the next pass's window starts
-      // past coveredUpTo and is incremental again)
-      val since =
-        if (sinceBatch < AtRest.collapseFrontier(fs, path)) None
-        else Some(sinceBatch)
-      val n = recheckSweep(spark, path, sinceBatch = since,
+    AtRest.recheckSince(spark, path, sinceBatch, recheckId) { window =>
+      recheckSweep(spark, path, sinceBatch = window,
         threshold, idCol, vecCol, scoreCol, planesPerTable, tables, maxBucket,
         rerankFrom)
-      // the marker records the window the pass ACTUALLY ran from (a
-      // full-sweep fallback covers from 0) — what a frontier bootstrap
-      // may safely resume past
-      AtRest.writeFile(fs,
-        new org.apache.hadoop.fs.Path(path, s"_committed/recheck-$recheckId"),
-        s"$n $coveredUpTo ${since.getOrElse(0L)}"
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      n
     }
-  }
 
   /**
    * [[ivfRecheckSince]] with ZERO caller bookkeeping — the cron-shaped
-   * entry, mirroring [[graft.operators.DedupIndex.recheckIncremental]]:
-   * `sinceBatch`/`recheckId` derive from the persisted
-   * `_committed/recheck-frontier` (absent = everything since batch 0),
-   * and the frontier advances from the committed marker's own recorded
-   * coverage — a crash between the recheck's commit and the frontier
-   * write re-runs with the same id, short-circuits on the marker, and
-   * advances to exactly the covered range; later batches stay ahead of
-   * the frontier for the next pass.
+   * entry, the same frontier as
+   * [[graft.operators.DedupIndex.recheckIncremental]]
+   * ([[AtRest.recheckIncremental]]).
    */
   def ivfRecheckIncremental(spark: org.apache.spark.sql.SparkSession,
       path: String, threshold: Double = 0.95, idCol: String = "vec_id",
       vecCol: String = "embedding", scoreCol: String = null,
       planesPerTable: Int = 0, tables: Int = 0, maxBucket: Int = 1000,
-      rerankFrom: DataFrame = null): Long = StageCoalesce.sizeBased(spark) {
-    val fs = AtRest.fsFor(spark, path)
-    val (since, id) = DedupIndex.readFrontier(fs, path).getOrElse {
-      val dir = new org.apache.hadoop.fs.Path(path, "_committed")
-      val maxExisting =
-        if (!fs.exists(dir)) None
-        else fs.listStatus(dir).iterator.flatMap { st =>
-          val nm = st.getPath.getName
-          if (nm.startsWith("recheck-") && nm != "recheck-frontier")
-            nm.drop(8).toLongOption
-          else None
-        }.maxOption
-      // bootstrap after existing markers (a crash between the marker
-      // write and the first frontier write lands here): resume past the
-      // LATEST marker only when it PROVABLY covered everything below
-      // (window start 0 + recorded coverage); a caller-driven window
-      // starting above 0 proves nothing about the batches below it, so
-      // restart from 0 (idempotent re-adjudication, never a skip)
-      maxExisting match {
-        case Some(mid) =>
-          DedupIndex.recheckMarkerInfo(fs, path, mid) match {
-            case Some(DedupIndex.RecheckMarker(_, cov, 0L)) =>
-              (cov + 1L, mid + 1L)
-            case _ => (0L, mid + 1L)
-          }
-        case None => (0L, 0L)
-      }
+      rerankFrom: DataFrame = null): Long =
+    AtRest.recheckIncremental(spark, path) { (since, id) =>
+      ivfRecheckSince(spark, path, since, id, threshold, idCol, vecCol,
+        scoreCol, planesPerTable, tables, maxBucket, rerankFrom)
     }
-    val n = ivfRecheckSince(spark, path, since, id, threshold, idCol, vecCol,
-      scoreCol, planesPerTable, tables, maxBucket, rerankFrom)
-    val nextSince = DedupIndex.recheckMarkerInfo(fs, path, id).getOrElse(
-      throw new IllegalStateException(
-        s"recheck-$id committed but its marker is unreadable")).coveredUpTo + 1L
-    AtRest.writeFile(fs, DedupIndex.frontierPath(path),
-      s"$nextSince ${id + 1L}".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    n
-  }
 
   /** The shared sweep: find → keep-best → (conditionally) rewrite +
    *  ledger-adjust. Callers hold the lease. `sinceBatch = None` examines
@@ -2364,7 +2114,7 @@ object Similarity {
       }
       val adjust =
         if (n == 0) None
-        else ivfLedgerByOf(spark, path).map { g =>
+        else AtRest.ledgerBy(spark, path).map { g =>
           // the subtraction counts ADMISSIONS, not distinct (id, group)
           // pairs: every admission incremented n_vecs by one and wrote
           // exactly `replicas` physical rows (its vector's `replicas`
@@ -2484,75 +2234,33 @@ object Similarity {
     Dedup.materializeThenFree(out, pairs, candIds, cand)
   }
 
-  /** The streaming wrapper, mirroring
-   *  [[graft.operators.DedupIndex.ingestStream]]: every micro-batch of
-   *  `vecs` flows through [[ivfIngestBatch]] with its foreachBatch
-   *  batchId — exactly-once end to end, durable state being the at-rest
-   *  IVF table itself. Holds the table's writer lease for the stream's
-   *  lifetime (owner derived from the checkpoint, released on
-   *  termination) — a second concurrent vector ingest stream fails at
-   *  start(). The codebook is fixed for the stream's lifetime — re-train
-   *  offline with [[ivfRetrain]] and restart. */
+  /** The streaming wrapper ([[AtRest.ingestStream]]): every micro-batch
+   *  of `vecs` flows through [[ivfIngestBatch]] with its foreachBatch
+   *  batchId under the table's stream-lifetime lease — exactly-once end
+   *  to end, durable state being the at-rest IVF table itself. The
+   *  codebook is fixed for the stream's lifetime — re-train offline with
+   *  [[ivfRetrain]] and restart. `rerankFromPath` (the codes-only
+   *  deployment): the store is re-read PER BATCH — a DataFrame captured
+   *  at stream start would pin the file listing of that moment and never
+   *  see the store grow alongside the stream. */
   def ivfIngestStream(vecs: DataFrame, centroids: Seq[Seq[Float]], path: String,
       checkpointPath: String, threshold: Double = 0.95, nProbe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding",
       rerankFromPath: String = null)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = vecs.sparkSession
-    val owner = s"ckpt:$checkpointPath"
-    AtRest.acquireLease(spark, path, owner)
-    val query =
-      try vecs.writeStream
-        .option("checkpointLocation", checkpointPath)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          // rerankFromPath (the codes-only deployment): the store is
-          // re-read PER BATCH — a DataFrame captured at stream start would
-          // pin the file listing of that moment and never see the store
-          // grow alongside the stream
-          ivfIngestBatch(b, centroids, path, threshold, nProbe, idCol, vecCol,
-            batchId = id, leaseOwner = owner,
-            rerankFrom = Option(rerankFromPath).map(spark.read.parquet).orNull)
-          ()
-        }
-        .start()
-      catch { case e: Throwable =>
-        AtRest.releaseLease(spark, path, owner); throw e
-      }
-    val qid = query.id
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == qid) {
-          AtRest.releaseLease(spark, path, owner)
-          spark.streams.removeListener(this)
-        }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    AtRest.ingestStream(vecs, Seq(path), checkpointPath, idCol) { (b, id, owner) =>
+      ivfIngestBatch(b, centroids, path, threshold, nProbe, idCol, vecCol,
+        batchId = id, leaseOwner = owner,
+        rerankFrom = Option(rerankFromPath).map(vecs.sparkSession.read.parquet).orNull)
     }
-    spark.streams.addListener(listener)
-    // a query that died before the listener registered never gets its
-    // termination event — release now instead of waiting out the TTL
-    if (!query.isActive) {
-      AtRest.releaseLease(spark, path, owner)
-      spark.streams.removeListener(listener)
-    }
-    query
-  }
 
-  /** SHARDED vector ingest, mirroring
+  /** SHARDED vector ingest, the twin of
    *  [[graft.operators.DedupIndex.ingestStreamSharded]]: N streams share
    *  one at-rest IVF table over disjoint `pmod(xxhash64(id), nShards)`
-   *  ranges — per-shard leases (same loud conflict matrix), input
-   *  filtered to the own range, foreachBatch ids namespaced
-   *  `id × nShards + shard` so the exactly-once markers and batch dirs
-   *  never collide. Cross-shard near-dups are caught twice: the
-   *  cross-probe covers every batch COMMITTED at probe time, and the
-   *  commit-mutex-serialized delta re-probe inside [[ivfIngestBatch]]
-   *  covers batches that commit inside a batch's in-flight window —
-   *  the later committer's member drops, so two racing shards can no
-   *  longer both admit a near-identical pair. All shards must hold the
+   *  ranges ([[AtRest.ingestStream]]). Cross-shard near-dups are caught
+   *  twice: the cross-probe covers every batch COMMITTED at probe time,
+   *  and the commit-mutex-serialized delta re-probe covers batches that
+   *  commit inside a batch's in-flight window. All shards must hold the
    *  SAME codebook (validated against the persisted sidecar either
    *  way). */
   def ivfIngestStreamSharded(vecs: DataFrame, centroids: Seq[Seq[Float]],
@@ -2564,45 +2272,12 @@ object Similarity {
     require(nShards > 1 && shard >= 0 && shard < nShards,
       s"ivfIngestStreamSharded needs nShards > 1 and shard in [0, nShards): " +
         s"got $shard of $nShards (single-writer = ivfIngestStream)")
-    val spark = vecs.sparkSession
-    val owner = s"ckpt:$checkpointPath"
-    AtRest.acquireShardLease(spark, path, owner, shard, nShards)
-    val own = vecs.filter(
-      pmod(xxhash64(col(idCol)), lit(nShards.toLong)) === shard)
-    val query =
-      try own.writeStream
-        .option("checkpointLocation", checkpointPath)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          // store re-read per batch — see ivfIngestStream
-          ivfIngestBatch(b, centroids, path, threshold, nProbe, idCol, vecCol,
-            batchId = id * nShards + shard, leaseOwner = owner,
-            shard = shard, nShards = nShards,
-            rerankFrom = Option(rerankFromPath).map(spark.read.parquet).orNull)
-          ()
-        }
-        .start()
-      catch { case e: Throwable =>
-        AtRest.releaseShardLease(spark, path, owner, shard, nShards); throw e
-      }
-    val qid = query.id
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == qid) {
-          AtRest.releaseShardLease(spark, path, owner, shard, nShards)
-          spark.streams.removeListener(this)
-        }
+    AtRest.ingestStream(vecs, Seq(path), checkpointPath, idCol, shard, nShards) {
+      (b, id, owner) =>
+        ivfIngestBatch(b, centroids, path, threshold, nProbe, idCol, vecCol,
+          batchId = id, leaseOwner = owner, shard = shard, nShards = nShards,
+          rerankFrom = Option(rerankFromPath).map(vecs.sparkSession.read.parquet).orNull)
     }
-    spark.streams.addListener(listener)
-    if (!query.isActive) {
-      AtRest.releaseShardLease(spark, path, owner, shard, nShards)
-      spark.streams.removeListener(listener)
-    }
-    query
   }
 
   /**

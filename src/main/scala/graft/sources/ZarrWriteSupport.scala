@@ -843,15 +843,14 @@ case class ZarrChunkStatsMsg(
 
 /** One task's report, from a batch write and a streaming epoch alike: the
  *  chunks it wrote (id → rows now in that chunk, merged tail rows
- *  included), their stats, the row count the table reaches through this
- *  task's chunks, whether the task was the replay of an epoch already
- *  committed (it then wrote nothing), and the trailing dims it saw for k-D
- *  (ArrayType) columns — the driver checks that tasks and the existing
- *  table agree before publishing shape metadata. */
+ *  included), their stats, whether the task was the replay of an epoch
+ *  already committed (it then wrote nothing), and the trailing dims it saw
+ *  for k-D (ArrayType) columns — the commit checks that tasks and the
+ *  existing table agree before publishing shape metadata. The commit
+ *  derives the table's row count from the chunks (the coverage check). */
 case class ZarrTaskCommit(
     chunks: Seq[(Long, Int)],
     stats: Seq[ZarrChunkStatsMsg],
-    totalRows: Long,
     replayed: Boolean,
     dims: Map[String, Seq[Int]] = Map.empty) extends WriterCommitMessage
 
@@ -1161,7 +1160,6 @@ class ZarrDataWriter(layout: ZarrLayout, startRows: Long, replay: Boolean)
   private var count = 0 // rows of the current chunk so far
   private var innerDone = 0 // inner chunks of the current shard written
   private var synthesized = startRows // arrival-order positions
-  private var localTotal = startRows
   private val written = mutable.ArrayBuffer.empty[(Long, Int)]
   private val stats = mutable.ArrayBuffer.empty[ZarrChunkStatsMsg]
   // per open chunk and column
@@ -1371,7 +1369,6 @@ class ZarrDataWriter(layout: ZarrLayout, startRows: Long, replay: Boolean)
       }
       written += ((currentChunk, count))
       stats += ZarrChunkStatsMsg(currentChunk, mins, maxs, nulls, envs)
-      localTotal = math.max(localTotal, currentChunk * chunkRows + count)
     }
     currentChunk = -1
     count = 0
@@ -1401,7 +1398,7 @@ class ZarrDataWriter(layout: ZarrLayout, startRows: Long, replay: Boolean)
       .filter(c => colDims(c) != null)
       .map(c => fields(c).name -> colDims(c).toSeq)
       .toMap
-    ZarrTaskCommit(written.toSeq, stats.toSeq, localTotal, replay, dims)
+    ZarrTaskCommit(written.toSeq, stats.toSeq, replay, dims)
   }
   override def abort(): Unit = releaseStreams()
   override def close(): Unit = releaseStreams()

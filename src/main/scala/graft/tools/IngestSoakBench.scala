@@ -28,7 +28,7 @@ import graft.operators.{AtRest, Dedup, DedupIndex}
  *  - file/marker accretion: one file-set + one `_committed` marker per
  *    batch per path until the mid-run maintenance pass (stream stopped,
  *    [[DedupIndex.compact]]/[[DedupIndex.compactCorpus]] +
- *    [[DedupIndex.compactMarkers]] watermark, RESTARTED on the same
+ *    [[AtRest.compactMarkers]] watermark, RESTARTED on the same
  *    checkpoint — exercising batchId continuity across a restart and the
  *    marker-retention knob end to end);
  *  - the INCREMENTAL RECHECK in the loop: [[DedupIndex.recheckIncremental]]
@@ -195,7 +195,7 @@ object IngestSoakBench {
         // retention: every round <= b is committed and fully processed —
         // watermark at this round's first namespaced id keeps its
         // markers, sweeps the history below
-        DedupIndex.compactMarkers(spark, corpPath,
+        AtRest.compactMarkers(spark, corpPath,
           oldestReplayable = (streamRound - 1).toLong * nShards)
         val tCompact = (System.nanoTime() - t1) / 1e9
         val after = (countFiles(idxPath), countFiles(corpPath))

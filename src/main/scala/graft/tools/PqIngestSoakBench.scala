@@ -32,7 +32,7 @@ import graft.operators.{AtRest, Similarity}
  *    stream replays/restarts;
  *  - mid-stream maintenance on the live table (streams quiesced, same
  *    checkpoints on restart): [[Similarity.ivfCompactAtRest]] +
- *    [[Similarity.ivfCompactMarkers]] watermark, TWO
+ *    [[AtRest.compactMarkers]] watermark, TWO
  *    [[Similarity.ivfRecheckIncremental]] passes (frontier persisted in
  *    the table, zero caller bookkeeping; removals subtract from the
  *    ledger), and an [[Similarity.ivfRetrain]] (sampled training) whose
@@ -171,7 +171,7 @@ object PqIngestSoakBench {
         val markersBefore = countMarkers()
         val t1 = System.nanoTime()
         Similarity.ivfCompactAtRest(spark, path)
-        Similarity.ivfCompactMarkers(spark, path,
+        AtRest.compactMarkers(spark, path,
           oldestReplayable = (streamRound - 1).toLong * nShards)
         println(f"""{"compact_at":$b,"wall":${(System.nanoTime() - t1) / 1e9}%.3f,"files":[$filesPreCompact,${countFiles()}],"markers":[$markersBefore,${countMarkers()}]}""")
         // compaction must not strip codes

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, DedupIndex}
+import graft.operators.{Dedup, DedupIndex, Similarity}
 import graft.queries.Tables
 
 /** The at-rest LSH dedup index: probe results equal the in-memory operator
@@ -399,7 +399,7 @@ class DedupIndexSpec extends SparkSpec {
     // (after its probe snapshot, before its commit) — without the delta
     // re-probe both members would be admitted
     var injected = false
-    DedupIndex.onBeforeCommit = () => if (!injected) {
+    graft.operators.AtRest.onBeforeCommit = () => if (!injected) {
       injected = true
       assert(DedupIndex.ingestBatch(Seq((id1, doc(1))).toDF("doc_id", "text"),
         idx, corp, batchId = 1L, shard = 1, nShards = 2) === 1L)
@@ -408,7 +408,7 @@ class DedupIndexSpec extends SparkSpec {
       val n = DedupIndex.ingestBatch(Seq((id0, doc(0))).toDF("doc_id", "text"),
         idx, corp, batchId = 0L, shard = 0, nShards = 2)
       assert(n === 0L, "the later committer must drop its in-flight near-dup")
-    } finally DedupIndex.onBeforeCommit = () => ()
+    } finally graft.operators.AtRest.onBeforeCommit = () => ()
     assert(DedupIndex.readCorpus(spark, corp).select("doc_id")
       .collect().map(_.getLong(0)).toSet === Set(id1))
     assert(DedupIndex.readIndex(spark, idx).select("id").distinct()
@@ -547,6 +547,22 @@ class DedupIndexSpec extends SparkSpec {
     assert(DedupIndex.recheckIncremental(spark, corp, idx, threshold = 0.5) === 1L)
     assert(DedupIndex.readCorpus(spark, corp).select("doc_id")
       .collect().map(_.getLong(0)).toSet === Set(2L, 11L))
+    // the same bootstrap on a vector table: batch 0 admits a near-dup of
+    // vec 1 that nProbe = 1 misses (it probes the wrong list)
+    val vec = s"$root/vectors"
+    def at(deg: Double): Array[Float] = {
+      val r = math.toRadians(deg)
+      Array(math.cos(r).toFloat, math.sin(r).toFloat)
+    }
+    val cents = Seq(at(0).toSeq, at(20).toSeq)
+    Similarity.ivfWriteAtRest(Seq((1L, at(9)), (2L, at(170))).toDF("vec_id", "embedding"),
+      cents, vec)
+    assert(Similarity.ivfIngestBatch(Seq((100L, at(11))).toDF("vec_id", "embedding"),
+      cents, vec, threshold = 0.95, nProbe = 1, batchId = 0L) === 1L)
+    assert(Similarity.ivfRecheckSince(spark, vec, 5L, 0L, threshold = 0.95) === 0L)
+    assert(Similarity.ivfRecheckIncremental(spark, vec, threshold = 0.95) === 1L)
+    assert(Similarity.ivfRead(spark, vec).select("vec_id")
+      .collect().map(_.getLong(0)).toSet === Set(1L, 2L))
   }
 
   test("a no-hit batch short-circuits on the bloom sidecar without reading the index") {
@@ -858,6 +874,23 @@ class DedupIndexSpec extends SparkSpec {
     val c2 = card()
     assert(c2.view.mapValues(_.take(4)).toMap === recompute())
     assert(c2.values.map(_(6)).sum === removed)
+    // an ad-hoc (batchId < 0) ingest has no replay identity: it is refused
+    // BEFORE any write — corpus, index files and card stay as they were
+    def indexFiles(): Set[String] = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(
+        graft.operators.AtRest.resolve(spark, idx)), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString).toSet
+    }
+    val rowsBefore = DedupIndex.readCorpus(spark, corp).count()
+    val filesBefore = indexFiles()
+    val novel = d.limit(1).select((col("doc_id") + 9000000L).as("doc_id"), col("source"),
+      lit((0 until 16).map(i => s"adhoc$i").mkString(" ")).as("text"))
+    intercept[IllegalArgumentException] {
+      DedupIndex.ingestBatch(novel, idx, corp)
+    }
+    assert(DedupIndex.readCorpus(spark, corp).count() === rowsBefore)
+    assert(indexFiles() === filesBefore)
+    assert(card() === c2)
   }
 
   test("ledgerCard plans only _ledger delta scans — never a corpus data scan") {
@@ -901,7 +934,7 @@ class DedupIndexSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def marker(b: Long) = new org.apache.hadoop.fs.Path(corpPath, s"_committed/batch-$b")
     assert((0L to 2L).forall(b => fs.exists(marker(b))))
-    DedupIndex.compactMarkers(spark, corpPath, oldestReplayable = 2L)
+    graft.operators.AtRest.compactMarkers(spark, corpPath, oldestReplayable = 2L)
     assert(!fs.exists(marker(0)) && !fs.exists(marker(1)) && fs.exists(marker(2)))
     // a replay AT the watermark still short-circuits on its marker
     assert(DedupIndex.ingestBatch(Seq(mk(20), mk(21)).toDF("doc_id", "text"),
@@ -916,9 +949,32 @@ class DedupIndexSpec extends SparkSpec {
     assert(DedupIndex.ingestBatch(Seq(mk(30), mk(31)).toDF("doc_id", "text"),
       idxPath, corpPath, batchId = 3L) === 2L)
     val e2 = intercept[IllegalArgumentException] {
-      DedupIndex.compactMarkers(spark, corpPath, oldestReplayable = 1L)
+      graft.operators.AtRest.compactMarkers(spark, corpPath, oldestReplayable = 1L)
     }
     assert(e2.getMessage.contains("monotonic"))
+    // the same markers on a vector table: one basis vector per id, so no
+    // two rows are near-duplicates
+    val vecPath = s"$root/vectors"
+    def vecs(ids: Long*) = ids.map(i => (i, Array.tabulate(12)(k =>
+      if (k == i % 12) 1f else 0f))).toDF("vec_id", "embedding")
+    val cents = Seq(0L, 1L).map(i => Seq.tabulate(12)(k => if (k == i) 1f else 0f))
+    Similarity.ivfWriteAtRest(vecs(4L), cents, vecPath)
+    for (b <- 0L to 2L)
+      Similarity.ivfIngestBatch(vecs(b * 10, b * 10 + 1), cents, vecPath, batchId = b)
+    def vecMarker(b: Long) = new org.apache.hadoop.fs.Path(vecPath, s"_committed/batch-$b")
+    assert((0L to 2L).forall(b => fs.exists(vecMarker(b))))
+    graft.operators.AtRest.compactMarkers(spark, vecPath, oldestReplayable = 2L)
+    assert(!fs.exists(vecMarker(0)) && !fs.exists(vecMarker(1)) && fs.exists(vecMarker(2)))
+    assert(Similarity.ivfIngestBatch(vecs(20, 21), cents, vecPath, batchId = 2L) === 2L)
+    val ev = intercept[IllegalStateException] {
+      Similarity.ivfIngestBatch(vecs(0, 1), cents, vecPath, batchId = 0L)
+    }
+    assert(ev.getMessage.contains("watermark"))
+    assert(Similarity.ivfIngestBatch(vecs(30, 31), cents, vecPath, batchId = 3L) === 2L)
+    val ev2 = intercept[IllegalArgumentException] {
+      graft.operators.AtRest.compactMarkers(spark, vecPath, oldestReplayable = 1L)
+    }
+    assert(ev2.getMessage.contains("monotonic"))
   }
 
   test("sharded ingest: two concurrent disjoint-shard streams equal the single writer; conflicts loud") {

@@ -620,7 +620,7 @@ class SketchSpec extends SparkSpec {
       .select(lit(id).as("vec_id"),
         transform(col("embedding"), x => x * lit(scale)).as("embedding"))
     var injected = false
-    Similarity.onBeforeCommitIvf = () => if (!injected) {
+    graft.operators.AtRest.onBeforeCommit = () => if (!injected) {
       injected = true
       // shard 1's near-dup batch commits INSIDE shard 0's in-flight
       // window (after its probe snapshot, before its commit)
@@ -631,7 +631,7 @@ class SketchSpec extends SparkSpec {
       val n = Similarity.ivfIngestBatch(vecOf(id0, 1.0f), cb, dir,
         threshold = 0.95, nProbe = 8, batchId = 0L, shard = 0, nShards = 2)
       assert(n === 0L, "the later committer must drop its in-flight near-dup")
-    } finally Similarity.onBeforeCommitIvf = () => ()
+    } finally graft.operators.AtRest.onBeforeCommit = () => ()
     val fresh = Similarity.ivfRead(spark, dir).filter(col("vec_id") >= 9000000L)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(fresh === Set(id1))

@@ -143,7 +143,7 @@ class ZarrStreamSinkSpec extends SparkSpec {
     val write = new graft.sources.ZarrStreamingWrite(dir, "t", schema, schema, 4,
       graft.zarr.HadoopConfBroadcast(spark))
     write.commit(0L, Array(
-      graft.sources.ZarrTaskCommit(Seq.empty, Seq.empty, 9L, replayed = true)))
+      graft.sources.ZarrTaskCommit(Seq.empty, Seq.empty, replayed = true)))
     val healed = spark.read.format("zarr").option("group", "/t").load(dir)
       .orderBy("id").collect()
     assert(healed.map(_.getLong(healed.head.fieldIndex("id"))).toSeq == (0L until 9L))
@@ -181,7 +181,7 @@ class ZarrStreamSinkSpec extends SparkSpec {
     val write = new graft.sources.ZarrStreamingWrite(dir, "t", schema, schema, 4,
       graft.zarr.HadoopConfBroadcast(spark))
     write.commit(0L, Array(
-      graft.sources.ZarrTaskCommit(Seq.empty, Seq.empty, 3L, replayed = true)))
+      graft.sources.ZarrTaskCommit(Seq.empty, Seq.empty, replayed = true)))
     val healed = spark.read.format("zarr").option("group", "/t").load(dir)
       .collect().sortBy(_.getLong(0))
     assert(healed.length == 3)
